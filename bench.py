@@ -26,7 +26,7 @@ import sys
 import time
 
 from data_engineering_bootcamp_spark.plans.catalog import QUERIES
-from data_engineering_bootcamp_spark.session import get_spark
+from data_engineering_bootcamp_spark.session import get_spark, graft_cpus
 
 HEADLINE = [
     "pricing_summary",
@@ -211,7 +211,7 @@ def _cpu_marker_mc_mean(samples: int = 2) -> float:
     import hashlib
     from concurrent.futures import ThreadPoolExecutor
 
-    n = max(1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+    n = max(1, graft_cpus())
     block = b"\x00" * (1 << 20)
 
     def work(_i: int) -> int:
@@ -379,8 +379,8 @@ def main() -> None:
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 break
             finally:
-                # dedup operators persist signature blocks for their own
-                # multi-join plans; release them so the session stays flat
+                # release every cached and checkpointed block the query
+                # left behind so the session stays flat
                 try:
                     release_caches()
                 except Exception:
@@ -486,9 +486,7 @@ def main() -> None:
         # the box as impossibly fast. A baseline file without the
         # thread count predates this guard and is assumed 32.
         _base_mc_threads = int(_doc.get("cpu_marker_mc_threads") or 32)
-        _cur_mc_threads = max(
-            1, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        )
+        _cur_mc_threads = max(1, graft_cpus())
         if _base_marker_mc and _cur_mc_threads == _base_mc_threads:
             host_factor_mc = round(cpu_marker_mc / _base_marker_mc, 3)
     except Exception:
@@ -597,7 +595,7 @@ def main() -> None:
         # run (lower $SPARK_GRAFT_CPUS) OVERWRITES BENCH_full.json, so
         # the 32-core full artifact was lost every round; the suffixed
         # copy preserves each core count's full per-rep record
-        cpus_n = os.environ.get("SPARK_GRAFT_CPUS", "32")
+        cpus_n = graft_cpus()
         with open(full_path.replace(".json", f"_c{cpus_n}.json"),
                   "w") as fh:
             json.dump(out, fh, indent=1, sort_keys=True)

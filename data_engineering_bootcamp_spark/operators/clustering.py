@@ -118,11 +118,7 @@ def _cc_minlabel(edges: DataFrame, max_iter: int) -> DataFrame:
         .repartition("b")
         .persist()
     )
-    try:
-        sym.count()
-    except Exception:
-        sym.unpersist()
-        raise
+    sym.count()
     # Lineage discipline (the textbook iterative-Spark requirement):
     # every iteration's labels are eagerly localCheckpoint'ed, which
     # materializes them AND truncates lineage — otherwise plan depth

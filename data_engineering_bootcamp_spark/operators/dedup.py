@@ -28,7 +28,8 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame, Window
+from py4j.java_gateway import get_method
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .partitioning import fan_out
@@ -37,30 +38,29 @@ from .partitioning import fan_out
 # (x % P) * a + b stays inside a signed 64-bit long (no overflow).
 _P = (1 << 31) - 1
 
-# Intermediates persisted by the near-dup operators (signature/shingle
-# blocks feed multiple join sides, so they must be cached for the
-# lifetime of the returned DataFrame). Callers own that lifetime: call
-# `release_caches()` once the results are materialized, or a long-lived
-# session running the catalog repeatedly accumulates storage until
-# eviction pressure degrades other queries.
-_CACHED: list[DataFrame] = []
-
-
-def _persist(df: DataFrame) -> DataFrame:
-    df = df.persist()
-    _CACHED.append(df)
-    return df
-
 
 def release_caches() -> int:
-    """Unpersist every DataFrame cached by the dedup operators; returns
-    how many were released. Safe to call at any time AFTER the returned
-    pair DataFrames have been materialized (collected/written)."""
-    n = 0
-    while _CACHED:
-        _CACHED.pop().unpersist()
-        n += 1
-    return n
+    """Clear every cached Dataset and persisted RDD in the active session.
+
+    Empties Spark's Dataset cache (``catalog.clearCache()``), then
+    unpersists each RDD the SparkContext still lists as persistent:
+    ``localCheckpoint`` blocks and any other RDD-level persist, and
+    returns how many such RDDs it unpersisted. Queries persist their
+    intermediates with plain ``.persist()`` and never call this; only
+    harnesses (bench, gate, tests) call it, between queries, after the
+    previous query's result has been materialized. A query that raises
+    leaves its blocks to the same sweep.
+    """
+    spark = SparkSession.getActiveSession()
+    if spark is None:
+        return 0
+    spark.catalog.clearCache()
+    # the Java values() array, not Py4J's map iterator (~15 ms per call)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs()
+    rdds = get_method(persistent, "values")().toArray()
+    for rdd in rdds:
+        rdd.unpersist(False)
+    return len(rdds)
 
 
 def dedup_exact(df: DataFrame, cols: list[str] | None = None) -> DataFrame:
@@ -355,7 +355,7 @@ def dedup_minhash_lsh(
     # spilling to executor disk beyond memory — far cheaper than the
     # triple recompute, and it halves the wall clock here.
     if cache_signatures:
-        base = _persist(base)
+        base = base.persist()
 
     # Candidate generation carries ONLY (doc_id, band, band_hash): when
     # background similarity makes bands collide broadly, the pair set is
@@ -597,7 +597,7 @@ def dedup_simhash(
     )
     # (doc_id, sh) is 16 B/row; persisting halves the pipeline cost
     # because both sides of the chunk self-join consume it
-    base = _persist(base)
+    base = base.persist()
     # fingerprints are single longs, so unlike the MinHash path the
     # pair join can carry them inline — rows stay 32 B wide
     chunked = base.select(
@@ -685,17 +685,17 @@ def decontaminate(
     # materialization barrier Catalyst collapses the projections and
     # the gram-building transform (the per-doc hot loop) re-evaluates
     # per EXPLODED row — measured ~10x slower on the corpus side.
-    # Small: one row per doc with an array of longs. Caller releases
-    # via release_caches() like the other dedup operators.
+    # Small: one row per doc with an array of longs.
     pool = (
-        _persist(gram_sets(benchmark))
+        gram_sets(benchmark)
+        .persist()
         .select(F.explode("grams").alias("gram"))
         .distinct()
     )
     if broadcast_pool:
         pool = F.broadcast(pool)
-    corpus_grams = _persist(
-        gram_sets(corpus).withColumn("n_grams", F.size("grams"))
+    corpus_grams = (
+        gram_sets(corpus).withColumn("n_grams", F.size("grams")).persist()
     )
     exploded = corpus_grams.select(
         "doc_id", "n_grams", F.explode("grams").alias("gram")
@@ -798,7 +798,7 @@ def _ngram_jaccard_prefix(
         "doc_id",
         F.array_distinct(_ngrams_of_toks(F.col("_toks"), ngram)).alias("grams"),
     ).withColumn("s", F.size("grams"))
-    base = _persist(base)  # feeds frequency pass, prefixes, and verify
+    base = base.persist()  # feeds frequency pass, prefixes, and verify
 
     exploded = base.select("doc_id", "s", F.explode("grams").alias("gram"))
     # df per gram via a partition-only window: numerically identical to
@@ -809,22 +809,19 @@ def _ngram_jaccard_prefix(
     w = Window.partitionBy("doc_id").orderBy("df", "gram")
     # ceil(s * num / den) in exact long arithmetic
     ceil_ts = F.expr(f"(s * {num}L + {den - 1}L) div {den}L")
-    prefix = _persist(
+    prefix = (
         exploded.withColumn("df", F.count(F.lit(1)).over(wg))
         .withColumn("p", F.row_number().over(w))
         .where(F.col("p") <= F.col("s") - ceil_ts + 1)
         .select("doc_id", "s", "gram", "p")
+        .persist()
     )
     # both sides of the candidate self-join consume `prefix`; without
     # the persist the two-window chain above is planned (and run) once
     # PER SIDE, and with it the materialization must be EAGER or the
     # two stages of one join job race to populate the cache and each
     # recompute the chain anyway (the r16 pagerank cache-race finding)
-    try:
-        prefix.count()
-    except Exception:
-        prefix.unpersist()
-        raise
+    prefix.count()
     # overlap lower bound: J >= t  <=>  inter >= t/(1+t) * (s_a + s_b)
     alpha = F.expr(
         f"((a.s + b.s) * {num}L + {num + den - 1}L) div {num + den}L"
@@ -953,7 +950,7 @@ def dedup_ngram_jaccard(
             / F.lit(math.log(1.0 / threshold))
         )
         base = base.withColumn("block", F.explode(F.array(k, k + 1)))
-    base = _persist(base)  # consumed by both sides of the pair join
+    base = base.persist()  # consumed by both sides of the pair join
     a, b = base.alias("a"), base.alias("b")
     if length_blocked or block_col:
         cand = a.join(

@@ -145,13 +145,10 @@ def winnow_pairs(
     >= min_shared (a single shared 32-char run is common in natural
     text; several distinct shared runs is the near-dup signal).
 
-    The fingerprint base is computed ONCE and persisted through the
-    dedup cache registry (both join sides read it); callers release via
-    ``operators.dedup.release_caches()``.
+    The fingerprint base is computed ONCE and persisted (both join
+    sides read it).
     """
-    from .dedup import _persist
-
-    fps = _persist(winnow_fingerprint_set(docs, text_col, id_col, k, w))
+    fps = winnow_fingerprint_set(docs, text_col, id_col, k, w).persist()
     left = fps.withColumnRenamed(id_col, "doc_id_a")
     right = fps.withColumnRenamed(id_col, "doc_id_b")
     return (

@@ -286,14 +286,7 @@ def pagerank(
     every = int(checkpoint_every)
     if every >= 0:
         adj = sym.join(deg, "s").repartition("s").persist()
-        # ADVICE r16: the eager materialization must not leave the
-        # adjacency registered in the cache if it fails (e.g. the
-        # assume_canonical raise_error guard fires mid-count)
-        try:
-            adj.count()
-        except Exception:
-            adj.unpersist()
-            raise
+        adj.count()
     else:
         adj = sym.join(deg, "s").persist()
     ranks = deg.select(

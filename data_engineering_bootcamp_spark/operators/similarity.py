@@ -33,6 +33,17 @@ from pyspark.sql import functions as F
 from .partitioning import fan_out
 
 
+def _ann_src(corpus: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """The ANN operators' source relation: (vid, v array<double>),
+    fanned out to the cluster's parallelism."""
+    return fan_out(
+        corpus.select(
+            F.col(id_col).alias("vid"),
+            F.col(vec_col).cast("array<double>").alias("v"),
+        )
+    )
+
+
 def _dot(a: Column, b: Column, dim: int | None = None) -> Column:
     """Dot product. With `dim` known the sum is unrolled into a plain
     arithmetic expression — Spark's higher-order functions (aggregate/
@@ -840,12 +851,7 @@ def ivf_centroids(
     sample covers the entire corpus, so results are identical to
     full-corpus Lloyd and the exhaustive SQL oracle remains exact.
     """
-    src = _src if _src is not None else fan_out(
-        corpus.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-    )
+    src = _src if _src is not None else _ann_src(corpus, id_col, vec_col)
     if train_scope == "full":
         return _full_coarse_lloyd(src, n_centroids, lloyd_iters)
     if train_scope != "sample":
@@ -909,19 +915,10 @@ def cosine_topk_ivf(
     # one projected+fanned corpus, cached across the three passes that
     # need it (seed sort, Lloyd assignment, final assignment) — without
     # this the corpus is scanned once per pass, which at 100 TB is two
-    # extra full reads (the caller releases via dedup.release_caches)
-    from .dedup import _persist
-
+    # extra full reads
     _require_integral_ids(corpus, id_col, "cosine_topk_ivf")
     _require_integral_ids(queries, id_col, "cosine_topk_ivf")
-    src = _persist(
-        fan_out(
-            corpus.select(
-                F.col(id_col).alias("vid"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-    )
+    src = _ann_src(corpus, id_col, vec_col).persist()
     C = ivf_centroids(
         corpus, n_centroids, lloyd_iters, id_col=id_col, vec_col=vec_col,
         _src=src, train_scope=train_scope,
@@ -1024,17 +1021,8 @@ def semantic_dedup(
     vector; `keep` selects the deduplicated corpus. Requires an
     integral id (the Arrow schema types it long; validated up front).
     """
-    from .dedup import _persist
-
     _require_integral_ids(corpus, id_col, "semantic_dedup")
-    src = _persist(
-        fan_out(
-            corpus.select(
-                F.col(id_col).alias("vid"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-    )
+    src = _ann_src(corpus, id_col, vec_col).persist()
     C = ivf_centroids(
         corpus, n_centroids, lloyd_iters, id_col=id_col, vec_col=vec_col,
         _src=src,
@@ -1470,12 +1458,7 @@ def pq_codebooks(
     partial-sums Arrow pass + one groupBy per iteration), keeping
     whole-corpus oracle parity at any size.
     """
-    src = _src if _src is not None else fan_out(
-        corpus.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-    )
+    src = _src if _src is not None else _ann_src(corpus, id_col, vec_col)
     if train_scope == "full":
         return _full_subspace_lloyd(src, m, n_codes, lloyd_iters)
     if train_scope != "sample":
@@ -1557,18 +1540,9 @@ def cosine_topk_pq(
     final = exact cosine ROUND 6 over the candidates, top-k by
     (cosine DESC, id ASC). The DuckDB oracle replays every stage.
     """
-    from .dedup import _persist
-
     _require_integral_ids(corpus, id_col, "cosine_topk_pq")
     _require_integral_ids(queries, id_col, "cosine_topk_pq")
-    src = _persist(
-        fan_out(
-            corpus.select(
-                F.col(id_col).alias("vid"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-    )
+    src = _ann_src(corpus, id_col, vec_col).persist()
     books = pq_codebooks(
         corpus, m=m, n_codes=n_codes, lloyd_iters=lloyd_iters,
         id_col=id_col, vec_col=vec_col, _src=src, train_scope=train_scope,
@@ -1810,18 +1784,9 @@ def cosine_topk_ivfpq(
        query vectors by query_id; cosine ROUND 6; top-k by
        (cosine DESC, id ASC).
     """
-    from .dedup import _persist
-
     _require_integral_ids(corpus, id_col, "cosine_topk_ivfpq")
     _require_integral_ids(queries, id_col, "cosine_topk_ivfpq")
-    src = _persist(
-        fan_out(
-            corpus.select(
-                F.col(id_col).alias("vid"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            )
-        )
-    )
+    src = _ann_src(corpus, id_col, vec_col).persist()
     if train_scope == "full":
         # DISTRIBUTED full-corpus training (VERDICT r14 #1): the
         # coarse Lloyd and the residual PQ Lloyd each run over the

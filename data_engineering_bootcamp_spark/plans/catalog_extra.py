@@ -438,7 +438,7 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count,
     )
     from ..operators.clustering import connected_components
-    from ..operators.dedup import _persist, dedup_keep_first, dedup_ngram_jaccard
+    from ..operators.dedup import dedup_keep_first, dedup_ngram_jaccard
     from ..operators.sampling import _threshold_hex, sample_bucket
 
     docs = _t(spark, sf_dir, "documents")
@@ -456,14 +456,15 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are large (Catalyst inlines token splits per marker reference) and
     # `kept` feeds three consumers (both pair-join sides via the ngram
     # operator's own cache, plus the anti-join left side) — without the
-    # barrier the whole tree re-evaluates per consumer. Released by
-    # release_caches() like every dedup-family cache.
-    kept = _persist(
+    # barrier the whole tree re-evaluates per consumer.
+    kept = (
         dedup_keep_first(
             filt.withColumn("fp", doc_fingerprint(F.col("text"))),
             keys=["fp"],
             order_by=[F.col("doc_id")],
-        ).drop("fp")
+        )
+        .drop("fp")
+        .persist()
     )
     pairs = dedup_ngram_jaccard(
         kept, block_col=None, ngram=3, threshold=0.5, prefix_filtered=True
@@ -612,11 +613,7 @@ def q_corpus_curation_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
         token_count,
     )
     from ..operators.clustering import connected_components
-    from ..operators.dedup import (
-        _persist,
-        dedup_keep_first,
-        dedup_ngram_jaccard,
-    )
+    from ..operators.dedup import dedup_keep_first, dedup_ngram_jaccard
     from ..operators.sampling import _threshold_hex, sample_bucket
     from .catalog_rank import q_doc_quality_classifier
 
@@ -637,12 +634,14 @@ def q_corpus_curation_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("lang_pred") == "en")
         .drop("lang_pred")
     )
-    kept = _persist(
+    kept = (
         dedup_keep_first(
             filt.withColumn("fp", doc_fingerprint(F.col("text"))),
             keys=["fp"],
             order_by=[F.col("doc_id")],
-        ).drop("fp")
+        )
+        .drop("fp")
+        .persist()
     )
     pairs = dedup_ngram_jaccard(
         kept, block_col=None, ngram=3, threshold=0.5, prefix_filtered=True

@@ -517,18 +517,12 @@ def q_streaming_embedding_admission(
 
     import numpy as np
 
-    from ..operators.dedup import _persist, release_caches  # noqa: F401
-    from ..operators.partitioning import fan_out
+    from ..operators.similarity import _ann_src
 
     emb = _t(spark, sf_dir, "embeddings")
-    static_src = _persist(
-        fan_out(
-            emb.where(F.col("vec_id") % 4 != 0).select(
-                F.col("vec_id").alias("vid"),
-                F.col("embedding").cast("array<double>").alias("v"),
-            )
-        )
-    )
+    static_src = _ann_src(
+        emb.where(F.col("vec_id") % 4 != 0), "vec_id", "embedding"
+    ).persist()
 
     src = tempfile.mkdtemp(prefix="stream_emb_src_")
     out = tempfile.mkdtemp(prefix="stream_emb_out_")
@@ -603,7 +597,7 @@ def q_streaming_embedding_admission(
         )
         return _snapshot(got)
     finally:
-        release_caches()
+        static_src.unpersist()
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(out, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)
@@ -1322,8 +1316,6 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     set); larger seed corpora would drop to per-mille scaling or
     DECIMAL. A pure-Python replay test pins the arithmetic end to end
     (tests/test_rank.py)."""
-    from ..operators.dedup import _persist
-
     docs = _t(spark, sf_dir, "documents")
     # r17 (guide §2.4 + §5). Two structural changes, results identical:
     #
@@ -1343,7 +1335,6 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    tokenize it saved) and materialize EAGERLY so the model's
     #    broadcast-build job and the scoring job never race to
     #    populate the cache (the r16 pagerank cache-race finding).
-    #    Registry-released like every dedup-family cache.
     tok = F.explode(
         F.filter(
             F.split(
@@ -1369,22 +1360,16 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
             < NBQ_SPLIT_HEX
         ).alias("seed"),
     )
-    toks = _persist(
-        pre.select("doc_id", "pos", "seed", tok).select(
-            "doc_id",
-            "pos",
-            "seed",
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10)
-                .cast("long") % NBQ_BUCKETS
-            ).alias("h"),
-        )
-    )
-    try:
-        toks.count()
-    except Exception:
-        toks.unpersist()
-        raise
+    toks = pre.select("doc_id", "pos", "seed", tok).select(
+        "doc_id",
+        "pos",
+        "seed",
+        (
+            F.conv(F.substring(F.md5("term"), 1, 8), 16, 10)
+            .cast("long") % NBQ_BUCKETS
+        ).alias("h"),
+    ).persist()
+    toks.count()
     seed_counts = (
         toks.where(F.col("seed"))
         .groupBy("h")
@@ -1879,8 +1864,6 @@ def q_doc_lang_id_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     Driver contract: ONE bounded collect — the distinct train-half
     class set, capped at {NBL_MAX_LANGS} (limit cap+1, raise on
     overflow); the model itself never leaves the executors."""
-    from ..operators.dedup import _persist
-
     docs = _t(spark, sf_dir, "documents")
     # r17 (guide §2.4 + §5, the doc_quality_classifier treatment): the
     # seed label (`lang`) and seed membership (md5 half-split of
@@ -1912,22 +1895,16 @@ def q_doc_lang_id_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
             < NBL_SPLIT_HEX
         ).alias("seed"),
     )
-    toks = _persist(
-        pre.select("doc_id", "lang", "seed", tok).select(
-            "doc_id",
-            "lang",
-            "seed",
-            (
-                F.conv(F.substring(F.md5("term"), 1, 8), 16, 10)
-                .cast("long") % NBL_BUCKETS
-            ).alias("h"),
-        )
-    )
-    try:
-        toks.count()
-    except Exception:
-        toks.unpersist()
-        raise
+    toks = pre.select("doc_id", "lang", "seed", tok).select(
+        "doc_id",
+        "lang",
+        "seed",
+        (
+            F.conv(F.substring(F.md5("term"), 1, 8), 16, 10)
+            .cast("long") % NBL_BUCKETS
+        ).alias("h"),
+    ).persist()
+    toks.count()
     seed = docs.select("doc_id", "lang").where(
         F.substring(
             F.md5(F.concat(F.lit("nbl_"), F.col("doc_id").cast("string"))),
@@ -2199,9 +2176,8 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     import numpy as np
 
-    from ..operators.dedup import _persist, release_caches
-    from ..operators.partitioning import fan_out
     from ..operators.similarity import (
+        _ann_src,
         _full_coarse_lloyd,
         _full_subspace_lloyd,
         _round6_arr,
@@ -2210,14 +2186,9 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..streaming.sinks import _publish_version, start_foreach_batch
 
     emb = _t(spark, sf_dir, "embeddings")
-    base_src = _persist(
-        fan_out(
-            emb.where(F.col("vec_id") % 4 != 0).select(
-                F.col("vec_id").alias("vid"),
-                F.col("embedding").cast("array<double>").alias("v"),
-            )
-        )
-    )
+    base_src = _ann_src(
+        emb.where(F.col("vec_id") % 4 != 0), "vec_id", "embedding"
+    ).persist()
     C = _full_coarse_lloyd(base_src, SIX_NC, 1)
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
     rc = _round6_arr(Cn)
@@ -2268,7 +2239,7 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return _snapshot(got)
     finally:
-        release_caches()
+        base_src.unpersist()
         shutil.rmtree(src, ignore_errors=True)
         shutil.rmtree(store, ignore_errors=True)
         shutil.rmtree(ckpt, ignore_errors=True)

@@ -16,10 +16,25 @@ threshold.
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+
+def graft_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` as an int, 32 when unset. A value that is
+    not an integer is reported on stderr and read as 32, so a typo
+    cannot stop an import."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        return int(raw)
+    except ValueError:
+        print(f"warning: SPARK_GRAFT_CPUS={raw!r} is not an integer; using 32",
+              file=sys.stderr)
+        return 32
+
+
+DEFAULT_SHUFFLE_PARTITIONS = graft_cpus()
 
 
 def get_spark(
@@ -36,10 +51,9 @@ def get_spark(
     on null-on-out-of-bounds array access semantics (Spark `get`,
     M3/src/jobs/monthly_user_site_hits_job.py:11-13).
     """
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master or f"local[{cpus}]")
+        .master(master or f"local[{graft_cpus()}]")
         .config(
             "spark.sql.shuffle.partitions",
             str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),

@@ -691,13 +691,10 @@ def test_streaming_ivfpq_index_split_independence(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from data_engineering_bootcamp_spark.operators.dedup import (
-        _persist,
         release_caches,
     )
-    from data_engineering_bootcamp_spark.operators.partitioning import (
-        fan_out,
-    )
     from data_engineering_bootcamp_spark.operators.similarity import (
+        _ann_src,
         _full_coarse_lloyd,
         _full_subspace_lloyd,
         _round6_arr,
@@ -716,14 +713,9 @@ def test_streaming_ivfpq_index_split_independence(spark, sf_dir):
     }
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    base_src = _persist(
-        fan_out(
-            emb.where(F.col("vec_id") % 4 != 0).select(
-                F.col("vec_id").alias("vid"),
-                F.col("embedding").cast("array<double>").alias("v"),
-            )
-        )
-    )
+    base_src = _ann_src(
+        emb.where(F.col("vec_id") % 4 != 0), "vec_id", "embedding"
+    ).persist()
     C = _full_coarse_lloyd(base_src, SIX_NC, 1)
     Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
     rc = _round6_arr(Cn)

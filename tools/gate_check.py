@@ -72,6 +72,8 @@ sys.path.insert(0, ".")
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from data_engineering_bootcamp_spark.operators.dedup import release_caches  # noqa: E402
+from data_engineering_bootcamp_spark.session import graft_cpus  # noqa: E402
 from tests.oracle_harness import compare, duck_con  # noqa: E402
 
 TIMES_PATH = os.path.join(os.path.dirname(__file__), "..",
@@ -389,14 +391,16 @@ def main() -> int:
             + ("" if ok else f"  {problems[0][:200]}"),
             flush=True,
         )
-        # untimed-gap collection (r16, same as bench.py): py4j frees
-        # JVM handles lazily, so entry N's checkpoint blocks/shuffle
-        # garbage otherwise lands in entry N+1's timed window — the
-        # cross-entry contamination behind sporadic 2-5x one-off SLOW
-        # flags on iterative entries deep into a 151-entry run
+        # untimed-gap cleanup (r16, same as bench.py): entry N's cached
+        # and checkpointed blocks are released here, and py4j frees JVM
+        # handles lazily, so without the collections entry N's shuffle
+        # garbage lands in entry N+1's timed window — the cross-entry
+        # contamination behind sporadic 2-5x one-off SLOW flags on
+        # iterative entries deep into a 151-entry run
         try:
             import gc as _gc
 
+            release_caches()
             _gc.collect()
             spark.sparkContext._jvm.System.gc()
         except Exception:  # noqa: BLE001 — hygiene must never fail the gate
@@ -438,9 +442,11 @@ def main() -> int:
                 with open(TIMES_PATH) as fh:
                     _old = json.load(fh)
                 if _old.get("sf_dir") == sf_dir:
+                    # entries no longer in the catalog drop out here
                     runs = {
                         k: [float(x) for x in v][-5:]
                         for k, v in (_old.get("times_runs") or {}).items()
+                        if k in queries
                     }
             except Exception:  # noqa: BLE001 — missing/legacy file: fresh start
                 runs = {}
@@ -461,9 +467,7 @@ def main() -> int:
                     # the mc marker runs one stream per
                     # $SPARK_GRAFT_CPUS; bench.py only applies
                     # host_factor_mc when its thread count matches
-                    "cpu_marker_mc_threads": max(
-                        1, int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-                    ),
+                    "cpu_marker_mc_threads": max(1, graft_cpus()),
                     "times": {
                         k: round(_st.median(v), 2)
                         for k, v in runs.items()
