@@ -109,13 +109,6 @@ def _shingles_of_norm(norm: Column, k: int = 5) -> Column:
     return F.array_distinct(F.transform(subs, lambda s: F.xxhash64(s)))
 
 
-def char_shingles(text: Column, k: int = 5) -> Column:
-    """Distinct k-char shingle hashes of raw text (convenience form —
-    inlines normalization per element; prefer projecting `_norm_text`
-    to a column and calling `_shingles_of_norm` in hot paths)."""
-    return _shingles_of_norm(_norm_text(text), k)
-
-
 def _shingle_hash_udf(k: int = 5):
     """Arrow-batched distinct k-CHAR shingle hashes of already-
     normalized text: one vectorized rolling polynomial hash over the
@@ -474,12 +467,6 @@ def _ngrams_of_toks(toks: Column, ngram: int = 2, hasher=F.xxhash64) -> Column:
             lambda i: hasher(F.concat_ws(" ", F.slice(toks, i, ngram))),
         ),
     ).otherwise(F.array(hasher(F.concat_ws(" ", toks))))
-
-
-def word_ngrams(text: Column, ngram: int = 2) -> Column:
-    """xxhash64'd word n-grams of raw text (convenience form; hot paths
-    project `_tokens` to a column and call `_ngrams_of_toks`)."""
-    return _ngrams_of_toks(_tokens(text), ngram)
 
 
 def simhash_counters(grams: Column) -> Column:

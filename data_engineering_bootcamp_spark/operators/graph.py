@@ -356,100 +356,3 @@ def build_edges_pairs(
         F.col("id_b").cast("string").alias("object_identifier"),
         F.create_map(*kv).alias("properties"),
     )
-
-
-def triangle_count(
-    edges: DataFrame,
-    src_col: str = "id_a",
-    dst_col: str = "id_b",
-) -> DataFrame:
-    """Exact per-node triangle counts via degree-ordered edge
-    orientation — the standard O(m^1.5)-wedge bound that keeps
-    triangle enumeration feasible on power-law graphs, where naive
-    id-ordered enumeration explodes on the first high-degree hub.
-
-    Input: an undirected edge list in any orientation, duplicates and
-    self-loops tolerated (canonicalized to distinct `u < v` pairs,
-    loops dropped, null endpoints dropped). Output: one row per node —
-    (node, degree, n_triangles), n_triangles = 0 for triangle-free
-    nodes, so SUM(n_triangles) = 3 * |triangles| and the local
-    clustering coefficient is n_triangles / (degree*(degree-1)/2).
-
-    Algorithm: impose the total order key(n) = (degree(n), n) and
-    orient every edge from the smaller key to the larger. Every
-    triangle {x, y, z} with key(x) < key(y) < key(z) then appears
-    exactly once as the wedge (x->y, x->z) closed by the oriented edge
-    (y->z) — no post-hoc dedup, no double counting. Because the wedge
-    pivot is always the triangle's LOWEST-degree corner, each node
-    generates at most outdeg^2 <= O(sqrt(m))^2 wedge rows, so the
-    wedge relation is O(m^1.5) in the worst case and far smaller on
-    real graphs — a hub of degree d contributes d wedges as a spoke
-    endpoint, never d^2 as a pivot.
-
-    Shuffle budget: degree is one exchange on node id; the two degree
-    decorations and the wedge build are equi joins on node id; the
-    closing join is an equi join on the (y, z) pair; the corner count
-    is one final exchange. Nothing is collected, nothing iterates —
-    this is a fixed 5-shuffle DAG whatever the graph size, and every
-    join is hash-partitioned (the key-order residuals ride on equi
-    keys, so Catalyst never plans a BNLJ).
-    """
-    und = (
-        edges.select(
-            F.least(src_col, dst_col).alias("u"),
-            F.greatest(src_col, dst_col).alias("v"),
-        )
-        .where(
-            F.col("u").isNotNull()
-            & F.col("v").isNotNull()
-            & (F.col("u") != F.col("v"))
-        )
-        .distinct()
-    )
-    deg = (
-        und.select(F.explode(F.array("u", "v")).alias("n"))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    e = und.join(
-        deg.select(F.col("n").alias("u"), F.col("d").alias("du")), "u"
-    ).join(deg.select(F.col("n").alias("v"), F.col("d").alias("dv")), "v")
-    ku = F.struct(F.col("du").alias("d"), F.col("u").alias("n"))
-    kv = F.struct(F.col("dv").alias("d"), F.col("v").alias("n"))
-    lo = ku < kv
-    oriented = e.select(
-        F.when(lo, F.col("u")).otherwise(F.col("v")).alias("src"),
-        F.when(lo, F.col("v")).otherwise(F.col("u")).alias("dst"),
-        F.when(lo, F.col("dv")).otherwise(F.col("du")).alias("dd"),
-    )
-    e1 = oriented.select(
-        F.col("src").alias("x"), F.col("dst").alias("y"),
-        F.col("dd").alias("dy"),
-    )
-    e2 = oriented.select(
-        F.col("src").alias("x"), F.col("dst").alias("z"),
-        F.col("dd").alias("dz"),
-    )
-    wedges = e1.join(e2, "x").where(
-        F.struct(F.col("dy").alias("d"), F.col("y").alias("n"))
-        < F.struct(F.col("dz").alias("d"), F.col("z").alias("n"))
-    )
-    closing = oriented.select(
-        F.col("src").alias("y"), F.col("dst").alias("z")
-    )
-    tris = wedges.join(closing, ["y", "z"]).select("x", "y", "z")
-    corners = (
-        tris.select(F.explode(F.array("x", "y", "z")).alias("n"))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("n_triangles"))
-    )
-    return (
-        deg.join(corners, "n", "left")
-        .select(
-            F.col("n").alias("node"),
-            F.col("d").alias("degree"),
-            F.coalesce("n_triangles", F.lit(0))
-            .cast("long")
-            .alias("n_triangles"),
-        )
-    )

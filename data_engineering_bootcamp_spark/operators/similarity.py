@@ -12,12 +12,18 @@ Candidates share a bucket in any of `n_tables` independent tables
 signature pass); exact cosine re-rank over the candidate union. Recall
 1-(1-p)^L with p = (1-θ/π)^nbits.
 
-`cosine_topk_ivf` — scale path #2: inverted-file index with sampled
-k-means centroids (`ivf_centroids`: md5-hash-ordered sample init +
-Lloyd iterations, every step deterministic and oracle-replayable).
-Corpus vectors are assigned to their nearest coarse centroid; queries
-probe `n_probe` centroids and re-rank only those buckets, touching
-~n_probe/n_centroids of the corpus per query.
+`cosine_topk_ivf` — scale path #2: inverted-file index with k-means
+centroids (`ivf_centroids`). Corpus vectors are assigned to their
+nearest coarse centroid; queries probe `n_probe` centroids and re-rank
+only those buckets, touching ~n_probe/n_centroids of the corpus per
+query. `cosine_topk_pq` (PQ ADC scan) and `cosine_topk_ivfpq` (IVF +
+PQ on residuals) are scale paths #3 and #4.
+
+Quantizers: every IVF/PQ quantizer (`ivf_centroids`, `pq_codebooks`,
+`_ivfpq_train`) trains through ONE Lloyd trainer, `_lloyd`, and every
+trainer and encoder normalizes, assigns and sums through ONE numpy
+kernel, `_quantizer_kernels` — the family's exact-replay rules (md5
+seeds, lowest-id ties, 6dp HALF_UP means) live in one place.
 
 `neardup_embedding_cosine` — threshold near-duplicate pairs: blocked
 JVM hash join (scale) or exact all-pairs broadcast-matmul (baseline).
@@ -507,10 +513,10 @@ def neardup_embedding_cosine(
 def _ivf_assigner(spark, C_raw: np.ndarray):
     """mapInPandas stage assigning each vector to its nearest centroid
     by cosine (one Arrow matmul per batch). Returns the closure; `C_raw`
-    is broadcast normalized. Ties go to the lowest centroid id (numpy
-    argmax picks the first maximum)."""
-    Cn = C_raw / np.linalg.norm(C_raw, axis=1, keepdims=True)
-    bc = spark.sparkContext.broadcast(Cn)
+    is broadcast normalized. Ties go to the lowest centroid id (the
+    kernel's `bucket`)."""
+    unit, bucket, _, _ = _quantizer_kernels()
+    bc = spark.sparkContext.broadcast(unit(C_raw))
 
     def assign(batches):
         # self-contained closure (executors may lack this package)
@@ -520,12 +526,10 @@ def _ivf_assigner(spark, C_raw: np.ndarray):
         cents = bc.value
         for pdf in batches:
             V = _np.array(list(pdf["v"]), dtype=_np.float64)
-            Vn = V / _np.linalg.norm(V, axis=1, keepdims=True)
-            bucket = (Vn @ cents.T).argmax(axis=1)
             yield _pd.DataFrame(
                 {
                     "vid": pdf["vid"],
-                    "bucket": bucket.astype("int32"),
+                    "bucket": bucket(unit(V), cents).astype("int32"),
                     "v": pdf["v"],
                 }
             )
@@ -594,216 +598,173 @@ def _md5_seed_rows(src: DataFrame, need: int) -> list:
     return src.orderBy(key, "vid").limit(need).collect()
 
 
-def _full_coarse_lloyd(
-    src: DataFrame, n_centroids: int, lloyd_iters: int
-) -> np.ndarray:
-    """DISTRIBUTED full-corpus coarse k-means (VERDICT r14 #1): the
-    `train_scope="full"` twin of the driver-side numpy Lloyd in
-    `ivf_centroids`, with identical determinism rules — seeds = the
-    first `n_centroids` corpus rows in md5(vid) order, assignment by
-    cosine with lowest-centroid ties (the `_ivf_assigner` argmax),
-    centroids = per-dimension raw-vector means ROUNDed 6dp HALF_UP,
-    empty clusters keep their seed.
+def _quantizer_kernels():
+    """The IVF/PQ numpy kernel every quantizer trainer and encoder runs,
+    on the driver and in executor closures alike. Returns
+    ``(unit, bucket, codes, partials)``:
 
-    Scale shape: per iteration ONE broadcast-centroid Arrow pass over
-    the corpus emitting per-batch PARTIAL sums (<= n_centroids rows of
-    (count, pico-unit dim sums) per Arrow batch — never full vectors
-    into the shuffle) plus ONE groupBy(bucket) aggregate — so
-    codebooks can train on the ENTIRE corpus, retiring the
-    corpus<=sample_size oracle-parity seam: the whole-corpus SQL
-    oracle replays these iterations exactly.
+    - ``unit(X)``: L2-normalized rows.
+    - ``bucket(U, Cn)``: cosine argmax, ties to the lowest centroid id.
+      ``U`` must already be unit length: normalizing twice moves the
+      last ulp and can flip a tie against the oracle.
+    - ``codes(R, B)``: (n, m) per-subspace squared-L2 argmin vs
+      codebooks ``B`` (m, k, dsub), ties to the lowest code id.
+    - ``partials(V, labels, dsub)``: (js, cells, counts, float sums)
+      per occupied cell of each subspace j of V (labels (n, m)).
 
-    Determinism (r15 ADVICE): the per-batch partials are HALF_UP
-    pico-unit INTEGERS summed as DECIMAL(38,0), so the reduce-side
-    merge is order-insensitive — repeated runs produce bit-identical
-    codebooks regardless of task completion order (the earlier double
-    F.sum could flip a 6dp mean near a .5e-6 boundary between runs).
-    The driver finalizes each mean as the exactly-rounded double of
-    pico_sum / (cnt * 1e12) before the 6dp HALF_UP; the 0.5e-12
-    per-batch quantization sits ~100x below the cross-engine envelope
-    the 6dp round already absorbs (see _PICO).
-    """
-    spark = src.sparkSession
-    seed_rows = _md5_seed_rows(src, n_centroids)
-    C = np.array([r.v for r in seed_rows], dtype=np.float64)
-    dim = C.shape[1]
-    for _ in range(int(lloyd_iters)):
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        bc = spark.sparkContext.broadcast(Cn)
+    Built inside a factory so cloudpickle ships the functions BY VALUE:
+    executors never need this package importable."""
+    import numpy as np
 
-        def partials(batches):
-            # self-contained closure (executors may lack this package)
-            import numpy as _np
-            import pandas as _pd
+    def unit(X):
+        return X / np.linalg.norm(X, axis=1, keepdims=True)
 
-            cents = bc.value
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                V = _np.array(list(pdf["v"]), dtype=_np.float64)
-                Vn = V / _np.linalg.norm(V, axis=1, keepdims=True)
-                bucket = (Vn @ cents.T).argmax(axis=1)
-                bs, cnts, sums = [], [], []
-                for b in _np.unique(bucket):
-                    memb = V[bucket == b]
-                    bs.append(int(b))
-                    cnts.append(int(memb.shape[0]))
-                    s = memb.sum(axis=0)
-                    sums.append(
-                        [
-                            int(
-                                _np.copysign(
-                                    _np.floor(_np.abs(x) * 1e12 + 0.5), x
-                                )
-                            )
-                            for x in s
-                        ]
-                    )
-                yield _pd.DataFrame({"bucket": bs, "cnt": cnts, "s": sums})
+    def bucket(U, Cn):
+        return (U @ Cn.T).argmax(axis=1)
 
-        rows = (
-            src.mapInPandas(
-                partials, schema="bucket int, cnt bigint, s array<bigint>"
-            )
-            .groupBy("bucket")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                *[
-                    F.sum(
-                        F.element_at("s", d + 1).cast("decimal(38,0)")
-                    ).alias(f"s{d}")
-                    for d in range(dim)
-                ],
-            )
-            .collect()  # <= n_centroids rows by construction
+    def codes(R, B):
+        dd = B.shape[2]
+        return np.stack(
+            [
+                ((R[:, j * dd:(j + 1) * dd][:, None, :] - B[j][None, :, :])
+                 ** 2).sum(axis=2).argmin(axis=1)
+                for j in range(B.shape[0])
+            ],
+            axis=1,
         )
-        newC = C.copy()  # empty clusters keep their seed
-        for r in rows:
-            den = int(r["cnt"]) * _PICO
-            mu = np.array(
-                [int(r[f"s{d}"]) / den for d in range(dim)],
-                dtype=np.float64,
-            )
-            newC[r["bucket"]] = _round6_arr(mu)
-        C = newC
-    return C
+
+    def partials(V, labels, dsub):
+        js, cells, cnts, sums = [], [], [], []
+        for j in range(labels.shape[1]):
+            S = V[:, j * dsub:(j + 1) * dsub]
+            for c in np.unique(labels[:, j]):
+                memb = S[labels[:, j] == c]
+                js.append(j)
+                cells.append(int(c))
+                cnts.append(int(memb.shape[0]))
+                sums.append(memb.sum(axis=0))
+        return js, cells, cnts, sums
+
+    return unit, bucket, codes, partials
 
 
-def _full_subspace_lloyd(
+def _training_rows(
+    src: DataFrame, train_scope: str, need: int, rows: list | None = None
+) -> list | None:
+    """The md5 sample a ``train_scope="sample"`` trainer runs on
+    (``rows`` when a composing caller already fetched it), or None for
+    ``train_scope="full"`` — `_lloyd`'s substrate switch."""
+    if train_scope == "full":
+        return None
+    if train_scope != "sample":
+        raise ValueError(
+            f"train_scope must be 'sample' or 'full', got {train_scope!r}"
+        )
+    return rows if rows is not None else _md5_sample(src, need)
+
+
+def _lloyd(
     src: DataFrame,
+    k: int,
     m: int,
-    n_codes: int,
-    lloyd_iters: int,
+    iters: int,
+    coarse: bool,
+    sample_rows: list | None = None,
     Cn: np.ndarray | None = None,
     rc: np.ndarray | None = None,
 ) -> np.ndarray:
-    """DISTRIBUTED full-corpus per-subspace k-means (VERDICT r14 #1):
-    the `train_scope="full"` twin of `_subspace_lloyd`, over either
-    the L2-normalized vectors (`Cn`/`rc` None — the PQ input space) or
-    the coarse-quantizer residuals u - rc[argmax cosine] (the IVFPQ
-    input space). Rules unchanged: seeds = the residual/normalized
-    subvectors of the first `n_codes` corpus rows in md5(vid) order,
-    assignment by squared L2 with lowest-code ties, means ROUNDed 6dp
-    HALF_UP, empty cells keep their seed.
+    """The ANN family's one Lloyd k-means trainer. ``coarse`` trains
+    the IVF quantizer (m=1, cosine `bucket` assignment, means of the
+    RAW vectors; returns (k, dim)); otherwise PQ codebooks (squared-L2
+    `codes` assignment; returns (m, k, dim/m)) over the unit vectors,
+    or — given ``Cn``/``rc`` — over the residuals u - rc[bucket].
+    Seeds are the first ``k`` rows in md5(vid) order; each occupied
+    cell becomes its mean ROUNDed 6dp HALF_UP; empty cells keep their
+    seed — the rules every DuckDB oracle replays.
 
-    Scale shape: per iteration ONE broadcast-codebook Arrow pass emits
-    per-batch PARTIAL sums — at most m x n_codes rows of
-    (count, dsub sums) per Arrow batch, independent of batch rows —
-    and ONE groupBy(j, cell) aggregate reduces them; the driver
-    finalizes <= m x n_codes means. No full-corpus collect anywhere.
-    Like the coarse trainer, partials are HALF_UP pico-unit INTEGERS
-    summed as DECIMAL(38,0) (r15 ADVICE) — the reduce is
-    order-insensitive, so training is bit-deterministic run-to-run.
-    """
-    spark = src.sparkSession
-    seed_rows = _md5_seed_rows(src, n_codes)
-    Xs = np.array([r.v for r in seed_rows], dtype=np.float64)
-    Us = Xs / np.linalg.norm(Xs, axis=1, keepdims=True)
-    Rs = Us if rc is None else Us - rc[(Us @ Cn.T).argmax(axis=1)]
-    dim = Rs.shape[1]
+    With ``sample_rows`` (the md5 sample) the kernel runs on the
+    driver and a mean is sum / count, bit-identical to numpy's mean.
+    Without it training is DISTRIBUTED over all of ``src``: per
+    iteration ONE broadcast-codebook Arrow pass emits per-batch cell
+    partials as HALF_UP pico-unit integers (`_PICO`) and ONE
+    groupBy(j, cell) sums them as DECIMAL(38,0) — order-insensitive,
+    so training is bit-deterministic whatever the task order or Arrow
+    batch size. When the sample covers the corpus both substrates
+    produce identical codebooks."""
+    unit, bucket, codes, partials = _quantizer_kernels()
+
+    def space(X):
+        if coarse:
+            return X
+        U = unit(X)
+        return U if rc is None else U - rc[bucket(U, Cn)]
+
+    def assign(V, B):
+        if coarse:
+            return bucket(unit(V), unit(B[0]))[:, None]
+        return codes(V, B)
+
+    seed = sample_rows if sample_rows is not None else _md5_seed_rows(src, k)
+    V0 = space(np.array([r.v for r in seed], dtype=np.float64))
+    dim = V0.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     dsub = dim // m
-    books = np.stack(
-        [Rs[:n_codes, j * dsub:(j + 1) * dsub].copy() for j in range(m)]
-    )
-    for _ in range(int(lloyd_iters)):
-        bc = spark.sparkContext.broadcast((Cn, rc, books))
+    books = np.stack([V0[:k, j * dsub:(j + 1) * dsub] for j in range(m)])
+    for _ in range(int(iters)):
+        if sample_rows is not None:
+            js, cells, cnts, sums = partials(V0, assign(V0, books), dsub)
+            means = zip(js, cells, (s / n for n, s in zip(cnts, sums)))
+        else:
+            bc = src.sparkSession.sparkContext.broadcast(books)
 
-        def partials(batches):
-            # self-contained closure (executors may lack this package)
-            import numpy as _np
-            import pandas as _pd
+            def cell_sums(batches):
+                # self-contained closure (executors may lack this package)
+                import numpy as _np
+                import pandas as _pd
 
-            cents, rbase, B = bc.value
-            mm, _, dd = B.shape
-            for pdf in batches:
-                if pdf.empty:
-                    continue
-                X = _np.array(list(pdf["v"]), dtype=_np.float64)
-                U = X / _np.linalg.norm(X, axis=1, keepdims=True)
-                R = (
-                    U
-                    if rbase is None
-                    else U - rbase[(U @ cents.T).argmax(axis=1)]
-                )
-                js, cells, cnts, sums = [], [], [], []
-                for j in range(mm):
-                    S = R[:, j * dd:(j + 1) * dd]
-                    d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(
-                        axis=2
+                B = bc.value
+                for pdf in batches:
+                    if pdf.empty:
+                        continue
+                    V = space(_np.array(list(pdf["v"]), dtype=_np.float64))
+                    js, cells, cnts, sums = partials(V, assign(V, B), dsub)
+                    pico = [
+                        _np.copysign(_np.floor(_np.abs(s) * 1e12 + 0.5), s)
+                        for s in sums
+                    ]
+                    yield _pd.DataFrame(
+                        {"j": js, "cell": cells, "cnt": cnts,
+                         "s": [[int(x) for x in p] for p in pico]}
                     )
-                    cell = d2.argmin(axis=1)
-                    for c in _np.unique(cell):
-                        memb = S[cell == c]
-                        js.append(j)
-                        cells.append(int(c))
-                        cnts.append(int(memb.shape[0]))
-                        s = memb.sum(axis=0)
-                        sums.append(
-                            [
-                                int(
-                                    _np.copysign(
-                                        _np.floor(
-                                            _np.abs(x) * 1e12 + 0.5
-                                        ),
-                                        x,
-                                    )
-                                )
-                                for x in s
-                            ]
-                        )
-                yield _pd.DataFrame(
-                    {"j": js, "cell": cells, "cnt": cnts, "s": sums}
-                )
 
-        rows = (
-            src.mapInPandas(
-                partials,
-                schema="j int, cell int, cnt bigint, s array<bigint>",
+            rows = (
+                src.mapInPandas(
+                    cell_sums,
+                    schema="j int, cell int, cnt bigint, s array<bigint>",
+                )
+                .groupBy("j", "cell")
+                .agg(
+                    F.sum("cnt").alias("cnt"),
+                    *[
+                        F.sum(
+                            F.element_at("s", d + 1).cast("decimal(38,0)")
+                        ).alias(f"s{d}")
+                        for d in range(dsub)
+                    ],
+                )
+                .collect()  # <= m x k rows by construction
             )
-            .groupBy("j", "cell")
-            .agg(
-                F.sum("cnt").alias("cnt"),
-                *[
-                    F.sum(
-                        F.element_at("s", d + 1).cast("decimal(38,0)")
-                    ).alias(f"s{d}")
-                    for d in range(dsub)
-                ],
-            )
-            .collect()  # <= m x n_codes rows by construction
-        )
+            means = []
+            for r in rows:
+                den = int(r["cnt"]) * _PICO
+                mu = np.array([int(r[f"s{d}"]) / den for d in range(dsub)])
+                means.append((r["j"], r["cell"], mu))
         newB = books.copy()  # empty cells keep their seed
-        for r in rows:
-            den = int(r["cnt"]) * _PICO
-            mu = np.array(
-                [int(r[f"s{d}"]) / den for d in range(dsub)],
-                dtype=np.float64,
-            )
-            newB[r["j"], r["cell"]] = _round6_arr(mu)
+        for j, c, mu in means:
+            newB[j, c] = _round6_arr(mu)
         books = newB
-    return books
+    return books[0] if coarse else books
 
 
 def ivf_centroids(
@@ -817,69 +778,28 @@ def ivf_centroids(
     _sample_rows: list | None = None,
     train_scope: str = "sample",
 ) -> np.ndarray:
-    """Sampled k-means coarse quantizer, deterministic and oracle-
-    reproducible, trained DRIVER-SIDE on a bounded sample — or, with
-    ``train_scope="full"`` (VERDICT r14 #1), DISTRIBUTED over the
-    ENTIRE corpus via `_full_coarse_lloyd` (one broadcast-assignment
-    Arrow pass + one partial-combined groupBy per iteration), which
-    retires the corpus<=sample_size oracle-parity seam: the
-    whole-corpus SQL oracle replays full-scope training exactly at ANY
-    corpus size. When the corpus fits in the sample the two scopes
-    produce identical codebooks (same seeds, same assignment, same
-    6dp-rounded means).
-    `_sample_rows` lets a composing caller (cosine_topk_ivfpq) share
-    ONE md5-sample fetch between the coarse and residual trainers —
-    one TakeOrdered corpus pass instead of two.
+    """The IVF coarse quantizer: `_lloyd` k-means in coarse mode,
+    deterministic and oracle-reproducible; returns (n_centroids, dim).
+    Seeds are the first `n_centroids` vectors in md5(CAST(id AS
+    STRING)) order — a total order both engines agree on, with no RNG
+    state — and `lloyd_iters` iterations assign by cosine (the same
+    rule as `_ivf_assigner`) and take raw-vector means ROUNDed to 6dp.
 
-    Sample: the `sample_size` corpus vectors with the smallest
-    md5(CAST(id AS STRING)) — a uniform pseudo-random subset with a
-    total order both engines agree on (no RNG state, no data order
-    dependence); fetched with one TakeOrdered job, never a full sort.
-    Seeds are the first `n_centroids` of that same ordering (unchanged
-    from the pre-sample implementation). Then `lloyd_iters` Lloyd
-    iterations run in numpy on the driver: assign each sample vector to
-    its nearest centroid by cosine, recompute centroids as raw-vector
-    means ROUNDed to 6dp (so float-summation-order noise can't leak
-    cross-engine), empty clusters keep their seed.
-
-    Scale rationale (the FAISS `train()` contract): quantizer training
-    touches a FIXED-size sample regardless of corpus size — the
-    pre-sample form ran a full-corpus Arrow pass plus a shuffle PER
-    Lloyd iteration, which at 100 TB is lloyd_iters extra corpus scans.
-    Only the one-pass bucket *assignment* (cosine_topk_ivf) reads the
-    whole corpus. At gate scales (sf0.01/sf0.1 ≤ 4096 vectors) the
-    sample covers the entire corpus, so results are identical to
-    full-corpus Lloyd and the exhaustive SQL oracle remains exact.
+    ``train_scope="sample"`` trains DRIVER-side on the `sample_size`
+    vectors with the smallest md5 (one TakeOrdered job) — the FAISS
+    `train()` contract: training touches a FIXED-size sample whatever
+    the corpus size. ``train_scope="full"`` (VERDICT r14 #1) trains
+    DISTRIBUTED over the ENTIRE corpus, so the whole-corpus SQL oracle
+    replays it exactly at ANY corpus size. When the corpus fits in the
+    sample (sf0.01/sf0.1) the two scopes produce identical centroids.
+    `_sample_rows` lets a composing caller (`_ivfpq_train`) share ONE
+    md5-sample fetch between the coarse and residual trainers.
     """
     src = _src if _src is not None else _ann_src(corpus, id_col, vec_col)
-    if train_scope == "full":
-        return _full_coarse_lloyd(src, n_centroids, lloyd_iters)
-    if train_scope != "sample":
-        raise ValueError(
-            f"train_scope must be 'sample' or 'full', got {train_scope!r}"
-        )
-    sample_rows = (
-        _sample_rows
-        if _sample_rows is not None
-        else _md5_sample(src, max(sample_size, n_centroids))
+    rows = _training_rows(
+        src, train_scope, max(sample_size, n_centroids), _sample_rows
     )
-    X = np.array([r.v for r in sample_rows], dtype=np.float64)
-    Xn = X / np.linalg.norm(X, axis=1, keepdims=True)
-    C = X[:n_centroids].copy()
-    for _ in range(lloyd_iters):
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        # ties go to the lowest centroid id (argmax picks the first
-        # maximum) — same rule as _ivf_assigner and the oracle
-        bucket = (Xn @ Cn.T).argmax(axis=1)
-        newC = C.copy()  # empty clusters keep their seed
-        for b in range(n_centroids):
-            members = bucket == b
-            if members.any():
-                m = X[members].mean(axis=0)
-                # HALF_UP away from zero: matches F.round / DuckDB ROUND
-                newC[b] = np.copysign(np.floor(np.abs(m) * 1e6 + 0.5), m) / 1e6
-        C = newC
-    return C
+    return _lloyd(src, n_centroids, 1, lloyd_iters, True, rows)
 
 
 def cosine_topk_ivf(
@@ -1439,74 +1359,17 @@ def pq_codebooks(
     sample_size: int = 4096,
     train_scope: str = "sample",
 ) -> np.ndarray:
-    """Product-quantization codebooks (Jégou, Douze & Schmid 2011),
-    deterministic and oracle-reproducible, trained DRIVER-SIDE on the
-    same bounded md5-ordered sample as `ivf_centroids`.
-
-    Vectors are L2-NORMALIZED first (cosine NN over unit vectors ==
-    Euclidean NN, the standard cosine-PQ reduction), then the dimension
-    axis splits into `m` equal subspaces and each subspace trains its
-    own k-means (k = `n_codes`) with the family's exact-replay rules:
-    seeds = the first `n_codes` sample subvectors in md5 order, Lloyd
-    assignment by squared L2 with lowest-code tie-break, means ROUNDed
-    to 6dp, empty cells keep their seed. Returns (m, n_codes, dim/m).
-    Training touches a FIXED-size sample regardless of corpus size (the
-    FAISS train() contract); at gate scales the sample covers the whole
-    corpus so the exhaustive SQL oracle is exact. With
-    ``train_scope="full"`` (VERDICT r14 #1) the codebooks instead train
-    DISTRIBUTED over the entire corpus (`_full_subspace_lloyd` — one
-    partial-sums Arrow pass + one groupBy per iteration), keeping
-    whole-corpus oracle parity at any size.
+    """Product-quantization codebooks (Jégou, Douze & Schmid 2011):
+    `_lloyd` in PQ mode, with the same md5 seeds and `train_scope`
+    substrates as `ivf_centroids`. Vectors are L2-NORMALIZED first
+    (cosine NN over unit vectors == Euclidean NN), then the dimension
+    axis splits into `m` equal subspaces, each training its own
+    k-means (k = `n_codes`, squared-L2 assignment with lowest-code
+    ties, 6dp-rounded means). Returns (m, n_codes, dim/m).
     """
     src = _src if _src is not None else _ann_src(corpus, id_col, vec_col)
-    if train_scope == "full":
-        return _full_subspace_lloyd(src, m, n_codes, lloyd_iters)
-    if train_scope != "sample":
-        raise ValueError(
-            f"train_scope must be 'sample' or 'full', got {train_scope!r}"
-        )
-    sample_rows = _md5_sample(src, max(sample_size, n_codes))
-    X = np.array([r.v for r in sample_rows], dtype=np.float64)
-    U = X / np.linalg.norm(X, axis=1, keepdims=True)
-    return _subspace_lloyd(U, m, n_codes, lloyd_iters)
-
-
-def _subspace_lloyd(
-    R: np.ndarray, m: int, n_codes: int, lloyd_iters: int
-) -> np.ndarray:
-    """Per-subspace k-means with the family's exact-replay rules
-    (shared by `pq_codebooks` on normalized vectors and
-    `cosine_topk_ivfpq` on coarse-quantizer residuals): seeds = the
-    first `n_codes` rows (callers pass md5-ordered samples), Lloyd
-    assignment by squared L2 with lowest-code tie-break, means ROUNDed
-    to 6dp HALF_UP, empty cells keep their seed. Returns
-    (m, n_codes, dim/m)."""
-    dim = R.shape[1]
-    if dim % m:
-        raise ValueError(f"dim {dim} not divisible by m={m}")
-    dsub = dim // m
-    books = np.empty((m, n_codes, dsub), dtype=np.float64)
-    for j in range(m):
-        S = R[:, j * dsub:(j + 1) * dsub]
-        C = S[:n_codes].copy()
-        for _ in range(int(lloyd_iters)):
-            # squared-L2 argmin; ties to the lowest code id (argmin
-            # returns the first minimum) — the oracle's ORDER BY
-            # dist ASC, cid ASC
-            d2 = ((S[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            cell = d2.argmin(axis=1)
-            newC = C.copy()  # empty cells keep their seed
-            for b in range(n_codes):
-                members = cell == b
-                if members.any():
-                    mu = S[members].mean(axis=0)
-                    # HALF_UP away from zero: matches F.round / DuckDB
-                    newC[b] = np.copysign(
-                        np.floor(np.abs(mu) * 1e6 + 0.5), mu
-                    ) / 1e6
-            C = newC
-        books[j] = C
-    return books
+    rows = _training_rows(src, train_scope, max(sample_size, n_codes))
+    return _lloyd(src, n_codes, m, lloyd_iters, False, rows)
 
 
 def cosine_topk_pq(
@@ -1547,28 +1410,25 @@ def cosine_topk_pq(
         corpus, m=m, n_codes=n_codes, lloyd_iters=lloyd_iters,
         id_col=id_col, vec_col=vec_col, _src=src, train_scope=train_scope,
     )
-    dsub = books.shape[2]
     spark = corpus.sparkSession
     bc_books = spark.sparkContext.broadcast(books)
+    unit, _, codes_of, _ = _quantizer_kernels()
 
     def encode(batches):
+        # self-contained closure (executors may lack this package)
         import numpy as _np
         import pandas as _pd
 
         B = bc_books.value
-        mm, kk, dd = B.shape
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = _np.array(list(pdf["v"]), dtype=_np.float64)
-            U = X / _np.linalg.norm(X, axis=1, keepdims=True)
-            cs = []
-            for j in range(mm):
-                S = U[:, j * dd:(j + 1) * dd]
-                d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-                cs.append(d2.argmin(axis=1).astype("int32"))
+            U = unit(_np.array(list(pdf["v"]), dtype=_np.float64))
             yield _pd.DataFrame(
-                {"vid": pdf["vid"], "codes": list(_np.stack(cs, axis=1))}
+                {
+                    "vid": pdf["vid"],
+                    "codes": list(codes_of(U, B).astype("int32")),
+                }
             )
 
     codes = src.mapInPandas(encode, schema="vid bigint, codes array<int>")
@@ -1663,6 +1523,7 @@ def _ivfpq_encoder(bc_cn, bc_rc, bc_books):
     argmin squared-L2 of the residual subvector vs codebook j (ties to
     the lowest code). Input batches carry (vid, v); output rows are
     (vid, bucket, codes array<int>)."""
+    unit, bucket, codes, _ = _quantizer_kernels()
 
     def encode(batches):
         # self-contained closure (executors may lack this package)
@@ -1672,24 +1533,16 @@ def _ivfpq_encoder(bc_cn, bc_rc, bc_books):
         cents = bc_cn.value
         rbase = bc_rc.value
         B = bc_books.value
-        mm, kk, dd = B.shape
         for pdf in batches:
             if pdf.empty:
                 continue
-            X = _np.array(list(pdf["v"]), dtype=_np.float64)
-            U = X / _np.linalg.norm(X, axis=1, keepdims=True)
-            bucket = (U @ cents.T).argmax(axis=1)
-            R = U - rbase[bucket]
-            cs = []
-            for j in range(mm):
-                S = R[:, j * dd:(j + 1) * dd]
-                d2 = ((S[:, None, :] - B[j][None, :, :]) ** 2).sum(axis=2)
-                cs.append(d2.argmin(axis=1).astype("int32"))
+            U = unit(_np.array(list(pdf["v"]), dtype=_np.float64))
+            b = bucket(U, cents)
             yield _pd.DataFrame(
                 {
                     "vid": pdf["vid"],
-                    "bucket": bucket.astype("int32"),
-                    "codes": list(_np.stack(cs, axis=1)),
+                    "bucket": b.astype("int32"),
+                    "codes": list(codes(U - rbase[b], B).astype("int32")),
                 }
             )
 
@@ -1726,6 +1579,36 @@ def ivfpq_encode(
     )
 
 
+def _ivfpq_train(
+    src: DataFrame,
+    n_centroids: int,
+    m: int,
+    n_codes: int,
+    lloyd_iters: int,
+    train_scope: str,
+    sample_size: int = 4096,
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The IVFPQ training recipe over a (vid, v) relation: the coarse
+    quantizer (`ivf_centroids`), its normalized centroids Cn, the
+    residual basis rc = ROUND(Cn, 6) — the one extra rounding contract
+    the composition adds; assignment keeps the UNROUNDED Cn, so bucket
+    ids match the IVF path bit-for-bit — and the PQ codebooks trained
+    on the residuals u - rc[bucket]. Returns (Cn, rc, books). With
+    ``train_scope="sample"`` ONE md5-sample fetch serves both trainers
+    (one TakeOrdered corpus pass instead of two)."""
+    rows = _training_rows(
+        src, train_scope, max(sample_size, n_centroids, n_codes)
+    )
+    C = ivf_centroids(
+        src, n_centroids, lloyd_iters, _src=src, _sample_rows=rows,
+        train_scope=train_scope,
+    )
+    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
+    rc = _round6_arr(Cn)
+    books = _lloyd(src, n_codes, m, lloyd_iters, False, rows, Cn, rc)
+    return Cn, rc, books
+
+
 def cosine_topk_ivfpq(
     corpus: DataFrame,
     queries: DataFrame,
@@ -1755,18 +1638,19 @@ def cosine_topk_ivfpq(
 
     Recipe, every stage deterministic and SQL-replayable:
 
-    1. Coarse quantizer: `ivf_centroids` (md5-sample seeds + Lloyd,
-       6dp means) — shared verbatim with the IVF path.
-    2. Residual basis: rc = ROUND(C / ||C||, 6) per centroid. The
-       ROUND is the cross-engine contract point; assignment itself
-       uses the UNROUNDED normalized centroids exactly like
-       `_ivf_assigner`, so bucket ids match the IVF path bit-for-bit.
-    3. PQ codebooks train on the md5-sample's residuals r = u - rc[b]
-       (u = the L2-normalized vector) via `_subspace_lloyd` — the
-       same seed/tie/round rules as `pq_codebooks`, different input
-       space. Training touches a FIXED-size sample (FAISS train()
-       contract); at gate scales the sample covers the corpus so the
-       exhaustive SQL oracle stays exact (callers assert this seam).
+    1-3. Training, `_ivfpq_train`: the coarse quantizer
+       (`ivf_centroids`, shared verbatim with the IVF path), the
+       residual basis rc = ROUND(C / ||C||, 6) per centroid (the
+       cross-engine contract point; assignment itself uses the
+       UNROUNDED normalized centroids exactly like `_ivf_assigner`, so
+       bucket ids match the IVF path bit-for-bit), and PQ codebooks
+       trained by `_lloyd` on the residuals r = u - rc[b] (u = the
+       L2-normalized vector) — the same seed/tie/round rules as
+       `pq_codebooks`, different input space. ``train_scope`` picks
+       the substrate exactly as for `ivf_centroids`: the md5 sample
+       (FAISS train() contract; at gate scales it covers the corpus,
+       so the exhaustive SQL oracle stays exact) or the whole corpus,
+       distributed (the oracle stays exact at any size).
     4. Encode pass (ONE mapInPandas over the corpus): bucket = argmax
        cosine (ties to lowest cid), codes[j] = argmin squared-L2 of
        the residual subvector vs codebook j (ties to lowest code).
@@ -1787,47 +1671,9 @@ def cosine_topk_ivfpq(
     _require_integral_ids(corpus, id_col, "cosine_topk_ivfpq")
     _require_integral_ids(queries, id_col, "cosine_topk_ivfpq")
     src = _ann_src(corpus, id_col, vec_col).persist()
-    if train_scope == "full":
-        # DISTRIBUTED full-corpus training (VERDICT r14 #1): the
-        # coarse Lloyd and the residual PQ Lloyd each run over the
-        # ENTIRE corpus (one broadcast-assignment Arrow pass + one
-        # partial-combined groupBy per iteration) — no sample bound,
-        # so the whole-corpus SQL oracle stays exact at ANY size and
-        # the corpus<=sample_size seam guard is retired for callers
-        # on this scope.
-        C = _full_coarse_lloyd(src, n_centroids, lloyd_iters)
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        rc = _round6_arr(Cn)
-        books = _full_subspace_lloyd(
-            src, m, n_codes, lloyd_iters, Cn=Cn, rc=rc
-        )
-    elif train_scope == "sample":
-        # ONE md5-sample fetch serves both quantizer trainers (the
-        # coarse k-means and the residual PQ): at 100 TB this is one
-        # TakeOrdered corpus pass instead of two
-        sample_rows = _md5_sample(
-            src, max(sample_size, n_centroids, n_codes)
-        )
-        C = ivf_centroids(
-            corpus, n_centroids, lloyd_iters, id_col=id_col,
-            vec_col=vec_col, _src=src, sample_size=sample_size,
-            _sample_rows=sample_rows,
-        )
-        Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-        # the residual basis: HALF_UP 6dp of the normalized centroids
-        # — the one extra rounding contract this composition adds
-        rc = _round6_arr(Cn)
-
-        # PQ codebooks on the SAMPLE's residuals
-        Xs = np.array([r.v for r in sample_rows], dtype=np.float64)
-        Us = Xs / np.linalg.norm(Xs, axis=1, keepdims=True)
-        Rs = Us - rc[(Us @ Cn.T).argmax(axis=1)]
-        books = _subspace_lloyd(Rs, m, n_codes, lloyd_iters)
-    else:
-        raise ValueError(
-            f"train_scope must be 'sample' or 'full', got {train_scope!r}"
-        )
-    dsub = books.shape[2]
+    Cn, rc, books = _ivfpq_train(
+        src, n_centroids, m, n_codes, lloyd_iters, train_scope, sample_size
+    )
 
     spark = corpus.sparkSession
     bc_cn = spark.sparkContext.broadcast(Cn)

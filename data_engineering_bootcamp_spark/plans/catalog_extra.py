@@ -30,6 +30,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _tokens
 from ..operators.temporal import asof_join
 from ..functions.datelist import utc_date, utc_date_of_ts
 from ..sources.readers import load_table
@@ -1247,15 +1248,7 @@ def q_vocab_top_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(
-                    F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                    " ",
-                ),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token"),
+        F.explode(_tokens(F.col("text"))).alias("token"),
     )
     return (
         toks.groupBy("token")

@@ -35,6 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.datelist import utc_date, utc_date_of_ts, utc_ts_str
+from ..operators.dedup import _tokens
 from ..sources.readers import load_table
 
 _LANGS = ["de", "en", "es", "fr", "zh"]
@@ -545,15 +546,7 @@ def q_bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     (pass 1 of the same training loop)."""
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(
-                    F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                    " ",
-                ),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token")
+        F.explode(_tokens(F.col("text"))).alias("token")
     )
     wf = (
         toks.groupBy("token")
@@ -842,15 +835,7 @@ def q_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = F.lit(docs.count())
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.filter(
-                F.split(
-                    F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                    " ",
-                ),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("term"),
+        F.explode(_tokens(F.col("text"))).alias("term"),
     ).where(F.length("term") >= 3)
     tf = toks.groupBy("doc_id", "term").agg(
         F.count(F.lit(1)).alias("tf")
@@ -1012,12 +997,7 @@ def q_doc_bigram_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            ),
-            lambda t: t != F.lit(""),
-        ).alias("tk"),
+        _tokens(F.col("text")).alias("tk"),
     ).where(F.size("tk") >= 2)
     bi = toks.select(
         "doc_id",
@@ -1469,15 +1449,7 @@ def q_countmin_token_freq(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
-        F.explode(
-            F.filter(
-                F.split(
-                    F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                    " ",
-                ),
-                lambda t: t != F.lit(""),
-            )
-        ).alias("token")
+        F.explode(_tokens(F.col("text"))).alias("token")
     )
     counters = countmin_table(toks, "token", depth=4, width=1024)
     exact_top = (

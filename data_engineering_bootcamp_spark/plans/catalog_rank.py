@@ -42,6 +42,7 @@ from ..operators.bpe import (
     bpe_train_merges_batched,
     spaced_utf8_bytes,
 )
+from ..operators.dedup import _tokens as _text_tokens
 from ..sources.readers import load_table
 from .catalog_write import _snapshot
 
@@ -54,15 +55,7 @@ def _tokens(docs: DataFrame, with_doc: bool = False) -> DataFrame:
     """The catalog's standard corpus tokenization (matches
     vocab_top_tokens / bpe_merge_candidates / tfidf_top_terms):
     lower, collapse whitespace, split, drop empties."""
-    tok = F.explode(
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                " ",
-            ),
-            lambda t: t != F.lit(""),
-        )
-    ).alias("term")
+    tok = F.explode(_text_tokens(F.col("text"))).alias("term")
     return docs.select("doc_id", tok) if with_doc else docs.select(tok)
 
 
@@ -1335,15 +1328,7 @@ def q_doc_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     #    tokenize it saved) and materialize EAGERLY so the model's
     #    broadcast-build job and the scoring job never race to
     #    populate the cache (the r16 pagerank cache-race finding).
-    tok = F.explode(
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                " ",
-            ),
-            lambda t: t != F.lit(""),
-        )
-    ).alias("term")
+    tok = F.explode(_text_tokens(F.col("text"))).alias("term")
     pre = docs.select(
         "doc_id",
         "text",
@@ -1654,12 +1639,7 @@ def q_training_export_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("long").alias("sym_id"),
             )
         )
-        toks_arr = F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")), " "
-            ),
-            lambda t: t != F.lit(""),
-        )
+        toks_arr = _text_tokens(F.col("text"))
         stream = (
             docs.select("doc_id", F.posexplode(toks_arr).alias("pos", "term"))
             .where(
@@ -1872,15 +1852,7 @@ def q_doc_lang_id_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per DOCUMENT before the token explode; the shared hashed token
     # stream feeds the training counts AND the scoring pass, so it is
     # persisted and eagerly materialized (cache-race discipline).
-    tok = F.explode(
-        F.filter(
-            F.split(
-                F.trim(F.regexp_replace(F.lower("text"), r"\s+", " ")),
-                " ",
-            ),
-            lambda t: t != F.lit(""),
-        )
-    ).alias("term")
+    tok = F.explode(_text_tokens(F.col("text"))).alias("term")
     pre = docs.select(
         "doc_id",
         "text",
@@ -2160,8 +2132,8 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     `_publish_version` atomic-swap publisher — a reader always
     resolves a complete index version, never a half-written one.
 
-    Training uses the DISTRIBUTED full-scope Lloyd (VERDICT r14 #1
-    composition): seeds/ties/6dp-mean rules unchanged, so the oracle
+    Training is `_ivfpq_train` at full scope (the DISTRIBUTED `_lloyd`,
+    VERDICT r14 #1): seeds/ties/6dp-mean rules unchanged, so the oracle
     below replays training-on-base + encode-at-arrival over the WHOLE
     input exactly (stream-equals-batch, the `streaming_countmin`
     pattern — encode is per-row deterministic given frozen codebooks,
@@ -2174,25 +2146,14 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    import numpy as np
-
-    from ..operators.similarity import (
-        _ann_src,
-        _full_coarse_lloyd,
-        _full_subspace_lloyd,
-        _round6_arr,
-        ivfpq_encode,
-    )
+    from ..operators.similarity import _ann_src, _ivfpq_train, ivfpq_encode
     from ..streaming.sinks import _publish_version, start_foreach_batch
 
     emb = _t(spark, sf_dir, "embeddings")
     base_src = _ann_src(
         emb.where(F.col("vec_id") % 4 != 0), "vec_id", "embedding"
     ).persist()
-    C = _full_coarse_lloyd(base_src, SIX_NC, 1)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    rc = _round6_arr(Cn)
-    books = _full_subspace_lloyd(base_src, SIX_M, SIX_CODES, 1, Cn=Cn, rc=rc)
+    Cn, rc, books = _ivfpq_train(base_src, SIX_NC, SIX_M, SIX_CODES, 1, "full")
 
     src = tempfile.mkdtemp(prefix="stream_ivfpq_src_")
     store = tempfile.mkdtemp(prefix="stream_ivfpq_store_")

@@ -533,7 +533,9 @@ def test_full_scope_training_matches_sampled_when_covered(spark, sf_dir):
     to the sampled driver-side numpy path whenever the md5 sample
     covers the corpus: same seeds, same assignment, same 6dp-rounded
     means, different execution substrate. Checked at 1 and 2 Lloyd
-    iterations (2 exercises the loop re-broadcast)."""
+    iterations (2 exercises the loop re-broadcast). The full-scope half
+    runs again with 7-row Arrow batches: the pico-integer reduce must
+    not depend on how the corpus is cut into batches."""
     import numpy as np
     import pytest
     from pyspark.sql import functions as F
@@ -549,38 +551,111 @@ def test_full_scope_training_matches_sampled_when_covered(spark, sf_dir):
     from data_engineering_bootcamp_spark.sources.readers import load_table
 
     emb = load_table(spark, sf_dir, "embeddings")
-    for iters in (1, 2):
-        Cs = ivf_centroids(emb, 32, iters)
-        Cf = ivf_centroids(emb, 32, iters, train_scope="full")
-        assert np.array_equal(Cs, Cf), f"coarse diverged at iters={iters}"
-        Bs = pq_codebooks(emb, m=16, n_codes=16, lloyd_iters=iters)
-        Bf = pq_codebooks(
-            emb, m=16, n_codes=16, lloyd_iters=iters, train_scope="full"
-        )
-        assert np.array_equal(Bs, Bf), f"pq diverged at iters={iters}"
-
     q = emb.where(F.col("vec_id") < 10)
     kw = dict(
         k=5, n_centroids=32, n_probe=10, m=16, n_codes=16,
         n_candidates=80,
     )
+    Cs = {it: ivf_centroids(emb, 32, it) for it in (1, 2)}
+    Bs = {it: pq_codebooks(emb, m=16, n_codes=16, lloyd_iters=it)
+          for it in (1, 2)}
     a = sorted(map(tuple, cosine_topk_ivfpq(emb, q, **kw).collect()))
     release_caches()
-    b = sorted(
-        map(
-            tuple,
-            cosine_topk_ivfpq(
-                emb, q, train_scope="full", **kw
-            ).collect(),
+
+    def check_full_scope():
+        for iters in (1, 2):
+            Cf = ivf_centroids(emb, 32, iters, train_scope="full")
+            assert np.array_equal(Cs[iters], Cf), (
+                f"coarse diverged at iters={iters}"
+            )
+            Bf = pq_codebooks(
+                emb, m=16, n_codes=16, lloyd_iters=iters,
+                train_scope="full",
+            )
+            assert np.array_equal(Bs[iters], Bf), (
+                f"pq diverged at iters={iters}"
+            )
+        b = sorted(
+            map(
+                tuple,
+                cosine_topk_ivfpq(
+                    emb, q, train_scope="full", **kw
+                ).collect(),
+            )
         )
-    )
-    release_caches()
-    assert a == b
+        release_caches()
+        assert a == b
+
+    check_full_scope()
+    batch_key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    spark.conf.set(batch_key, "7")
+    try:
+        check_full_scope()
+    finally:
+        spark.conf.unset(batch_key)
 
     with pytest.raises(ValueError, match="train_scope"):
         ivf_centroids(emb, 8, 1, train_scope="bogus")
     with pytest.raises(ValueError, match="train_scope"):
         pq_codebooks(emb, train_scope="bogus")
+
+
+#: sha256 of the trained arrays' bytes at sf0.01, sample_size=60.
+QUANTIZER_DIGESTS = {
+    "ivf/sample/1": "5cd73c1b295bbd8a07b0d41e9466704f"
+                    "e2ab0f081d51c073631a7f6ab52f37e0",
+    "ivf/sample/2": "5cd73c1b295bbd8a07b0d41e9466704f"
+                    "e2ab0f081d51c073631a7f6ab52f37e0",
+    "ivf/full/1": "67100d775d3af08ddb13555243fcc636"
+                  "a1108712153c40b4e486cb6bce599114",
+    "ivf/full/2": "d9dc0d7e72c49a28706f36f549183e49"
+                  "596e5bc6eca93907c67538b75d05f034",
+    "pq/sample/1": "503d0194a1483f849f0f1d4705aad51d"
+                   "c22f783351f2f83dd24d9e0a8f674a1b",
+    "pq/sample/2": "abc183412646fe450346f98721e2313d"
+                   "9752a2dce55246c2a79415fea970fc72",
+    "pq/full/1": "f434c991e0589755cc1da43636f51770"
+                 "1281aa9c14047c2dcd177f7e66742865",
+    "pq/full/2": "3241b59b5636cff23ab91e6cdfd35121"
+                 "58412e7e1a8c71d2612a8d52a9f72485",
+}
+
+
+def test_quantizer_training_digests(spark, sf_dir):
+    """Bit-identity pin for quantizer training: `ivf_centroids` and
+    `pq_codebooks` at sample_size=60 — an md5 sample SMALLER than the
+    500-row sf0.01 corpus, so the two scopes train on different rows —
+    at both train scopes, 1 and 2 Lloyd iterations. Any change to the
+    seeds, assignment ties, 6dp rounding or the pico reduce moves a
+    digest."""
+    import hashlib
+
+    import numpy as np
+
+    from data_engineering_bootcamp_spark.operators.similarity import (
+        ivf_centroids,
+        pq_codebooks,
+    )
+    from data_engineering_bootcamp_spark.sources.readers import load_table
+
+    def sha(a):
+        return hashlib.sha256(np.ascontiguousarray(a).tobytes()).hexdigest()
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    got = {}
+    for scope in ("sample", "full"):
+        for iters in (1, 2):
+            C = ivf_centroids(
+                emb, 32, iters, sample_size=60, train_scope=scope
+            )
+            B = pq_codebooks(
+                emb, m=16, n_codes=16, lloyd_iters=iters, sample_size=60,
+                train_scope=scope,
+            )
+            assert C.shape == (32, 64) and B.shape == (16, 16, 4)
+            got[f"ivf/{scope}/{iters}"] = sha(C)
+            got[f"pq/{scope}/{iters}"] = sha(B)
+    assert got == QUANTIZER_DIGESTS
 
 
 def test_ivfpq_fulltrain_recall(spark, sf_dir):
@@ -687,7 +762,6 @@ def test_streaming_ivfpq_index_split_independence(spark, sf_dir):
     codebooks must yield the identical posting rows — encode is
     per-row deterministic given the codebooks, so the index is
     independent of how arrivals were micro-batched."""
-    import numpy as np
     from pyspark.sql import functions as F
 
     from data_engineering_bootcamp_spark.operators.dedup import (
@@ -695,9 +769,7 @@ def test_streaming_ivfpq_index_split_independence(spark, sf_dir):
     )
     from data_engineering_bootcamp_spark.operators.similarity import (
         _ann_src,
-        _full_coarse_lloyd,
-        _full_subspace_lloyd,
-        _round6_arr,
+        _ivfpq_train,
         ivfpq_encode,
     )
     from data_engineering_bootcamp_spark.plans.catalog_rank import (
@@ -716,11 +788,8 @@ def test_streaming_ivfpq_index_split_independence(spark, sf_dir):
     base_src = _ann_src(
         emb.where(F.col("vec_id") % 4 != 0), "vec_id", "embedding"
     ).persist()
-    C = _full_coarse_lloyd(base_src, SIX_NC, 1)
-    Cn = C / np.linalg.norm(C, axis=1, keepdims=True)
-    rc = _round6_arr(Cn)
-    books = _full_subspace_lloyd(
-        base_src, SIX_M, SIX_CODES, 1, Cn=Cn, rc=rc
+    Cn, rc, books = _ivfpq_train(
+        base_src, SIX_NC, SIX_M, SIX_CODES, 1, "full"
     )
     one_shot = {
         (r.vid, r.bucket, *r.codes)
