@@ -1,13 +1,16 @@
 #!/usr/bin/env python
-"""Benchmark runner: headline catalog queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+"""Benchmark runner: catalog queries at $SPARK_GRAFT_SF_DIR (default
+/root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
+
+    python bench.py              # the 112 HEADLINE queries
+    python bench.py name ...     # the named catalog entries instead
 
 Prints ONE JSON line:
   {"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}
 
-value = total wall-clock seconds across the headline queries (each
-executed to completion with a cheap count-style action; results are not
-collected to the driver).
+value = total wall-clock seconds across the timed queries (each
+executed to completion with a noop write; results are not collected
+to the driver).
 
 Median-of-N mode (VERDICT r5 #6 — single contended runs dominated two
 rounds of driver artifacts): each query is timed
@@ -16,17 +19,32 @@ per-query MEDIANS; the raw per-rep timings ride along under
 "queries_reps" so contention is visible post-hoc, and "value" is the
 sum of medians. Set SPARK_GRAFT_BENCH_REPS=1 for the old single-shot
 behavior (used while iterating).
+
+Only a headline run writes the full record (BENCH_full.json and
+BENCH_full_c{N}.json), so those files always describe the headline
+set; a named run prints the line and each entry's reps on stderr.
+An unknown name exits 2 before any Spark session starts.
+
+This is the one timing harness; tools/gate_check.py uses its `settle`
+and CPU markers.
 """
 
 from __future__ import annotations
 
+import gc
 import json
 import os
+import statistics
 import sys
 import time
 
+from data_engineering_bootcamp_spark.operators.dedup import release_caches
 from data_engineering_bootcamp_spark.plans.catalog import QUERIES
-from data_engineering_bootcamp_spark.session import get_spark, graft_cpus
+from data_engineering_bootcamp_spark.session import env_number, get_spark, graft_cpus
+
+ROOT = os.path.dirname(os.path.abspath(__file__))
+# errors key of a failed warm-up; not a catalog name, so never a hard error
+WARM_UP = "(warm-up)"
 
 HEADLINE = [
     "pricing_summary",
@@ -183,20 +201,24 @@ HEADLINE = [
 ]
 
 
-def _cpu_marker_mean(samples: int = 3) -> float:
-    """Mean wall time of a fixed single-thread workload over N runs."""
-    acc = 0.0
-    for _ in range(samples):
+def _cpu_marker_samples(n: int = 3) -> list[float]:
+    """Wall times of N runs of a fixed single-thread workload: the
+    absolute machine-speed marker. Round-over-round drift with
+    IDENTICAL code (r6: 92.9 s idle total, r9: 133.2 s) was
+    unfalsifiable until an artifact recorded how fast the box itself
+    was that day (observed 0.3-0.7 s a run)."""
+    times = []
+    for _ in range(n):
         t0 = time.perf_counter()
         x = 0
         for i in range(10_000_000):
             x += i
-        acc += time.perf_counter() - t0
-    return round(acc / samples, 3)
+        times.append(time.perf_counter() - t0)
+    return times
 
 
 def _cpu_marker_mc_mean(samples: int = 2) -> float:
-    """MULTI-core twin of `_cpu_marker_mean` (VERDICT r16 #1): the
+    """MULTI-core twin of `_cpu_marker_samples` (VERDICT r16 #1): the
     single-thread marker stayed flat (0.42 -> 0.43, 3%) across a round
     whose common-set wall moved ~26%, because the observed drift on
     this box is MULTI-core throughput (cgroup/noisy-neighbor
@@ -239,9 +261,9 @@ def _cpu_marker_mc_mean(samples: int = 2) -> float:
 # driver reported phantom `dropped_from_bench` entries (10 in r16, all
 # verifiably still running — VERDICT r16 #1). The printed set is now
 # PINNED: the r16-printed 56 names first (a superset guarantee — every
-# query the driver saw last round it sees this round), then any
-# remaining headline entries in catalog order as the byte budget
-# allows. Selection no longer depends on measured times at all.
+# query the driver saw last round it sees this round), then the
+# other timed entries in run order (HEADLINE order in a headline run)
+# as the byte budget allows. Selection never depends on measured times.
 COMPACT_PRIORITY = [
     "corpus_curation_pipeline_learned",
     "corpus_curation_pipeline",
@@ -302,61 +324,165 @@ COMPACT_PRIORITY = [
 ]
 
 
-def main() -> None:
+def warm(spark, sf_dir: str) -> None:
+    """Pre-pay session start-up so per-query numbers measure execution:
+    the JVM and parquet footers (the cheapest query), then the
+    session's FIRST local-relation build, which pays ~1.9 s of
+    Py4J/serializer init once per session and otherwise lands on
+    whichever query first builds one (VERDICT r11 #1: rep 1 of
+    histogram_quantiles read 3.7 s, 0.95 s in isolation)."""
+    QUERIES["pricing_summary"](spark, sf_dir).count()
+    spark.createDataFrame([(1,)], "warm int").count()
+
+
+def settle(spark) -> None:
+    """Untimed cleanup after each rep or entry: release every cached
+    and checkpointed block the query left behind, then collect BOTH
+    runtimes. Py4J frees JVM-side DataFrame/RDD handles lazily, so
+    without the collections rep N's checkpoint blocks and shuffle
+    state land in rep N+1's timed window as 2-5x spikes on the
+    iterative queries (r16: pagerank_parts [17.0, 8.7, 10.2, 21.9] s
+    back-to-back vs [7.5, 6.4, 7.3, 6.1] s with them). A failing step
+    is reported on stderr and never stops the caller."""
+    try:
+        release_caches()
+    except Exception as exc:  # noqa: BLE001 — cleanup must not end a run
+        print(f"warning: release_caches failed: {exc!r}", file=sys.stderr)
+    gc.collect()
+    try:
+        spark.sparkContext._jvm.System.gc()
+    except Exception as exc:  # noqa: BLE001 — cleanup must not end a run
+        print(f"warning: JVM GC failed: {exc!r}", file=sys.stderr)
+
+
+def median_of_reps(per_rep: list[float], extra_rep: bool) -> float:
+    """The robust location of one query's reps on a noisy host. An
+    even count takes the mean of the two middles, except when the
+    noise guard bought the extra rep (`extra_rep`): then the LOWER
+    middle, because the upper middle of [a, b, HIGH, HIGH] would hand
+    the result to a contended sample, the outcome the extra rep exists
+    to avoid (ADVICE r10). A plainly configured even count keeps the
+    true median; the lower middle would silently report the minimum."""
+    srt = sorted(per_rep)
+    n = len(srt)
+    if n % 2 == 1:
+        return srt[n // 2]
+    if extra_rep:
+        return srt[(n - 1) // 2]
+    return round((srt[n // 2 - 1] + srt[n // 2]) / 2, 3)
+
+
+def compact_line(out: dict, full_artifact: str | None) -> str:
+    """The stdout line for the full record `out`. The driver keeps
+    only the LAST 2000 bytes of stdout (BENCH_r06/r07 came back
+    "parsed": null when the full dict outgrew that window), so the
+    line carries the headline fields and a PINNED per-query set:
+    every COMPACT_PRIORITY name, then the other timed entries in run
+    order while the line stays within 1920 bytes (slack for a stray
+    trailing warning). If the pinned set alone overflows 1980 bytes,
+    the lowest-priority entries are shed, never the whole map."""
+    timings = out["queries"]
+    errors = out.get("errors", {})
+    n_hard = sum(1 for k in errors if k not in timings and k != WARM_UP)
+    compact = {
+        "metric": out["metric"],
+        "value": out["value"],
+        "valid": out["valid"],
+        "unit": "sec",
+        "sf": out["sf"],
+        "bench_reps": out["bench_reps"],
+        "n_queries": len(timings),
+        "full_artifact": full_artifact,
+        "cpu_marker_sec": out["cpu_marker_sec"],
+        "cpu_marker_mc_sec": out["cpu_marker_mc_sec"],
+        "min_total_sec": out["min_total_sec"],
+        "host_factor": out["host_factor"],
+        "host_factor_mc": out["host_factor_mc"],
+        "value_host_normalized": out["value_host_normalized"],
+        "queries": {},
+    }
+    if out["noisy_entries"]:
+        compact["n_noisy"] = len(out["noisy_entries"])
+    if n_hard:
+        compact["partial_total_sec"] = out["partial_total_sec"]
+        compact["n_errors"] = n_hard
+    # a degraded run (single-shot medians past the soft budget) must be
+    # distinguishable from a clean one, and soft errors (a fault after
+    # >= 1 clean rep) counted (ADVICE r8)
+    if out["budget_degraded"]:
+        compact["n_degraded"] = len(out["budget_degraded"])
+    if errors:
+        compact["n_errors_total"] = len(errors)
+    compact["queries_omitted"] = len(timings)  # placeholder for sizing
+    used = len(json.dumps(compact, separators=(",", ":")))
+    pinned = set(COMPACT_PRIORITY)
+    order = [n for n in COMPACT_PRIORITY if n in timings] + [
+        n for n in timings if n not in pinned
+    ]
+    for name in order:
+        frag = len(json.dumps({name: timings[name]},
+                              separators=(",", ":"))) - 1
+        if name not in pinned and used + frag > 1920:
+            break
+        compact["queries"][name] = timings[name]
+        used += frag
+    compact["queries_omitted"] = len(timings) - len(compact["queries"])
+    line = json.dumps(compact, separators=(",", ":"))
+    while len(line) > 1980 and compact["queries"]:
+        compact["queries"].pop(next(reversed(compact["queries"])))
+        compact["queries_omitted"] = len(timings) - len(compact["queries"])
+        line = json.dumps(compact, separators=(",", ":"))
+    return line
+
+
+def main(argv: list[str]) -> int:
+    unknown = [n for n in argv if n not in QUERIES]
+    if unknown:
+        print(f"bench.py: not catalog entries: {' '.join(unknown)}",
+              file=sys.stderr)
+        return 2
+    headline = not argv
+    names = HEADLINE if headline else list(dict.fromkeys(argv))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # machine-contention marker: loadavg BEFORE the run — a driver bench
     # sharing the box with other work showed 3-5x phantom regressions in
     # round 4, so contaminated runs must be detectable post-hoc
     load_start = os.getloadavg()
-    # absolute machine-speed marker: a fixed single-thread workload.
-    # Round-over-round per-query drift with IDENTICAL code (r6: 92.9 s
-    # idle total, r9: 133.2 s idle total, zero steal, zero plan change)
-    # was unfalsifiable because no artifact recorded how fast the box
-    # itself was that day; this pins it (observed 0.3-0.7 s). MEAN of
-    # 3 samples (not best-of): the marker's job here is to estimate the
-    # average contention the queries actually ran under, and a lucky
-    # quiet slice would read as an idle box while the queries were
-    # contended. Sampled again AFTER the run (below) for the same
-    # reason — the combined mean brackets the whole window.
-    cpu_marker = _cpu_marker_mean()
+    # The markers' MEAN (not best-of) is what is recorded: it must
+    # estimate the average contention the queries actually ran under,
+    # and a lucky quiet slice would read as an idle box. They are
+    # sampled again AFTER the run, so the mean brackets the window.
+    markers = _cpu_marker_samples(3)
     cpu_marker_mc = _cpu_marker_mc_mean()
+    # Spark's Python workers import the package too, and they read PYTHONPATH
+    os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.getenv("PYTHONPATH")]))
     spark = get_spark(app_name="bench")
     spark.sparkContext.setLogLevel("ERROR")
 
-    # warm the JVM + parquet footers with the cheapest query so per-query
-    # numbers measure execution, not session startup
-    QUERIES["pricing_summary"](spark, sf_dir).count()
-    # ... and the session's FIRST local-relation build (VERDICT r11 #1):
-    # the first createDataFrame pays ~1.9 s of Py4J/serializer init
-    # ONCE per session, and that cost lands on whichever headline query
-    # first builds a bound-relation (r11: histogram_quantiles rep 1
-    # read 3.7 s — isolated it runs 0.95 s; r10's countmin-family
-    # neighbors had absorbed it). Session startup, not execution —
-    # pre-pay it here.
-    spark.createDataFrame([(1,)], "warm int").count()
-
-    from data_engineering_bootcamp_spark.operators.dedup import release_caches
-
     # Fault isolation: one broken query must never zero the whole perf
     # signal (round 2's bench died at query 15 and emitted nothing).
-    # Failures are recorded per-query under "errors" and excluded from
-    # the total; the JSON line is ALWAYS printed.
-    reps = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
+    # Failures, the warm-up's included, are recorded under "errors" and
+    # excluded from the total; the JSON line is ALWAYS printed.
+    errors: dict[str, str] = {}
+    try:
+        warm(spark, sf_dir)
+    except Exception as exc:  # noqa: BLE001 — survive any fault
+        errors[WARM_UP] = f"{type(exc).__name__}: {exc}"[:500]
+    reps = max(1, env_number("SPARK_GRAFT_BENCH_REPS", 3))
     # Robustness guard: median-of-3 triples the wall clock, and a run
     # killed by an external timeout emits NO JSON at all (the round-2
     # failure mode). Past the soft budget the remaining queries drop to
     # single-shot — every query still gets timed, the artifact always
     # prints, and "budget_degraded" records which medians were lost.
-    budget = float(os.environ.get("SPARK_GRAFT_BENCH_BUDGET_SEC", "900"))
+    budget = env_number("SPARK_GRAFT_BENCH_BUDGET_SEC", 900.0)
     t_start = time.perf_counter()
     degraded: list[str] = []
     noisy: list[str] = []
     timings: dict[str, float] = {}
     mins: dict[str, float] = {}
     reps_out: dict[str, list[float]] = {}
-    errors: dict[str, str] = {}
-    for name in HEADLINE:
+    for name in names:
         fn = QUERIES[name]
         per_rep: list[float] = []
         n_reps = reps
@@ -368,44 +494,16 @@ def main() -> None:
             rep_i += 1
             t0 = time.perf_counter()
             try:
-                df = fn(spark, sf_dir)
-                # force full execution without driver-side collection
-                df.write.format("noop").mode("overwrite").save()
+                fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 per_rep.append(round(time.perf_counter() - t0, 3))
             except Exception as exc:  # noqa: BLE001 — survive any fault
-                # record the fault but KEEP any reps that already
-                # succeeded — discarding clean timings would make a
-                # transient last-rep fault erase the whole signal
+                # KEEP any reps that already succeeded: discarding clean
+                # timings would let a transient last-rep fault erase
+                # the whole signal
                 errors[name] = f"{type(exc).__name__}: {exc}"[:500]
                 break
             finally:
-                # release every cached and checkpointed block the query
-                # left behind so the session stays flat
-                try:
-                    release_caches()
-                except Exception:
-                    pass
-                # Measurement-hygiene fix (r16, guide §1): collect BOTH
-                # runtimes in the untimed gap between reps. Py4j frees
-                # JVM-side DataFrame/RDD handles lazily, so checkpoint
-                # blocks and shuffle state from rep N survived into rep
-                # N+1's timed window and surfaced as 2-5x spikes on the
-                # iterative queries (pagerank_parts measured
-                # [17.0, 8.7, 10.2, 21.9] s back-to-back vs
-                # [7.5, 6.4, 7.3, 6.1] s with this collection — same
-                # code). The timed region still contains every cost the
-                # query itself incurs, including its own GC pressure;
-                # what this removes is CROSS-QUERY contamination, the
-                # same class as the pre-paid first-createDataFrame init
-                # above. Old artifacts (BENCH_r15/earlier) were measured
-                # without it — see OPTIMIZATION_r16.md.
-                try:
-                    import gc as _gc
-
-                    _gc.collect()
-                    spark.sparkContext._jvm.System.gc()
-                except Exception:
-                    pass
+                settle(spark)
             # noise guardrail (VERDICT r9 #5): a >2x spread across reps
             # of identical code means at least one rep was contended
             # (r9 neardup_clusters: [7.3, 15.7, 6.1] moved the headline
@@ -421,31 +519,14 @@ def main() -> None:
             ):
                 n_reps += 1
                 noisy.append(name)
+        print(f"{name} {per_rep}", file=sys.stderr, flush=True)
         if per_rep:
-            # median: the robust location for 3 reps on a noisy host —
-            # one contended rep can no longer dominate the artifact.
-            # LOWER-middle for even counts ONLY when the noise
-            # guardrail bought the extra rep (ADVICE r10): there the
-            # upper-middle of [a, b, HIGH, HIGH] would hand the
-            # headline to a contended sample — the exact outcome the
-            # extra rep exists to avoid. For a plainly-configured even
-            # rep count (SPARK_GRAFT_BENCH_REPS=2) that rule would
-            # silently report the MINIMUM, an optimistic bias, so the
-            # true median (mean of the two middles) applies instead.
-            srt = sorted(per_rep)
-            n = len(srt)
-            if n % 2 == 1:
-                timings[name] = srt[n // 2]
-            elif name in noisy:
-                timings[name] = srt[(n - 1) // 2]
-            else:
-                timings[name] = round((srt[n // 2 - 1] + srt[n // 2]) / 2, 3)
+            timings[name] = median_of_reps(per_rep, name in noisy)
             reps_out[name] = per_rep
             mins[name] = min(per_rep)
 
-    # second marker batch AFTER the run; the combined mean estimates
-    # the average host speed across the whole bench window
-    cpu_marker = round((cpu_marker + _cpu_marker_mean()) / 2, 3)
+    markers += _cpu_marker_samples(3)
+    cpu_marker = round(statistics.fmean(markers), 3)
     cpu_marker_mc = round((cpu_marker_mc + _cpu_marker_mc_mean()) / 2, 3)
     # host-factor normalization (VERDICT r10 #3): BENCH_r10 on a
     # contended box read as a 16% regression that the idle twin showed
@@ -467,8 +548,7 @@ def main() -> None:
     _base_marker = None
     _base_marker_mc = None
     try:
-        with open(os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "GATECHECK_times.json")) as fh:
+        with open(os.path.join(ROOT, "GATECHECK_times.json")) as fh:
             _doc = json.load(fh)
         _base_marker = _doc.get("cpu_marker_mean") or _doc.get("cpu_marker")
         if _base_marker:
@@ -496,7 +576,7 @@ def main() -> None:
     # hard error = a query with ZERO successful reps (missing from the
     # total entirely); a transient fault after >= 1 clean rep keeps its
     # median and does not invalidate the headline number
-    hard_errors = {k: v for k, v in errors.items() if k not in timings}
+    hard_errors = [k for k in errors if k not in timings and k != WARM_UP]
     out = {
         "metric": "headline_queries_total_wall_sec",
         # A partial run's sum covers FEWER queries, so publishing it as
@@ -579,102 +659,33 @@ def main() -> None:
     if hard_errors:
         out["partial_total_sec"] = total
         out["partial_min_total_sec"] = round(sum(mins.values()), 3)
-    # Full artifact goes to a FILE; stdout gets a compact line. The
-    # driver records only the LAST 2000 bytes of stdout (BENCH_r06/r07
-    # both came back "parsed": null because the full dict outgrew that
-    # window), so the printed line must stay under ~2000 bytes:
-    # headline fields + the PINNED per-query set (COMPACT_PRIORITY;
-    # stable across rounds per VERDICT r16 #1), with the remainder
-    # counted and the complete set always in the file artifact.
-    full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                             "BENCH_full.json")
-    try:
-        with open(full_path, "w") as fh:
-            json.dump(out, fh, indent=1, sort_keys=True)
-        # per-core-count twin (VERDICT r16 #1): the driver's scaling
-        # run (lower $SPARK_GRAFT_CPUS) OVERWRITES BENCH_full.json, so
-        # the 32-core full artifact was lost every round; the suffixed
-        # copy preserves each core count's full per-rep record
-        cpus_n = graft_cpus()
-        with open(full_path.replace(".json", f"_c{cpus_n}.json"),
-                  "w") as fh:
-            json.dump(out, fh, indent=1, sort_keys=True)
-    except OSError as exc:
-        # the full dict carries loadavg / per-rep timings / error
-        # messages — losing it silently would defeat contaminated-run
-        # detection, so leave a visible trace (ADVICE r8)
-        print(f"WARNING: BENCH_full.json write failed ({exc}); "
-              "per-rep timings and loadavg lost", file=sys.stderr)
-        full_path = None
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "valid": out["valid"],
-        "unit": "sec",
-        "sf": out["sf"],
-        "bench_reps": reps,
-        "n_queries": len(timings),
-        "full_artifact": "BENCH_full.json" if full_path else None,
-        "cpu_marker_sec": cpu_marker,
-        "cpu_marker_mc_sec": cpu_marker_mc,
-        "min_total_sec": out["min_total_sec"],
-        "host_factor": host_factor,
-        "host_factor_mc": host_factor_mc,
-        "value_host_normalized": out["value_host_normalized"],
-        "queries": {},
-    }
-    if noisy:
-        compact["n_noisy"] = len(noisy)
-    if hard_errors:
-        compact["partial_total_sec"] = total
-        compact["n_errors"] = len(hard_errors)
-    # a degraded run (single-shot medians past the soft budget) must be
-    # distinguishable from a clean one in the recorded stdout, and soft
-    # errors (transient fault after >=1 clean rep) counted (ADVICE r8)
-    if degraded:
-        compact["n_degraded"] = len(degraded)
-    if errors:
-        compact["n_errors_total"] = len(errors)
-    # Line budget: the driver keeps the LAST 2000 bytes of stdout, so
-    # the constraint is line length + trailing bytes <= 2000 (bytes
-    # BEFORE the line fall off the front harmlessly — r14-r16 lines of
-    # ~1950 bytes all parsed). 1920 leaves slack for a stray trailing
-    # warning. Selection is PINNED (COMPACT_PRIORITY — see its
-    # comment): the r16-printed names always print, then remaining
-    # headline entries in catalog order fill the leftover budget, so
-    # the printed set is a stable superset round-over-round and the
-    # driver's phantom `dropped_from_bench` class is closed.
-    budget_bytes = 1920
-    compact["queries_omitted"] = len(timings)  # placeholder for sizing
-    fixed = len(json.dumps(compact, separators=(",", ":")))
-    used = fixed
-    pinned = set(COMPACT_PRIORITY)
-    order = [n for n in COMPACT_PRIORITY if n in timings] + [
-        n for n in HEADLINE if n in timings and n not in pinned
-    ]
-    for name in order:
-        frag = len(json.dumps({name: timings[name]},
-                              separators=(",", ":"))) - 1
-        if name not in pinned and used + frag > budget_bytes:
-            break
-        compact["queries"][name] = timings[name]
-        used += frag
-    compact["queries_omitted"] = len(timings) - len(compact["queries"])
-    line = json.dumps(compact, separators=(",", ":"))
-    # belt-and-braces: never risk the head of the line leaving the
-    # driver's tail window — shed the LOWEST-priority entries first
-    # (never the whole map, which would zero the per-query signal)
-    while len(line) > 1980 and compact["queries"]:
-        compact["queries"].pop(next(reversed(compact["queries"])))
-        compact["queries_omitted"] = len(timings) - len(compact["queries"])
-        line = json.dumps(compact, separators=(",", ":"))
-    print(line)
+    full_artifact = None
+    if headline:
+        full_path = os.path.join(ROOT, "BENCH_full.json")
+        try:
+            with open(full_path, "w") as fh:
+                json.dump(out, fh, indent=1, sort_keys=True)
+            # per-core-count twin (VERDICT r16 #1): the driver's scaling
+            # run (lower $SPARK_GRAFT_CPUS) OVERWRITES BENCH_full.json,
+            # so the suffixed copy keeps each core count's full record
+            with open(full_path.replace(".json", f"_c{graft_cpus()}.json"),
+                      "w") as fh:
+                json.dump(out, fh, indent=1, sort_keys=True)
+            full_artifact = "BENCH_full.json"
+        except OSError as exc:
+            # the full dict carries loadavg / per-rep timings / error
+            # messages — losing it silently would defeat contaminated-run
+            # detection, so leave a visible trace (ADVICE r8)
+            print(f"WARNING: BENCH_full.json write failed ({exc}); "
+                  "per-rep timings and loadavg lost", file=sys.stderr)
+    print(compact_line(out, full_artifact))
     spark.stop()
     # Always exit 0: the driver records this process's stdout as the
     # round's bench evidence, and a nonzero rc risks the whole JSON
     # being discarded (round 2 lost all numbers to rc=1). Per-query
     # failures are visible in the "errors" field instead.
+    return 0
 
 
 if __name__ == "__main__":
-    sys.exit(main())
+    sys.exit(main(sys.argv[1:]))

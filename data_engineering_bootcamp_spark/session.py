@@ -21,17 +21,26 @@ import sys
 from pyspark.sql import SparkSession
 
 
-def graft_cpus() -> int:
-    """``$SPARK_GRAFT_CPUS`` as an int, 32 when unset. A value that is
-    not an integer is reported on stderr and read as 32, so a typo
-    cannot stop an import."""
-    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+def env_number(name: str, default: int | float) -> int | float:
+    """``$name`` parsed as the type of ``default`` (int or float),
+    ``default`` when unset. A value that does not parse is reported on
+    stderr and read as ``default``, so a typo cannot stop an import or
+    a bench run."""
+    raw = os.environ.get(name)
+    if raw is None:
+        return default
     try:
-        return int(raw)
+        return type(default)(raw)
     except ValueError:
-        print(f"warning: SPARK_GRAFT_CPUS={raw!r} is not an integer; using 32",
+        kind = "an integer" if isinstance(default, int) else "a number"
+        print(f"warning: {name}={raw!r} is not {kind}; using {default}",
               file=sys.stderr)
-        return 32
+        return default
+
+
+def graft_cpus() -> int:
+    """``$SPARK_GRAFT_CPUS`` as an int, 32 when unset or not an integer."""
+    return env_number("SPARK_GRAFT_CPUS", 32)
 
 
 DEFAULT_SHUFFLE_PARTITIONS = graft_cpus()

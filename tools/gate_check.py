@@ -67,17 +67,19 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too, and they read PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.getenv("PYTHONPATH")]))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
-from data_engineering_bootcamp_spark.operators.dedup import release_caches  # noqa: E402
+from bench import _cpu_marker_mc_mean, _cpu_marker_samples, settle  # noqa: E402
 from data_engineering_bootcamp_spark.session import graft_cpus  # noqa: E402
 from tests.oracle_harness import compare, duck_con  # noqa: E402
 
-TIMES_PATH = os.path.join(os.path.dirname(__file__), "..",
-                          "GATECHECK_times.json")
+TIMES_PATH = os.path.join(ROOT, "GATECHECK_times.json")
 PERF_RATIO = 2.0      # fail when now > ratio x baseline ...
 PERF_FLOOR_SEC = 1.0  # ... and the BASELINE is at least this long
 PERF_ABS_SEC = 5.0    # sub-floor entries still flag above this time
@@ -90,29 +92,6 @@ PERF_ABS_SEC = 5.0    # sub-floor entries still flag above this time
 
 
 HOST_FACTOR_CAP = 2.0  # loosen the perf threshold at most this much
-
-
-def _cpu_marker(samples: int = 3) -> tuple[float, float]:
-    """Fixed-work single-thread marker (bench.py's cpu_marker_sec).
-
-    Returns (best, mean) of N samples. Best-of-N (ADVICE r9) feeds THIS
-    tool's host_factor: the marker MULTIPLIES the perf-gate threshold —
-    one transiently contended sample (GC, cold interpreter, noisy
-    neighbor) would silently loosen the regression gate for the whole
-    run, so the minimum is the least contended estimate of the box's
-    true speed. The MEAN is recorded alongside it in the baseline file
-    (ADVICE r11): bench.py's marker is a mean (it must track average
-    contention across the bench window), and dividing a mean by a
-    best-of floor baked a constant ~5% inflation into host_factor —
-    the like-for-like estimator removes it."""
-    times = []
-    for _ in range(samples):
-        t0 = time.perf_counter()
-        x = 0
-        for i in range(10_000_000):
-            x += i
-        times.append(time.perf_counter() - t0)
-    return round(min(times), 3), round(sum(times) / len(times), 3)
 
 
 def main() -> int:
@@ -165,7 +144,14 @@ def main() -> int:
                 base_marker = doc.get("cpu_marker")
         except Exception:
             prev = {}
-    cur_marker, cur_marker_mean = _cpu_marker()
+    # Best-of-3 (ADVICE r9) feeds THIS tool's host_factor: the marker
+    # MULTIPLIES the perf threshold, so one transiently contended
+    # sample would silently loosen the gate for the whole run. The mean
+    # is stored next to it (ADVICE r11): bench.py's marker is a mean,
+    # and dividing a mean by a best-of floor inflates host_factor ~5%.
+    samples = _cpu_marker_samples(3)
+    cur_marker = round(min(samples), 3)
+    cur_marker_mean = round(sum(samples) / len(samples), 3)
     host_factor = 1.0
     if base_marker:
         host_factor = max(1.0, cur_marker / base_marker)
@@ -391,20 +377,9 @@ def main() -> int:
             + ("" if ok else f"  {problems[0][:200]}"),
             flush=True,
         )
-        # untimed-gap cleanup (r16, same as bench.py): entry N's cached
-        # and checkpointed blocks are released here, and py4j frees JVM
-        # handles lazily, so without the collections entry N's shuffle
-        # garbage lands in entry N+1's timed window — the cross-entry
-        # contamination behind sporadic 2-5x one-off SLOW flags on
-        # iterative entries deep into a 151-entry run
-        try:
-            import gc as _gc
-
-            release_caches()
-            _gc.collect()
-            spark.sparkContext._jvm.System.gc()
-        except Exception:  # noqa: BLE001 — hygiene must never fail the gate
-            pass
+        # entry N's cached blocks and lazily freed JVM garbage must not
+        # land in entry N+1's timed window
+        settle(spark)
     print(json.dumps({k: v["ok"] for k, v in results.items()}))
     print(f"\n{len(results) - n_fail}/{len(results)} pass")
     if perf_fails:
@@ -420,8 +395,6 @@ def main() -> int:
         # sampled here so --update-times on an idle host pins BOTH
         # the single-thread and the full-width speed of the box
         try:
-            from bench import _cpu_marker_mc_mean
-
             marker_mc = _cpu_marker_mc_mean()
         except Exception:  # noqa: BLE001 — marker must never fail the gate
             marker_mc = None
@@ -481,7 +454,7 @@ def main() -> int:
             )
         n_hist = max((len(v) for v in runs.values()), default=0)
         print(
-            f"baseline updated: {os.path.normpath(TIMES_PATH)} "
+            f"baseline updated: {TIMES_PATH} "
             f"(median of <= {n_hist} clean runs per entry)"
         )
     if n_fail:

@@ -11,11 +11,15 @@ final plan); the relative numbers are what the audit tracks.
 from __future__ import annotations
 
 import io
+import os
 import re
 import sys
 from contextlib import redirect_stdout
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too, and they read PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.getenv("PYTHONPATH")]))
 
 from data_engineering_bootcamp_spark.plans.catalog import QUERIES  # noqa: E402
 from data_engineering_bootcamp_spark.session import get_spark  # noqa: E402

@@ -29,10 +29,14 @@ Writes one JSON document (default BENCH_scale_r06.json).
 from __future__ import annotations
 
 import json
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+# Spark's Python workers import the package too, and they read PYTHONPATH
+os.environ["PYTHONPATH"] = os.pathsep.join(filter(None, [ROOT, os.getenv("PYTHONPATH")]))
 
 from pyspark.sql import functions as F  # noqa: E402
 
