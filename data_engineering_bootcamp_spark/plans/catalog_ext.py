@@ -11,6 +11,7 @@ string renderings, identical aliases on both engines).
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -28,14 +29,15 @@ from ..operators.multimodal import (
     stdlib_decode_kernel,
 )
 from ..operators.scd import scd_from_snapshots, scd_incremental
-from .catalog_write import _snapshot
+from .catalog_write import _events_file_stream, _snapshot
 from ..operators.similarity import (
     cosine_topk_ivf,
     neardup_embedding_cosine,
     semantic_dedup,
 )
-from ..sources.readers import load_table, normalize_ts
+from ..sources.readers import load_table
 from ..streaming.pipelines import sliding_counts, tumbling_counts
+from ..streaming.sinks import drain
 
 JAN = "2024-01-01"
 
@@ -994,46 +996,8 @@ def q_streaming_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch: the oracle is the same SQL that checks the batch analog
     (`tumbling_hits`), so this entry proves the streaming path produces
     byte-identical aggregates, state store and all."""
-    # footer-inferred schema probe under nanosAsLong (set here so the
-    # probe works under any caller-provided session); ts is then
-    # normalized by dtype exactly like the batch reader — the testdata
-    # has shipped both int64-nanos and MICROS-NTZ encodings, so the
-    # conversion must branch, not assume (readers.normalize_ts).
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # the file-stream source lists a DIRECTORY; the testdata table is a
-    # single parquet file, so expose it through a temp-dir symlink
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
-    d = tempfile.mkdtemp(prefix="stream_gate_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-    stream = spark.readStream.schema(schema).format("parquet").load(d)
-    stream = normalize_ts(spark, stream)
-    agg = tumbling_counts(stream, keys=["event_type"])
-    # unique sink name per invocation: two concurrent runs on one session
-    # must not collide on the memory-sink table
-    name = f"stream_tumbling_gate_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        q.stop()
-    finally:
-        # memory sink rows live in the session, not the temp dir — safe
-        # to remove the symlinked source immediately after termination
-        shutil.rmtree(d, ignore_errors=True)
-    return spark.table(name).select(
-        utc_ts_str("window_start").alias("window_start"),
-        "event_type",
-        "num_hits",
+    return _memory_sink_hits(
+        spark, sf_dir, lambda s: tumbling_counts(s, keys=["event_type"])
     )
 
 
@@ -1055,32 +1019,15 @@ def q_streaming_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     Stream-equals-batch: the oracle replays the hop as each event
     contributing to its 5-minute bucket's window AND the one starting
     5 minutes earlier."""
-    import uuid
-
-    stream, cleanup = _events_file_stream(spark, sf_dir)
-    agg = sliding_counts(
-        stream,
-        keys=["event_type"],
-        window_duration="10 minutes",
-        slide_duration="5 minutes",
-    )
-    name = f"stream_sliding_gate_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        q.stop()
-    finally:
-        cleanup()
-    return spark.table(name).select(
-        utc_ts_str("window_start").alias("window_start"),
-        "event_type",
-        "num_hits",
+    return _memory_sink_hits(
+        spark,
+        sf_dir,
+        lambda s: sliding_counts(
+            s,
+            keys=["event_type"],
+            window_duration="10 minutes",
+            slide_duration="5 minutes",
+        ),
     )
 
 
@@ -1099,25 +1046,39 @@ FROM x GROUP BY 1, 2
 """
 
 
-def _events_file_stream(spark: SparkSession, sf_dir: str):
-    """Shared scaffold for the streaming gate entries: expose the
-    single-file events table through a temp-dir symlink (the file-stream
-    source lists a directory) with the same dtype-branched ts
-    normalization as the batch reader (readers.normalize_ts — the
-    testdata has shipped both int64-nanos and MICROS-NTZ encodings).
-    Returns (stream_df, cleanup_fn)."""
-    import os
-    import shutil
-    import tempfile
+def _memory_sink_hits(
+    spark: SparkSession,
+    sf_dir: str,
+    window_counts: Callable[[DataFrame], DataFrame],
+) -> DataFrame:
+    """Body of the two memory-sink gate entries: the events file stream
+    through `window_counts`, drained in complete mode into a memory
+    sink. The sink's temp view is dropped before returning, whether
+    the run succeeds or fails; the returned frame's plan is analyzed
+    already and holds the sink's rows, so it outlives the view."""
+    import uuid
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    d = tempfile.mkdtemp(prefix="stream_gate_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{d}/events.parquet")
-    stream = normalize_ts(
-        spark, spark.readStream.schema(schema).format("parquet").load(d)
-    )
-    return stream, lambda: shutil.rmtree(d, ignore_errors=True)
+    # unique sink name per invocation: two concurrent runs on one session
+    # must not collide on the memory-sink table
+    name = f"stream_gate_{uuid.uuid4().hex[:8]}"
+    with tempfile.TemporaryDirectory(
+        prefix="stream_gate_", ignore_cleanup_errors=True
+    ) as d:
+        agg = window_counts(_events_file_stream(spark, sf_dir, d))
+        try:
+            drain(
+                agg.writeStream.format("memory")
+                .queryName(name)
+                .outputMode("complete"),
+                f"{d}/ckpt",
+            )
+            return spark.table(name).select(
+                utc_ts_str("window_start").alias("window_start"),
+                "event_type",
+                "num_hits",
+            )
+        finally:
+            spark.catalog.dropTempView(name)
 
 
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1132,32 +1093,24 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     state machinery. The oracle recomputes the sessions as batch
     gaps-and-islands SQL with Spark's session semantics: a gap >= 30min
     breaks, session_end = last event + gap."""
-    import tempfile
-    import uuid
-
     from ..streaming.pipelines import sessionize_stream
 
-    stream, cleanup = _events_file_stream(spark, sf_dir)
-    sess = sessionize_stream(
-        stream.where(F.col("user_id").isNotNull()),
-        keys=["user_id"],
-        gap="30 minutes",
-        watermark="1 second",
-    )
-    out = tempfile.mkdtemp(prefix="stream_sess_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_sess_ckpt_")
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .queryName(f"stream_sessions_{uuid.uuid4().hex[:8]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        q.stop()
+    with tempfile.TemporaryDirectory(
+        prefix="stream_sess_", ignore_cleanup_errors=True
+    ) as d:
+        stream = _events_file_stream(spark, sf_dir, d)
+        sess = sessionize_stream(
+            stream.where(F.col("user_id").isNotNull()),
+            keys=["user_id"],
+            gap="30 minutes",
+            watermark="1 second",
+        )
+        drain(
+            sess.writeStream.format("parquet")
+            .option("path", f"{d}/out")
+            .outputMode("append"),
+            f"{d}/ckpt",
+        )
         max_ts = (
             load_table(spark, sf_dir, "events")
             .where(F.col("user_id").isNotNull())
@@ -1166,7 +1119,7 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             .m
         )
         got = (
-            spark.read.parquet(out)
+            spark.read.parquet(f"{d}/out")
             .where(
                 F.col("session_end")
                 < F.lit(max_ts) - F.expr("INTERVAL 1 HOUR")
@@ -1179,12 +1132,6 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _snapshot(got)
-    finally:
-        cleanup()
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 ORACLE_STREAMING_SESSIONS = """
@@ -1218,28 +1165,21 @@ def q_streaming_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     through the batch writer API) into parquet, read the sink back, and
     aggregate. Checkpointed, availableNow. The oracle aggregates the
     raw table: the sink must contain exactly the input rows."""
-    import tempfile
+    with tempfile.TemporaryDirectory(
+        prefix="stream_fb_", ignore_cleanup_errors=True
+    ) as d:
+        stream = _events_file_stream(spark, sf_dir, d)
 
-    from ..streaming.sinks import start_foreach_batch
+        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode("append").parquet(f"{d}/out")
 
-    stream, cleanup = _events_file_stream(spark, sf_dir)
-    out = tempfile.mkdtemp(prefix="stream_fb_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_fb_ckpt_")
-
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
-
-    q = start_foreach_batch(
-        stream.select("event_id", "event_type", "user_id"),
-        write_batch,
-        checkpoint=ckpt,
-        available_now=True,
-    )
-    try:
-        q.awaitTermination()
-        q.stop()
+        drain(
+            stream.select("event_id", "event_type", "user_id")
+            .writeStream.foreachBatch(write_batch),
+            f"{d}/ckpt",
+        )
         got = (
-            spark.read.parquet(out)
+            spark.read.parquet(f"{d}/out")
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -1247,12 +1187,6 @@ def q_streaming_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _snapshot(got)
-    finally:
-        cleanup()
-        import shutil
-
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 ORACLE_STREAMING_FOREACHBATCH = """
@@ -1272,39 +1206,24 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     parquet with a checkpoint, and aggregated batch-side. The oracle
     aggregates the RAW single-copy table: the gate passes only if the
     streaming dedup returns exactly the original rows, duplicate-free."""
-    import os
-    import shutil
-    import tempfile
-
     from ..streaming.pipelines import dedup_stream
-    from ..streaming.sinks import start_foreach_batch
 
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    d = tempfile.mkdtemp(prefix="stream_dedup_src_")
-    os.symlink(f"{sf_dir}/events.parquet", f"{d}/events_a.parquet")
-    os.symlink(f"{sf_dir}/events.parquet", f"{d}/events_b.parquet")
-    stream = normalize_ts(
-        spark, spark.readStream.schema(schema).format("parquet").load(d)
-    )
-    deduped = dedup_stream(stream, keys=["event_id"], watermark="1 hour")
-    out = tempfile.mkdtemp(prefix="stream_dedup_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_dedup_ckpt_")
+    with tempfile.TemporaryDirectory(
+        prefix="stream_dedup_", ignore_cleanup_errors=True
+    ) as d:
+        stream = _events_file_stream(spark, sf_dir, d, copies=2)
+        deduped = dedup_stream(stream, keys=["event_id"], watermark="1 hour")
 
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        batch_df.write.mode("append").parquet(out)
+        def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+            batch_df.write.mode("append").parquet(f"{d}/out")
 
-    q = start_foreach_batch(
-        deduped.select("event_id", "event_type", "user_id", "value"),
-        write_batch,
-        checkpoint=ckpt,
-        available_now=True,
-    )
-    try:
-        q.awaitTermination()
-        q.stop()
+        drain(
+            deduped.select("event_id", "event_type", "user_id", "value")
+            .writeStream.foreachBatch(write_batch),
+            f"{d}/ckpt",
+        )
         got = (
-            spark.read.parquet(out)
+            spark.read.parquet(f"{d}/out")
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -1314,10 +1233,6 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _snapshot(got)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 ORACLE_STREAMING_DEDUP = """
@@ -1341,10 +1256,6 @@ def q_streaming_kafka_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
     the raw table, so any encode/decode corruption (types, nulls,
     timestamp precision at second granularity, double formatting)
     breaks the hash match."""
-    import shutil
-    import tempfile
-    import uuid
-
     from pyspark.sql.types import (
         DoubleType,
         LongType,
@@ -1364,27 +1275,22 @@ def q_streaming_kafka_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
             StructField("value", DoubleType()),
         ]
     )
-    stream, cleanup = _events_file_stream(spark, sf_dir)
-    payload = stream.select(F.to_json(F.struct(*cols)).alias("value"))
-    decoded = payload.select(
-        F.from_json(F.col("value"), schema).alias("j")
-    ).select("j.*")
-    out = tempfile.mkdtemp(prefix="stream_kafka_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_kafka_ckpt_")
-    q = (
-        decoded.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .queryName(f"stream_kafka_mirror_{uuid.uuid4().hex[:8]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        q.stop()
+    with tempfile.TemporaryDirectory(
+        prefix="stream_kafka_", ignore_cleanup_errors=True
+    ) as d:
+        stream = _events_file_stream(spark, sf_dir, d)
+        payload = stream.select(F.to_json(F.struct(*cols)).alias("value"))
+        decoded = payload.select(
+            F.from_json(F.col("value"), schema).alias("j")
+        ).select("j.*")
+        drain(
+            decoded.writeStream.format("parquet")
+            .option("path", f"{d}/out")
+            .outputMode("append"),
+            f"{d}/ckpt",
+        )
         got = (
-            spark.read.parquet(out)
+            spark.read.parquet(f"{d}/out")
             .groupBy("event_type")
             .agg(
                 F.count(F.lit(1)).alias("n_events"),
@@ -1395,10 +1301,6 @@ def q_streaming_kafka_mirror(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _snapshot(got)
-    finally:
-        cleanup()
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 ORACLE_STREAMING_KAFKA_MIRROR = """
@@ -1426,36 +1328,29 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     the operator's merge rule exactly: events merge while the gap is
     <= 30 minutes (strictly-greater breaks), session_end = last event.
     """
-    import shutil
-    import tempfile
-    import uuid
-
     from ..streaming.stateful import sessionize_stateful
 
-    stream, cleanup = _events_file_stream(spark, sf_dir)
-    keyed = (
-        stream.where(F.col("user_id").isNotNull())
-        .select(
-            F.col("user_id").cast("string").alias("ip"),
-            F.col("event_type").alias("host"),
-            "ts",
+    with tempfile.TemporaryDirectory(
+        prefix="stream_state_", ignore_cleanup_errors=True
+    ) as d:
+        keyed = (
+            _events_file_stream(spark, sf_dir, d)
+            .where(F.col("user_id").isNotNull())
+            .select(
+                F.col("user_id").cast("string").alias("ip"),
+                F.col("event_type").alias("host"),
+                "ts",
+            )
         )
-    )
-    sess = sessionize_stateful(keyed, gap_seconds=1800, watermark="1 second")
-    out = tempfile.mkdtemp(prefix="stream_state_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_state_ckpt_")
-    q = (
-        sess.writeStream.format("parquet")
-        .option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append")
-        .queryName(f"stream_stateful_{uuid.uuid4().hex[:8]}")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-        q.stop()
+        sess = sessionize_stateful(
+            keyed, gap_seconds=1800, watermark="1 second"
+        )
+        drain(
+            sess.writeStream.format("parquet")
+            .option("path", f"{d}/out")
+            .outputMode("append"),
+            f"{d}/ckpt",
+        )
         max_ts = (
             load_table(spark, sf_dir, "events")
             .where(F.col("user_id").isNotNull())
@@ -1464,7 +1359,7 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             .m
         )
         got = (
-            spark.read.parquet(out)
+            spark.read.parquet(f"{d}/out")
             .where(
                 F.col("session_end")
                 < F.lit(max_ts) - F.expr("INTERVAL 1 HOUR")
@@ -1478,10 +1373,6 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
         return _snapshot(got)
-    finally:
-        cleanup()
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 ORACLE_STREAMING_STATEFUL = """
@@ -1621,9 +1512,6 @@ def q_streaming_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame
     recomputes the admission decision exhaustively (all incoming ×
     corpus pairs) — LSH banding must be recall-complete on this corpus,
     the same falsifiable contract `minhash_lsh_pairs` is held to."""
-    import shutil
-    import tempfile
-
     from ..operators.dedup import _intersect_size_udf, minhash_banded
 
     docs = _t(spark, sf_dir, "documents")
@@ -1637,63 +1525,58 @@ def q_streaming_neardup_admission(spark: SparkSession, sf_dir: str) -> DataFrame
         "band_hash",
     ).persist()
 
-    src = tempfile.mkdtemp(prefix="stream_adm_src_")
-    out = tempfile.mkdtemp(prefix="stream_adm_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_adm_ckpt_")
-    try:
-        incoming.select("doc_id", "text").write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = spark.readStream.schema(schema).format("parquet").load(src)
-        cand = minhash_banded(stream).join(
-            static_banded, ["band", "band_hash"]
-        )
-        inter = _intersect_size_udf()(
-            F.col("shingles"), F.col("corpus_shingles")
-        ).cast("double")
-        union = (
-            F.size("shingles") + F.size("corpus_shingles") - inter
-        ).cast("double")
-        matched = (
-            cand.withColumn("_j", F.round(inter / union, 6))
-            .where(F.col("_j") >= 0.8)
-            .select("doc_id", "corpus_id")
-        )
-        # seed the sink with the schema so an all-admitted run still
-        # yields a readable (empty) matches table
-        spark.createDataFrame([], "doc_id long, corpus_id long").write.mode(
-            "overwrite"
-        ).parquet(out)
-
-        q = (
-            matched.writeStream.foreachBatch(
-                lambda b, _i: b.write.mode("append").parquet(out)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_adm_", ignore_cleanup_errors=True
+    ) as d:
+        src, out = f"{d}/src", f"{d}/out"
+        try:
+            incoming.select("doc_id", "text").write.parquet(src)
+            schema = spark.read.parquet(src).schema
+            stream = (
+                spark.readStream.schema(schema).format("parquet").load(src)
             )
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        q.stop()
+            cand = minhash_banded(stream).join(
+                static_banded, ["band", "band_hash"]
+            )
+            inter = _intersect_size_udf()(
+                F.col("shingles"), F.col("corpus_shingles")
+            ).cast("double")
+            union = (
+                F.size("shingles") + F.size("corpus_shingles") - inter
+            ).cast("double")
+            matched = (
+                cand.withColumn("_j", F.round(inter / union, 6))
+                .where(F.col("_j") >= 0.8)
+                .select("doc_id", "corpus_id")
+            )
+            # seed the sink with the schema so an all-admitted run still
+            # yields a readable (empty) matches table
+            spark.createDataFrame(
+                [], "doc_id long, corpus_id long"
+            ).write.parquet(out)
+            drain(
+                matched.writeStream.foreachBatch(
+                    lambda b, _i: b.write.mode("append").parquet(out)
+                ),
+                f"{d}/ckpt",
+            )
 
-        matches = spark.read.parquet(out).dropDuplicates()
-        per_doc = incoming.select("doc_id").join(
-            matches.groupBy("doc_id").agg(
-                F.countDistinct("corpus_id").alias("n_neardups")
-            ),
-            "doc_id",
-            "left",
-        )
-        got = per_doc.select(
-            "doc_id",
-            F.coalesce("n_neardups", F.lit(0)).alias("n_neardups"),
-            (F.coalesce("n_neardups", F.lit(0)) == 0).alias("admitted"),
-        )
-        return _snapshot(got)
-    finally:
-        static_banded.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            matches = spark.read.parquet(out).dropDuplicates()
+            per_doc = incoming.select("doc_id").join(
+                matches.groupBy("doc_id").agg(
+                    F.countDistinct("corpus_id").alias("n_neardups")
+                ),
+                "doc_id",
+                "left",
+            )
+            got = per_doc.select(
+                "doc_id",
+                F.coalesce("n_neardups", F.lit(0)).alias("n_neardups"),
+                (F.coalesce("n_neardups", F.lit(0)) == 0).alias("admitted"),
+            )
+            return _snapshot(got)
+        finally:
+            static_banded.unpersist()
 
 
 ORACLE_STREAMING_NEARDUP_ADMISSION = r"""

@@ -29,6 +29,7 @@ error sums) are documented on the operators.
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -37,6 +38,8 @@ from pyspark.sql import functions as F
 from ..functions.datelist import utc_date, utc_date_of_ts, utc_ts_str
 from ..operators.dedup import _tokens
 from ..sources.readers import load_table
+from ..streaming.sinks import drain
+from .catalog_write import _events_file_stream, _snapshot, _staged_stream
 
 _LANGS = ["de", "en", "es", "fr", "zh"]
 
@@ -448,21 +451,12 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     so one availableNow pass over the finite source produces the
     complete join and the batch-SQL oracle is exact. See
     `streaming.pipelines.interval_join_streams`."""
-    import shutil
-    import tempfile
-    import uuid
-
     from ..streaming.pipelines import interval_join_streams
-    from .catalog_ext import _events_file_stream
-    from .catalog_write import _snapshot
 
-    stream, cleanup = _events_file_stream(spark, sf_dir)
-    # everything past this point runs inside try/finally: a failure in
-    # plan construction or .start() (analysis errors surface at start
-    # time) must still release the stream-source symlink dir and any
-    # temp dirs already created
-    out = ckpt = None
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ssj_", ignore_cleanup_errors=True
+    ) as d:
+        stream = _events_file_stream(spark, sf_dir, d)
         clicks = stream.where(
             (F.col("event_type") == "click") & F.col("user_id").isNotNull()
         ).select("user_id", F.col("event_id").alias("click_id"), "ts")
@@ -490,26 +484,13 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "secs_after"
             ),
         )
-        out = tempfile.mkdtemp(prefix="stream_ssj_out_")
-        ckpt = tempfile.mkdtemp(prefix="stream_ssj_ckpt_")
-        q = (
+        drain(
             joined.writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .queryName(f"stream_ssj_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
+            .option("path", f"{d}/out")
+            .outputMode("append"),
+            f"{d}/ckpt",
         )
-        q.awaitTermination()
-        q.stop()
-        return _snapshot(spark.read.parquet(out))
-    finally:
-        cleanup()
-        if out is not None:
-            shutil.rmtree(out, ignore_errors=True)
-        if ckpt is not None:
-            shutil.rmtree(ckpt, ignore_errors=True)
+        return _snapshot(spark.read.parquet(f"{d}/out"))
 
 
 ORACLE_STREAMING_INTERVAL_JOIN = """
@@ -610,56 +591,30 @@ def q_streaming_upsert_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     final store is independent of micro-batch boundaries, so the batch
     argmax oracle is exact; the multi-batch split proves the MERGE path
     (read store + combine + swap), not just a single-batch write."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..streaming.sinks import upsert_batch_writer
-    from .catalog_write import _snapshot
 
     ev = (
         _t(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .select("event_id", "ts", "user_id", "event_type")
     )
-    # all temp dirs are created inside the try so a failure anywhere —
-    # the source write, stream construction, or .start() — still
-    # reaches the finally and removes whatever was already made
-    src = store = ckpt = None
-    try:
-        src = tempfile.mkdtemp(prefix="stream_upsert_src_")
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        store = tempfile.mkdtemp(prefix="stream_upsert_store_")
-        ckpt = tempfile.mkdtemp(prefix="stream_upsert_ckpt_")
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
+    with tempfile.TemporaryDirectory(
+        prefix="stream_upsert_", ignore_cleanup_errors=True
+    ) as d:
+        store = f"{d}/store"
+        drain(
+            _staged_stream(spark, ev, f"{d}/src").writeStream.foreachBatch(
                 upsert_batch_writer(store, ["user_id"], ["ts", "event_id"])
-            )
-            .option("checkpointLocation", ckpt)
-            .queryName(f"stream_upsert_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            f"{d}/ckpt",
         )
-        q.awaitTermination()
-        q.stop()
-        got = spark.read.parquet(os.path.join(store, "live")).select(
+        got = spark.read.parquet(f"{store}/live").select(
             "user_id",
             F.col("event_id").alias("last_event_id"),
             F.col("event_type").alias("last_event_type"),
             utc_ts_str("ts").alias("last_ts"),
         )
         return _snapshot(got)
-    finally:
-        for d in (src, store, ckpt):
-            if d is not None:
-                shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_STREAMING_UPSERT_SINK = """
@@ -1672,45 +1627,27 @@ def q_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle replays the sketch over ALL rows at once and reads the top
     users' estimates beside their exact counts; the multi-batch split
     proves the read-merge-swap path, not just one write."""
-    import os
-    import shutil
-    import tempfile
-    import uuid
-
     from ..operators.sketch import countmin_estimates
     from ..streaming.sinks import countmin_merge_batch_writer
-    from .catalog_write import _snapshot
 
     ev = (
         _t(spark, sf_dir, "events")
         .where(F.col("user_id").isNotNull())
         .select("event_id", "user_id")
     )
-    src = tempfile.mkdtemp(prefix="stream_cm_src_")
-    store = tempfile.mkdtemp(prefix="stream_cm_store_")
-    ckpt = tempfile.mkdtemp(prefix="stream_cm_ckpt_")
-    try:
-        ev.repartition(4).write.mode("overwrite").parquet(src)
-        stream = (
-            spark.readStream.schema(ev.schema)
-            .option("maxFilesPerTrigger", 1)
-            .format("parquet")
-            .load(src)
-        )
-        q = (
-            stream.writeStream.foreachBatch(
+    with tempfile.TemporaryDirectory(
+        prefix="stream_cm_", ignore_cleanup_errors=True
+    ) as d:
+        store = f"{d}/store"
+        drain(
+            _staged_stream(spark, ev, f"{d}/src").writeStream.foreachBatch(
                 countmin_merge_batch_writer(
                     store, "user_id", depth=4, width=1024
                 )
-            )
-            .option("checkpointLocation", ckpt)
-            .queryName(f"stream_cm_{uuid.uuid4().hex[:8]}")
-            .trigger(availableNow=True)
-            .start()
+            ),
+            f"{d}/ckpt",
         )
-        q.awaitTermination()
-        q.stop()
-        counters = spark.read.parquet(os.path.join(store, "live"))
+        counters = spark.read.parquet(f"{store}/live")
         exact_top = (
             ev.groupBy("user_id")
             .agg(F.count(F.lit(1)).alias("n_exact"))
@@ -1726,9 +1663,6 @@ def q_streaming_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "user_id", "n_exact", "cm_estimate"
             )
         )
-    finally:
-        for d in (src, store, ckpt):
-            shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_STREAMING_COUNTMIN = """

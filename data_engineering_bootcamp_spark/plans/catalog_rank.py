@@ -31,6 +31,7 @@ third ANN scale path (PQ/ADC) and the tokenizer-application pass.
 
 from __future__ import annotations
 
+import tempfile
 from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
@@ -44,7 +45,8 @@ from ..operators.bpe import (
 )
 from ..operators.dedup import _tokens as _text_tokens
 from ..sources.readers import load_table
-from .catalog_write import _snapshot
+from ..streaming.sinks import drain
+from .catalog_write import _snapshot, _staged_stream
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -326,11 +328,6 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream was batched. Stream-equals-batch: the oracle is the exact
     batch `bpe_encode_corpus` SQL. Fidelity across batch splits is
     separately pinned in tests/test_kafka_fidelity.py."""
-    import shutil
-    import tempfile
-
-    from ..streaming.sinks import start_foreach_batch
-
     docs = _t(spark, sf_dir, "documents")
 
     def vocab_of(d: DataFrame) -> DataFrame:
@@ -350,45 +347,29 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         wf_all, iterations=BPE_STEPS, checkpoint_every=0
     ).localCheckpoint(eager=True)
 
-    src = tempfile.mkdtemp(prefix="stream_bpe_src_")
-    out = tempfile.mkdtemp(prefix="stream_bpe_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_bpe_ckpt_")
-    try:
-        docs.select("doc_id", "text").repartition(4).write.mode(
-            "overwrite"
-        ).parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .format("parquet")
-            .load(src)
+    with tempfile.TemporaryDirectory(
+        prefix="stream_bpe_", ignore_cleanup_errors=True
+    ) as d:
+        stream = _staged_stream(
+            spark, docs.select("doc_id", "text"), f"{d}/src"
         )
 
         def encode_batch(batch_df: DataFrame, _batch_id: int) -> None:
             enc = bpe_apply_merges(vocab_of(batch_df), rules, BPE_STEPS)
             enc.select("token", "freq", "encoded", "n_syms").write.mode(
                 "append"
-            ).parquet(out)
+            ).parquet(f"{d}/out")
 
-        q = start_foreach_batch(
-            stream, encode_batch, checkpoint=ckpt, available_now=True
-        )
-        q.awaitTermination()
-        q.stop()
+        drain(stream.writeStream.foreachBatch(encode_batch), f"{d}/ckpt")
 
         got = (
-            spark.read.parquet(out)
+            spark.read.parquet(f"{d}/out")
             .groupBy("token", "encoded", "n_syms")
             .agg(F.sum("freq").alias("freq"))
             .select("token", "freq", "encoded", "n_syms")
             .orderBy(F.desc("freq"), F.asc("token"))
         )
         return _snapshot(got)
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 # stream-equals-batch: the oracle IS the batch encode oracle
@@ -505,9 +486,6 @@ def q_streaming_embedding_admission(
     cached across batches. The oracle recomputes the admission
     exhaustively; per-id counts are batch-split-independent (each
     incoming id is processed in exactly one batch)."""
-    import shutil
-    import tempfile
-
     import numpy as np
 
     from ..operators.similarity import _ann_src
@@ -517,83 +495,67 @@ def q_streaming_embedding_admission(
         emb.where(F.col("vec_id") % 4 != 0), "vec_id", "embedding"
     ).persist()
 
-    src = tempfile.mkdtemp(prefix="stream_emb_src_")
-    out = tempfile.mkdtemp(prefix="stream_emb_out_")
-    ckpt = tempfile.mkdtemp(prefix="stream_emb_ckpt_")
-    try:
-        incoming = emb.where(F.col("vec_id") % 4 == 0).select(
-            "vec_id", "embedding"
-        )
-        incoming.repartition(4).write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .format("parquet")
-            .load(src)
-        )
+    with tempfile.TemporaryDirectory(
+        prefix="stream_emb_", ignore_cleanup_errors=True
+    ) as d:
+        try:
+            incoming = emb.where(F.col("vec_id") % 4 == 0).select(
+                "vec_id", "embedding"
+            )
+            stream = _staged_stream(spark, incoming, f"{d}/src")
 
-        def admit_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            rows = batch_df.limit(100_001).collect()
-            if len(rows) > 100_000:
-                raise ValueError(
-                    "streaming_embedding_admission: micro-batch exceeds "
-                    "the broadcast bound — shrink maxFilesPerTrigger"
-                )
-            if not rows:
-                return
-            qids = np.array([r.vec_id for r in rows], dtype=np.int64)
-            Q = np.array([list(r.embedding) for r in rows],
-                         dtype=np.float64)
-            Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
-            bc = spark.sparkContext.broadcast((qids, Qn))
-
-            def count_close(batches):
-                import numpy as _np
-                import pandas as _pd
-
-                ids_, Qn_ = bc.value
-                for pdf in batches:
-                    if pdf.empty:
-                        continue
-                    V = _np.array(list(pdf["v"]), dtype=_np.float64)
-                    Vn = V / _np.linalg.norm(V, axis=1, keepdims=True)
-                    # 6dp HALF_UP before the threshold — the same
-                    # cross-engine contract as the batch near-dup ops
-                    S = _np.floor(Vn @ Qn_.T * 1e6 + 0.5) / 1e6
-                    cnt = (S >= EMB_ADMIT_THRESHOLD).sum(axis=0)
-                    yield _pd.DataFrame(
-                        {"vec_id": ids_, "n_part": cnt.astype("int64")}
+            def admit_batch(batch_df: DataFrame, _batch_id: int) -> None:
+                rows = batch_df.limit(100_001).collect()
+                if len(rows) > 100_000:
+                    raise ValueError(
+                        "streaming_embedding_admission: micro-batch exceeds "
+                        "the broadcast bound — shrink maxFilesPerTrigger"
                     )
+                if not rows:
+                    return
+                qids = np.array([r.vec_id for r in rows], dtype=np.int64)
+                Q = np.array([list(r.embedding) for r in rows],
+                             dtype=np.float64)
+                Qn = Q / np.linalg.norm(Q, axis=1, keepdims=True)
+                bc = spark.sparkContext.broadcast((qids, Qn))
 
-            partial = static_src.mapInPandas(
-                count_close, schema="vec_id bigint, n_part bigint"
+                def count_close(batches):
+                    import numpy as _np
+                    import pandas as _pd
+
+                    ids_, Qn_ = bc.value
+                    for pdf in batches:
+                        if pdf.empty:
+                            continue
+                        V = _np.array(list(pdf["v"]), dtype=_np.float64)
+                        Vn = V / _np.linalg.norm(V, axis=1, keepdims=True)
+                        # 6dp HALF_UP before the threshold — the same
+                        # cross-engine contract as the batch near-dup ops
+                        S = _np.floor(Vn @ Qn_.T * 1e6 + 0.5) / 1e6
+                        cnt = (S >= EMB_ADMIT_THRESHOLD).sum(axis=0)
+                        yield _pd.DataFrame(
+                            {"vec_id": ids_, "n_part": cnt.astype("int64")}
+                        )
+
+                partial = static_src.mapInPandas(
+                    count_close, schema="vec_id bigint, n_part bigint"
+                )
+                agg = partial.groupBy("vec_id").agg(
+                    F.sum("n_part").alias("n_neardups")
+                )
+                agg.write.mode("append").parquet(f"{d}/out")
+                bc.unpersist()
+
+            drain(stream.writeStream.foreachBatch(admit_batch), f"{d}/ckpt")
+
+            got = spark.read.parquet(f"{d}/out").select(
+                "vec_id",
+                "n_neardups",
+                (F.col("n_neardups") == 0).alias("admitted"),
             )
-            agg = partial.groupBy("vec_id").agg(
-                F.sum("n_part").alias("n_neardups")
-            )
-            agg.write.mode("append").parquet(out)
-            bc.unpersist()
-
-        from ..streaming.sinks import start_foreach_batch
-
-        q = start_foreach_batch(
-            stream, admit_batch, checkpoint=ckpt, available_now=True
-        )
-        q.awaitTermination()
-        q.stop()
-
-        got = spark.read.parquet(out).select(
-            "vec_id",
-            "n_neardups",
-            (F.col("n_neardups") == 0).alias("admitted"),
-        )
-        return _snapshot(got)
-    finally:
-        static_src.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(out, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            return _snapshot(got)
+        finally:
+            static_src.unpersist()
 
 
 _COS6 = (
@@ -1611,14 +1573,13 @@ def q_training_export_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     gaps are observable in neither engine's packing (both drop them
     before the cumsum)."""
     import os
-    import shutil
-    import tempfile
 
     from ..operators.bpe import bpe_apply_merges_arrow
 
-    store = tempfile.mkdtemp(prefix="trainexp_tok_")
     docs = _t(spark, sf_dir, "documents")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="trainexp_tok_", ignore_cleanup_errors=True
+    ) as store:
         wf = (
             _tokens(docs)
             .groupBy(F.col("term").alias("token"))
@@ -1735,8 +1696,6 @@ def q_training_export_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
             "ord_checksum",
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 def _tet_oracle() -> str:
@@ -2143,11 +2102,9 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     columns (the posting-list payload, ~8 bytes per vector vs 512
     bytes of raw floats)."""
     import os
-    import shutil
-    import tempfile
 
     from ..operators.similarity import _ann_src, _ivfpq_train, ivfpq_encode
-    from ..streaming.sinks import _publish_version, start_foreach_batch
+    from ..streaming.sinks import _publish_version
 
     emb = _t(spark, sf_dir, "embeddings")
     base_src = _ann_src(
@@ -2155,55 +2112,42 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     Cn, rc, books = _ivfpq_train(base_src, SIX_NC, SIX_M, SIX_CODES, 1, "full")
 
-    src = tempfile.mkdtemp(prefix="stream_ivfpq_src_")
-    store = tempfile.mkdtemp(prefix="stream_ivfpq_store_")
-    ckpt = tempfile.mkdtemp(prefix="stream_ivfpq_ckpt_")
-    try:
-        incoming = emb.where(F.col("vec_id") % 4 == 0).select(
-            "vec_id", "embedding"
-        )
-        incoming.repartition(4).write.mode("overwrite").parquet(src)
-        schema = spark.read.parquet(src).schema
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", "1")
-            .format("parquet")
-            .load(src)
-        )
-
-        def index_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            fresh = ivfpq_encode(batch_df, Cn, rc, books)
-            live = os.path.join(store, "live")
-            prev_target = (
-                os.path.realpath(live) if os.path.exists(live) else None
+    with tempfile.TemporaryDirectory(
+        prefix="stream_ivfpq_", ignore_cleanup_errors=True
+    ) as d:
+        store = f"{d}/store"
+        try:
+            incoming = emb.where(F.col("vec_id") % 4 == 0).select(
+                "vec_id", "embedding"
             )
-            merged = (
-                spark.read.parquet(live).unionByName(fresh)
-                if prev_target
-                else fresh
+            stream = _staged_stream(spark, incoming, f"{d}/src")
+
+            def index_batch(batch_df: DataFrame, _batch_id: int) -> None:
+                fresh = ivfpq_encode(batch_df, Cn, rc, books)
+                live = os.path.join(store, "live")
+                prev_target = (
+                    os.path.realpath(live) if os.path.exists(live) else None
+                )
+                merged = (
+                    spark.read.parquet(live).unionByName(fresh)
+                    if prev_target
+                    else fresh
+                )
+                _publish_version(store, _batch_id, merged, prev_target)
+
+            drain(stream.writeStream.foreachBatch(index_batch), f"{d}/ckpt")
+
+            got = spark.read.parquet(f"{store}/live").select(
+                F.col("vid").alias("vec_id"),
+                "bucket",
+                *[
+                    F.element_at("codes", j + 1).alias(f"c{j}")
+                    for j in range(SIX_M)
+                ],
             )
-            _publish_version(store, _batch_id, merged, prev_target)
-
-        q = start_foreach_batch(
-            stream, index_batch, checkpoint=ckpt, available_now=True
-        )
-        q.awaitTermination()
-        q.stop()
-
-        got = spark.read.parquet(os.path.join(store, "live")).select(
-            F.col("vid").alias("vec_id"),
-            "bucket",
-            *[
-                F.element_at("codes", j + 1).alias(f"c{j}")
-                for j in range(SIX_M)
-            ],
-        )
-        return _snapshot(got)
-    finally:
-        base_src.unpersist()
-        shutil.rmtree(src, ignore_errors=True)
-        shutil.rmtree(store, ignore_errors=True)
-        shutil.rmtree(ckpt, ignore_errors=True)
+            return _snapshot(got)
+        finally:
+            base_src.unpersist()
 
 
 def _six_oracle() -> str:
@@ -2374,17 +2318,16 @@ def q_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     the file-count arithmetic."""
     import math
     import os
-    import shutil
-    import tempfile
 
     from ..operators.dedup import dedup_keep_first
     from ..streaming.sinks import _publish_version
 
-    store = tempfile.mkdtemp(prefix="ivfpq_compact_")
     emb = _t(spark, sf_dir, "embeddings").select(
         F.col("vec_id").alias("vid")
     )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="ivfpq_compact_", ignore_cleanup_errors=True
+    ) as store:
         def version_rows(t: int) -> DataFrame:
             salt_del = F.concat(
                 F.lit("del_"), F.col("vid").cast("string"), F.lit(f"_{t}")
@@ -2462,8 +2405,6 @@ def q_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("bucket", "n_vecs", "vid_sum", "code_sum", "file_count")
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(store, ignore_errors=True)
 
 
 def _ixc_code_sql() -> str:

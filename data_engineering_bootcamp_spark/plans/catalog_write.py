@@ -8,8 +8,10 @@ an aggregate a DuckDB oracle reproduces straight from the source tables
 assertion).
 
 Pattern notes:
-- every entry uses a unique scratch dir / table name per invocation and
-  cleans up in `finally`, so repeated runs on one session never collide;
+- every entry uses a unique scratch dir / table name per invocation: the
+  dir is a `tempfile.TemporaryDirectory` around all of the entry's work
+  and tables are dropped in `finally`, so repeated runs on one session
+  never collide and a failing run leaves nothing behind;
 - results are snapshotted (`collect` of the SMALL aggregate, bounded by
   group cardinality) before the scratch files are deleted — the returned
   DataFrame must outlive the cleanup;
@@ -32,7 +34,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.datelist import utc_date
-from ..sources.readers import load_table, read_csv
+from ..sources.readers import load_table, normalize_ts, read_csv
 from ..sources.writers import (
     compact_parquet,
     write_bucketed,
@@ -58,6 +60,39 @@ def _snapshot(df: DataFrame, max_rows: int = 100_000) -> DataFrame:
     return df.sparkSession.createDataFrame(rows, df.schema)
 
 
+def _events_file_stream(
+    spark: SparkSession, sf_dir: str, d: str, copies: int = 1
+) -> DataFrame:
+    """The events table as a file stream for the streaming gate entries.
+    The file-stream source lists a directory and the testdata table is
+    one parquet file, so `copies` symlinks to it go under `{d}/src`
+    (two copies replay every event twice). ts is normalized by dtype
+    like the batch reader (readers.normalize_ts — the testdata has
+    shipped both int64-nanos and MICROS-NTZ encodings); the schema is
+    probed under nanosAsLong, set here so any caller's session works."""
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
+    src = os.path.join(d, "src")
+    os.mkdir(src)
+    for i in range(copies):
+        os.symlink(f"{sf_dir}/events.parquet", f"{src}/events_{i}.parquet")
+    return normalize_ts(
+        spark, spark.readStream.schema(schema).format("parquet").load(src)
+    )
+
+
+def _staged_stream(spark: SparkSession, df: DataFrame, path: str) -> DataFrame:
+    """Write `df` to `path` as four parquet files and stream them back
+    one file per trigger, so the sink sees four micro-batches."""
+    df.repartition(4).write.parquet(path)
+    return (
+        spark.readStream.schema(spark.read.parquet(path).schema)
+        .option("maxFilesPerTrigger", 1)
+        .format("parquet")
+        .load(path)
+    )
+
+
 def q_bucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S4/S5 + J14 through the gate: write orders and customer bucketed
     on the join key (bucketBy(16) + sortBy), read the tables back, join
@@ -66,36 +101,37 @@ def q_bucketed_join_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucketing must not change a single row."""
     tag = uuid.uuid4().hex[:8]
     t_o, t_c = f"bkt_orders_{tag}", f"bkt_cust_{tag}"
-    d = tempfile.mkdtemp(prefix="bktgate_")
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    try:
-        write_bucketed(
-            orders.select("o_orderkey", "o_custkey", "o_totalprice"),
-            t_o,
-            "o_custkey",
-            path=f"{d}/orders",
-        )
-        write_bucketed(
-            cust.select("c_custkey", "c_mktsegment"),
-            t_c,
-            "c_custkey",
-            path=f"{d}/cust",
-        )
-        o, c = spark.table(t_o), spark.table(t_c)
-        out = (
-            o.join(c, o.o_custkey == c.c_custkey)
-            .groupBy("c_mktsegment")
-            .agg(
-                F.round(F.sum("o_totalprice"), 2).alias("total_price"),
-                F.count(F.lit(1)).alias("n_orders"),
+    with tempfile.TemporaryDirectory(
+        prefix="bktgate_", ignore_cleanup_errors=True
+    ) as d:
+        try:
+            write_bucketed(
+                orders.select("o_orderkey", "o_custkey", "o_totalprice"),
+                t_o,
+                "o_custkey",
+                path=f"{d}/orders",
             )
-        )
-        return _snapshot(out)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {t_o}")
-        spark.sql(f"DROP TABLE IF EXISTS {t_c}")
-        shutil.rmtree(d, ignore_errors=True)
+            write_bucketed(
+                cust.select("c_custkey", "c_mktsegment"),
+                t_c,
+                "c_custkey",
+                path=f"{d}/cust",
+            )
+            o, c = spark.table(t_o), spark.table(t_c)
+            out = (
+                o.join(c, o.o_custkey == c.c_custkey)
+                .groupBy("c_mktsegment")
+                .agg(
+                    F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+                    F.count(F.lit(1)).alias("n_orders"),
+                )
+            )
+            return _snapshot(out)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {t_o}")
+            spark.sql(f"DROP TABLE IF EXISTS {t_c}")
 
 
 ORACLE_BUCKETED_JOIN = """
@@ -113,13 +149,14 @@ def q_partitioned_prune_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition filter (pruned scan: only the 1995-07 directory is
     touched), aggregate. Oracle filters the raw table by the same
     month."""
-    d = tempfile.mkdtemp(prefix="partgate_")
     orders = load_table(spark, sf_dir, "orders")
     orders = orders.withColumn(
         "o_month",
         F.substring(utc_date(orders, "o_orderdate").cast("string"), 1, 7),
     )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="partgate_", ignore_cleanup_errors=True
+    ) as d:
         write_partitioned(orders, f"{d}/orders", "o_month")
         back = spark.read.parquet(f"{d}/orders").where(
             F.col("o_month") == "1995-07"
@@ -129,8 +166,6 @@ def q_partitioned_prune_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum("o_totalprice"), 2).alias("total_price"),
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_PARTITIONED_PRUNE = """
@@ -148,11 +183,12 @@ def q_sorted_layout_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sortWithinPartitions (the run-length/dictionary-friendly layout the
     reference's storage experiment measures), read back, aggregate.
     Layout must be semantically invisible."""
-    d = tempfile.mkdtemp(prefix="sortgate_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"
     )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="sortgate_", ignore_cleanup_errors=True
+    ) as d:
         write_repartitioned_sorted(
             li, f"{d}/li", num_partitions=8, key="l_returnflag",
             sort_cols=["l_returnflag", "l_linestatus", "l_orderkey"],
@@ -163,8 +199,6 @@ def q_sorted_layout_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_rows"),
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_SORTED_LAYOUT = """
@@ -180,8 +214,9 @@ def q_csv_roundtrip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     schema inference → count per region. Inference must recover the
     integer keys exactly."""
     nation = load_table(spark, sf_dir, "nation")
-    d = tempfile.mkdtemp(prefix="csvgate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="csvgate_", ignore_cleanup_errors=True
+    ) as d:
         nation.coalesce(1).write.mode("overwrite").option(
             "header", "true"
         ).csv(f"{d}/nation")
@@ -195,8 +230,6 @@ def q_csv_roundtrip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .withColumn("n_regionkey", F.col("n_regionkey").cast("int"))
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_CSV_ROUNDTRIP = """
@@ -212,14 +245,14 @@ def q_orc_roundtrip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the ORC round-trip preserved every id and value exactly;
     cents are integers (half-up) so the rollup has no float
     association-order hazard."""
-    # load BEFORE mkdtemp so a read failure cannot leak the scratch dir
     ev = load_table(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
         F.round(F.col("value") * 100).cast("long").alias("cents"),
     )
-    d = tempfile.mkdtemp(prefix="orcgate_")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="orcgate_", ignore_cleanup_errors=True
+    ) as d:
         ev.write.mode("overwrite").orc(f"{d}/events")
         back = spark.read.orc(f"{d}/events")
         out = back.groupBy("event_type").agg(
@@ -229,8 +262,6 @@ def q_orc_roundtrip_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("event_id").alias("max_event"),
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_ORC_ROUNDTRIP = """
@@ -250,34 +281,35 @@ def q_insert_select_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle unions the two slices from the raw table."""
     tag = uuid.uuid4().hex[:8]
     tbl = f"ins_orders_{tag}"
-    d = tempfile.mkdtemp(prefix="insgate_")
     orders = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
-    try:
-        # schema-only table definition, then S9 overwrite-insert the F
-        # slice into it
-        orders.limit(0).write.option("path", f"{d}/t").saveAsTable(tbl)
-        orders.where(F.col("o_orderstatus") == "F").write.insertInto(
-            tbl, overwrite=True
-        )
-        orders.where(F.col("o_orderstatus") == "O").createOrReplaceTempView(
-            f"src_{tag}"
-        )
-        spark.sql(f"INSERT INTO {tbl} SELECT * FROM src_{tag}")
-        out = (
-            spark.table(tbl)
-            .groupBy("o_orderpriority")
-            .agg(
-                F.count(F.lit(1)).alias("n_orders"),
-                F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+    with tempfile.TemporaryDirectory(
+        prefix="insgate_", ignore_cleanup_errors=True
+    ) as d:
+        try:
+            # schema-only table definition, then S9 overwrite-insert the F
+            # slice into it
+            orders.limit(0).write.option("path", f"{d}/t").saveAsTable(tbl)
+            orders.where(F.col("o_orderstatus") == "F").write.insertInto(
+                tbl, overwrite=True
             )
-        )
-        return _snapshot(out)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.catalog.dropTempView(f"src_{tag}")
-        shutil.rmtree(d, ignore_errors=True)
+            orders.where(
+                F.col("o_orderstatus") == "O"
+            ).createOrReplaceTempView(f"src_{tag}")
+            spark.sql(f"INSERT INTO {tbl} SELECT * FROM src_{tag}")
+            out = (
+                spark.table(tbl)
+                .groupBy("o_orderpriority")
+                .agg(
+                    F.count(F.lit(1)).alias("n_orders"),
+                    F.round(F.sum("o_totalprice"), 2).alias("total_price"),
+                )
+            )
+            return _snapshot(out)
+        finally:
+            spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+            spark.catalog.dropTempView(f"src_{tag}")
 
 
 ORACLE_INSERT_SELECT = """
@@ -316,11 +348,12 @@ def q_compaction_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     (64 by construction; the compacted count from the same ceil
     arithmetic) — so the entry asserts the compaction hit its file
     target AND changed no row."""
-    d = tempfile.mkdtemp(prefix="compactgate_")
     ev = load_table(spark, sf_dir, "events").where(
         F.col("user_id").isNotNull()
     ).select("event_id", "user_id", "event_type", "value")
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="compactgate_", ignore_cleanup_errors=True
+    ) as d:
         ev.repartition(64).write.mode("overwrite").parquet(f"{d}/frag")
         compact_parquet(spark, f"{d}/frag", f"{d}/compact", 25_000)
         out = None
@@ -344,8 +377,6 @@ def q_compaction_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             out = agg if out is None else out.unionByName(agg)
         return _snapshot(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_COMPACTION = """
@@ -397,11 +428,12 @@ def q_metadata_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     metadata rollup AND that neither layout lost a row. The oracle
     aggregates the raw per-file manifest this entry publishes.
     """
-    d = tempfile.mkdtemp(prefix="metagate_")
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_quantity", "l_returnflag", "l_linestatus"
     )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="metagate_", ignore_cleanup_errors=True
+    ) as d:
         write_repartitioned_sorted(
             li, f"{d}/sorted", num_partitions=8, key="l_returnflag",
             sort_cols=["l_returnflag", "l_linestatus", "l_orderkey"],
@@ -445,8 +477,6 @@ def q_metadata_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
             "layout", "file_count", "total_bytes", "n_rows"
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_METADATA_SCAN = f"""
@@ -501,7 +531,6 @@ def q_training_export_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.chunking import pack_token_stream
     from ..operators.sampling import weighted_mix
 
-    d = tempfile.mkdtemp(prefix="trainexp_")
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "text"
     )
@@ -513,7 +542,9 @@ def q_training_export_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         % 7
     )
-    try:
+    with tempfile.TemporaryDirectory(
+        prefix="trainexp_", ignore_cleanup_errors=True
+    ) as d:
         kept = weighted_mix(docs, ["source"], "doc_id", rate)
         packs = pack_token_stream(kept, capacity=256, n_shards=8)
         out_path = f"{d}/shards"
@@ -551,8 +582,6 @@ def q_training_export_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
             "shard", "file_count", "n_packs", "n_docs", "n_tokens"
         )
         return _snapshot(out)
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
 
 
 ORACLE_TRAINING_EXPORT = r"""

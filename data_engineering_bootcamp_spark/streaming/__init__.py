@@ -15,7 +15,7 @@ from .pipelines import (
     tumbling_counts,
     with_event_time,
 )
-from .sinks import start_foreach_batch, start_to_parquet
+from .sinks import drain
 from .stateful import sessionize_stateful
 from .sources import json_file_stream, kafka_json_stream, rate_events_stream
 
@@ -30,6 +30,5 @@ __all__ = [
     "json_file_stream",
     "kafka_json_stream",
     "rate_events_stream",
-    "start_to_parquet",
-    "start_foreach_batch",
+    "drain",
 ]

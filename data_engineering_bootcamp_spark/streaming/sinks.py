@@ -6,6 +6,14 @@ checkpointing (M4F/src/job/start_job.py:38-54,120-121; aggregation_job.py
 has no first-class JDBC sink); checkpointing is the mandatory
 `checkpointLocation` option — state recovery on restart is what makes
 the pipeline exactly-once into idempotent sinks.
+
+`drain(writer, checkpoint)` is the one way a finite stream is run here:
+it checkpoints the writer, triggers `availableNow` (consume everything
+already in the source, then stop), waits, and stops the query in a
+`finally`. A foreachBatch handler passed to it must be idempotent:
+foreachBatch re-executes a failed batch after restart (delete-then-
+insert keyed on the batch, or a MERGE — the contract the reference's
+JDBC sink relies on).
 """
 
 from __future__ import annotations
@@ -14,51 +22,22 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.streaming import DataStreamWriter, StreamingQuery
 
 
-def start_to_parquet(
-    df: DataFrame,
-    path: str,
-    checkpoint: str,
-    output_mode: str = "append",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """File sink with checkpoint (T7/T8). `available_now=True` drains all
-    pending input then stops — the deterministic mode tests use."""
-    writer = (
-        df.writeStream.format("parquet")
-        .option("path", path)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
+def drain(writer: DataStreamWriter, checkpoint: str) -> None:
+    """Run a stream once over all input already available (T7/T8):
+    checkpoint at `checkpoint`, `availableNow` trigger, wait for the
+    query to finish, and stop it even if the wait raises."""
+    q = (
+        writer.option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
-
-
-def start_foreach_batch(
-    df: DataFrame,
-    batch_fn: Callable[[DataFrame, int], None],
-    checkpoint: str,
-    output_mode: str = "append",
-    available_now: bool = False,
-) -> StreamingQuery:
-    """S13-equivalent: per-micro-batch handler, e.g.
-    `lambda b, _id: b.write.jdbc(url, table, mode="append")`.
-
-    foreachBatch re-executes a failed batch after restart, so the handler
-    must be idempotent (delete-then-insert keyed on batch window, or a
-    MERGE) — same contract the reference's JDBC sink relies on.
-    """
-    writer = (
-        df.writeStream.foreachBatch(batch_fn)
-        .option("checkpointLocation", checkpoint)
-        .outputMode(output_mode)
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    try:
+        q.awaitTermination()
+    finally:
+        q.stop()
 
 
 def jdbc_batch_writer(

@@ -66,6 +66,15 @@ def test_median_of_reps():
     assert bench.median_of_reps([4.0, 1.0, 3.0, 2.0], extra_rep=True) == 2.0
 
 
+def test_is_noisy():
+    # a cold first rep alone is not contention
+    assert not bench.is_noisy([1.776, 0.217, 0.214])
+    # a >2x spread among the warm reps still is
+    assert bench.is_noisy([7.3, 15.7, 6.1])
+    # with two reps the first one counts
+    assert bench.is_noisy([1.0, 2.5])
+
+
 def test_failed_run_still_prints_and_exits_zero(tmp_path):
     artifact = os.path.join(REPO, "BENCH_full.json")
     before = open(artifact, "rb").read() if os.path.exists(artifact) else None

@@ -24,8 +24,6 @@ from data_engineering_bootcamp_spark.streaming import (
     enrich_events,
     json_file_stream,
     sessionize_stream,
-    start_foreach_batch,
-    start_to_parquet,
     tumbling_counts,
     with_event_time,
 )
@@ -103,7 +101,13 @@ def batch_events(spark, events_dir):
 def _drain(stream_df, tmp_path, name):
     out = os.path.join(str(tmp_path), f"{name}_out")
     ckpt = os.path.join(str(tmp_path), f"{name}_ckpt")
-    q = start_to_parquet(stream_df, out, ckpt, available_now=True)
+    q = (
+        stream_df.writeStream.format("parquet")
+        .option("path", out)
+        .option("checkpointLocation", ckpt)
+        .trigger(availableNow=True)
+        .start()
+    )
     q.awaitTermination(120)
     return out
 
@@ -236,11 +240,11 @@ def test_foreach_batch_sink(spark, events_dir, tmp_path):
         batch_df.write.mode("append").parquet(target)
         seen.append(batch_id)
 
-    q = start_foreach_batch(
-        stream,
-        handle,
-        os.path.join(str(tmp_path), "fb_ckpt"),
-        available_now=True,
+    q = (
+        stream.writeStream.foreachBatch(handle)
+        .option("checkpointLocation", os.path.join(str(tmp_path), "fb_ckpt"))
+        .trigger(availableNow=True)
+        .start()
     )
     q.awaitTermination(120)
     assert spark.read.parquet(target).count() == len(ALL_EVENTS)
@@ -250,13 +254,9 @@ def test_foreach_batch_sink(spark, events_dir, tmp_path):
 def test_checkpoint_resume_no_duplicates(spark, events_dir, tmp_path):
     """T8: restarting from the checkpoint must not re-emit drained input."""
     stream = with_event_time(json_file_stream(spark, events_dir, EVENT_SCHEMA))
-    out = os.path.join(str(tmp_path), "resume_out")
-    ckpt = os.path.join(str(tmp_path), "resume_ckpt")
-    q1 = start_to_parquet(stream, out, ckpt, available_now=True)
-    q1.awaitTermination(120)
+    out = _drain(stream, tmp_path, "resume")
     n1 = spark.read.parquet(out).count()
-    q2 = start_to_parquet(stream, out, ckpt, available_now=True)
-    q2.awaitTermination(120)
+    _drain(stream, tmp_path, "resume")
     n2 = spark.read.parquet(out).count()
     assert n1 == len(ALL_EVENTS)
     assert n2 == n1
@@ -543,9 +543,7 @@ def test_streaming_bpe_encode_batch_split_independence(spark, tmp_path):
         bpe_apply_merges,
         bpe_train_merges,
     )
-    from data_engineering_bootcamp_spark.streaming.sinks import (
-        start_foreach_batch,
-    )
+    from data_engineering_bootcamp_spark.streaming.sinks import drain
 
     docs = spark.createDataFrame(
         [
@@ -607,11 +605,7 @@ def test_streaming_bpe_encode_batch_split_independence(spark, tmp_path):
                 "token", "freq", "encoded", "n_syms"
             ).write.mode("append").parquet(out)
 
-        q = start_foreach_batch(
-            stream, encode_batch, checkpoint=ckpt, available_now=True
-        )
-        q.awaitTermination()
-        q.stop()
+        drain(stream.writeStream.foreachBatch(encode_batch), ckpt)
         return {
             (r.token, r.freq, r.encoded, r.n_syms)
             for r in spark.read.parquet(out)

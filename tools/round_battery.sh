@@ -76,6 +76,10 @@ python tools/make_shuffled_sf.py /root/testdata/sf0.01 "$SHUF_DIR"
 run "GATECHECK_shuffled_${R}.log" "$SHUF_DIR" --no-perf-gate
 
 echo "=== PYTEST_${R}.log: full suite"
-python -m pytest tests/ -q >"PYTEST_${R}.log" 2>&1
+# the Tier-1 env (ROADMAP): without it graft_cpus() defaults to 32 and
+# the suite runs local[32] whatever the box has
+SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
+    SPARK_LOCAL_DIRS=/tmp/spark-local \
+    python -m pytest tests/ -q >"PYTEST_${R}.log" 2>&1
 echo "exit=$?" >>"PYTEST_${R}.log"
 tail -3 "PYTEST_${R}.log"
