@@ -2,7 +2,7 @@
 """Benchmark runner: catalog queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-    python bench.py              # the 112 HEADLINE queries
+    python bench.py              # the entries tagged "headline"
     python bench.py name ...     # the named catalog entries instead
 
 Prints ONE JSON line:
@@ -19,6 +19,11 @@ per-query MEDIANS; the raw per-rep timings ride along under
 "queries_reps" so contention is visible post-hoc, and "value" is the
 sum of medians. Set SPARK_GRAFT_BENCH_REPS=1 for the old single-shot
 behavior (used while iterating).
+
+Which entries a headline run times, and which of them the compact
+line always prints, are tags on the catalog's entry table
+(`tagged("headline")` and `tagged("pinned")` in plans/catalog.py);
+both run in table order.
 
 Only a headline run writes the full record (BENCH_full.json and
 BENCH_full_c{N}.json), so those files always describe the headline
@@ -39,166 +44,12 @@ import sys
 import time
 
 from data_engineering_bootcamp_spark.operators.dedup import release_caches
-from data_engineering_bootcamp_spark.plans.catalog import QUERIES
+from data_engineering_bootcamp_spark.plans.catalog import QUERIES, tagged
 from data_engineering_bootcamp_spark.session import env_number, get_spark, graft_cpus
 
 ROOT = os.path.dirname(os.path.abspath(__file__))
 # errors key of a failed warm-up; not a catalog name, so never a hard error
 WARM_UP = "(warm-up)"
-
-HEADLINE = [
-    "pricing_summary",
-    "top_customers",
-    "region_revenue",
-    "grouping_sets",
-    "rolling_revenue",
-    "top_supplier_per_nation",
-    "customer_order_spine",
-    "part_pair_edges",
-    "funnel_conversion",
-    "retention_curve",
-    "growth_accounting",
-    "scd_streaks",
-    "datelist_int",
-    "array_metrics",
-    "sessionization",
-    "tumbling_hits",
-    "doc_dedup_exact",
-    "doc_token_stats",
-    "doc_quality",
-    "minhash_lsh_pairs",
-    "simhash_pairs",
-    "ann_cosine_topk",
-    "ann_cosine_lsh",
-    "ann_cosine_ivf",
-    "scd_incremental",
-    "order_history",
-    "host_activity_reduced",
-    "longest_streak",
-    "best_stretch",
-    "semi_anti_customers",
-    "merge_upsert",
-    "user_vertices",
-    "embedding_neardup",
-    "media_features",
-    "doc_winnow_fingerprint",
-    "skew_salted_agg",
-    # round-3 additions: the prefix-filtered exact similarity join is
-    # now a scale path (the O(n²) BNLJ form lives on only as the
-    # ngram_jaccard_allpairs baseline and stays out of the bench),
-    # plus the new sampling/temporal/percentile entries and the
-    # composed flagship pipeline
-    "ngram_jaccard_pairs",
-    "hash_sample_split",
-    "asof_latest_order",
-    "exact_percentiles",
-    "corpus_curation_pipeline",
-    "stratified_sample",
-    "doc_decontaminate",
-    "doc_chunks",
-    "pack_token_stream",
-    # round-4 additions: cluster-based dedup retention, PII redaction,
-    # vocabulary building, and the S8 metadata-scan write path
-    "neardup_clusters",
-    "doc_pii_redact",
-    "vocab_top_tokens",
-    "metadata_scan",
-    # round-5 addition: real stdlib PNG encode→decode round-trip
-    "media_real_decode",
-    # round-6 additions: NN resize round-trip, RANGE-interval window,
-    # bigram-LM quality scoring
-    "media_resize",
-    "rolling_time_revenue",
-    "doc_bigram_lm_score",
-    "semantic_dedup",
-    "compaction_rollup",
-    "snapshot_cdc_diff",
-    # final round-6 additions: C4-style segment removal, KMV sketch
-    # set algebra, integer-exact z-score anomaly flags
-    "line_dedup_rebuild",
-    "kmv_set_ops",
-    "zscore_anomaly_days",
-    # round-5 additions: reshaping + LLM-pipeline depth (sub-document
-    # dedup, source mixing, quantile trimming, int8 quantization)
-    "pivot_lang_counts",
-    "unpivot_region_metrics",
-    "chunk_dedup_rebuild",
-    "corpus_mix_plan",
-    "quantile_band_filter",
-    "embedding_quantize_error",
-    "ann_q8_rerank",
-    "bpe_merge_candidates",
-    "dup_span_extract",
-    "tfidf_top_terms",
-    "dup_span_removal",
-    # round-6 late additions: iterative centrality, one-pass histogram
-    # quantiles, contrastive hard negatives
-    "pagerank_parts",
-    "histogram_quantiles",
-    "hard_negative_mining",
-    "bloom_prune_stats",
-    "distinct_sketch_users",
-    "zorder_locality_stats",
-    "countmin_token_freq",
-    "incremental_agg_merge",
-    "last_touch_attribution",
-    "orc_roundtrip_rollup",
-    "top_event_paths",
-    "streaming_countmin",
-    # round-6 LATE additions: fuzzy ER, gap interpolation, HLL,
-    # interval sweep, perceptual image dedup
-    "fuzzy_customer_pairs",
-    "interpolate_daily_revenue",
-    "hll_user_cardinality",
-    "session_concurrency_daily",
-    "media_ahash_neardup",
-    "media_curation_pipeline",
-    # round-12 additions: the approx-envelope twins and the weighted
-    # priority sampler
-    "table_profile_approx",
-    "percentiles_approx",
-    "doc_priority_sample",
-    # round-13 additions: iterative BPE vocab training and BM25
-    # retrieval scoring
-    "bpe_train_merges",
-    "bpe_encode_corpus",
-    "bm25_top_docs",
-    "ann_pq_adc",
-    # round-14 additions: the IVFADC composition of the IVF and PQ
-    # paths, BM25 + ANN reciprocal-rank fusion, byte-level BPE
-    "ann_ivfpq",
-    "hybrid_rrf_topk",
-    "bpe_train_merges_bytes",
-    "vocab_coverage_curve",
-    # round-15 additions: distributed full-corpus codebook training,
-    # the hashed-NB learned quality classifier, and the streaming
-    # IVFPQ index maintainer
-    "ann_ivfpq_fulltrain",
-    "doc_quality_classifier",
-    "classifier_pr_eval",
-    "streaming_ivfpq_index",
-    "unigram_train_vocab",
-    "unigram_encode_corpus",
-    # round-16 additions: the physical training-shard export, learned
-    # language ID + its held-out confusion eval, the NB-gated flagship
-    # twin, posting-store compaction, and batched BPE merge rounds
-    # (the A side of its A/B — bpe_train_merges — is already above)
-    "training_export_rollup",
-    "training_export_tokenized",
-    "doc_lang_id_learned",
-    "lang_id_confusion",
-    "corpus_curation_pipeline_learned",
-    "ivfpq_index_compact",
-    "bpe_train_merges_batched",
-    # The three replay entries (pipeline_replay_31d, scd_replay_31d,
-    # users_cumulated_replay_31d) are deliberately NOT headlines: their
-    # wall time is ~90% driver-side plan composition of 31 sequential
-    # daily advances (scale-independent — sf0.1 times within noise of
-    # sf0.01; in production each advance is its own job), so they would
-    # measure Py4J/Catalyst overhead, not engine throughput. They stay
-    # oracle-gated in tools/gate_check.py and the driver's correctness
-    # gate every round.
-]
 
 
 def _cpu_marker_samples(n: int = 3) -> list[float]:
@@ -251,77 +102,6 @@ def _cpu_marker_mc_mean(samples: int = 2) -> float:
             list(pool.map(work, range(n)))
             acc += time.perf_counter() - t0
     return round(acc / samples, 3)
-
-
-# The compact stdout line is the driver's ground truth, and its
-# recording window is 2000 bytes of TAIL — so the full 112-query map
-# (~3.4 KB) cannot print, but everything the line does carry must be
-# STABLE: until r16 the printed subset was the ~56 slowest of the day,
-# so its composition shifted with host noise every round and the
-# driver reported phantom `dropped_from_bench` entries (10 in r16, all
-# verifiably still running — VERDICT r16 #1). The printed set is now
-# PINNED: the r16-printed 56 names first (a superset guarantee — every
-# query the driver saw last round it sees this round), then the
-# other timed entries in run order (HEADLINE order in a headline run)
-# as the byte budget allows. Selection never depends on measured times.
-COMPACT_PRIORITY = [
-    "corpus_curation_pipeline_learned",
-    "corpus_curation_pipeline",
-    "pagerank_parts",
-    "training_export_tokenized",
-    "streaming_ivfpq_index",
-    "media_curation_pipeline",
-    "neardup_clusters",
-    "streaming_countmin",
-    "fuzzy_customer_pairs",
-    "metadata_scan",
-    "bpe_train_merges_batched",
-    "ann_ivfpq_fulltrain",
-    "ngram_jaccard_pairs",
-    "ann_cosine_lsh",
-    "compaction_rollup",
-    "unigram_train_vocab",
-    "minhash_lsh_pairs",
-    "ivfpq_index_compact",
-    "bpe_encode_corpus",
-    "ann_cosine_ivf",
-    "bpe_train_merges",
-    "bpe_train_merges_bytes",
-    "part_pair_edges",
-    "percentiles_approx",
-    "media_ahash_neardup",
-    "doc_lang_id_learned",
-    "ann_pq_adc",
-    "simhash_pairs",
-    "ann_q8_rerank",
-    "lang_id_confusion",
-    "ann_ivfpq",
-    "unigram_encode_corpus",
-    "order_history",
-    "table_profile_approx",
-    "training_export_rollup",
-    "countmin_token_freq",
-    "doc_decontaminate",
-    "classifier_pr_eval",
-    "scd_incremental",
-    "dup_span_removal",
-    "bloom_prune_stats",
-    "kmv_set_ops",
-    "doc_quality_classifier",
-    "retention_curve",
-    "session_concurrency_daily",
-    "hybrid_rrf_topk",
-    "exact_percentiles",
-    "funnel_conversion",
-    "dup_span_extract",
-    "ann_cosine_topk",
-    "scd_streaks",
-    "host_activity_reduced",
-    "doc_bigram_lm_score",
-    "interpolate_daily_revenue",
-    "array_metrics",
-    "semantic_dedup",
-]
 
 
 def warm(spark, sf_dir: str) -> None:
@@ -388,10 +168,13 @@ def compact_line(out: dict, full_artifact: str | None) -> str:
     only the LAST 2000 bytes of stdout (BENCH_r06/r07 came back
     "parsed": null when the full dict outgrew that window), so the
     line carries the headline fields and a PINNED per-query set:
-    every COMPACT_PRIORITY name, then the other timed entries in run
+    every entry tagged "pinned", then the other timed entries in run
     order while the line stays within 1920 bytes (slack for a stray
-    trailing warning). If the pinned set alone overflows 1980 bytes,
-    the lowest-priority entries are shed, never the whole map."""
+    trailing warning). Selection never depends on measured times, so
+    the printed set does not shift with host noise (r16's driver
+    reported 10 phantom `dropped_from_bench` entries when it did). If
+    the pinned set alone overflows 1980 bytes, the last pinned entries
+    in table order are shed, never the whole map."""
     timings = out["queries"]
     errors = out.get("errors", {})
     n_hard = sum(1 for k in errors if k not in timings and k != WARM_UP)
@@ -426,8 +209,8 @@ def compact_line(out: dict, full_artifact: str | None) -> str:
         compact["n_errors_total"] = len(errors)
     compact["queries_omitted"] = len(timings)  # placeholder for sizing
     used = len(json.dumps(compact, separators=(",", ":")))
-    pinned = set(COMPACT_PRIORITY)
-    order = [n for n in COMPACT_PRIORITY if n in timings] + [
+    pinned = tagged("pinned")
+    order = [n for n in pinned if n in timings] + [
         n for n in timings if n not in pinned
     ]
     for name in order:
@@ -453,7 +236,7 @@ def main(argv: list[str]) -> int:
               file=sys.stderr)
         return 2
     headline = not argv
-    names = HEADLINE if headline else list(dict.fromkeys(argv))
+    names = tagged("headline") if headline else list(dict.fromkeys(argv))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     # machine-contention marker: loadavg BEFORE the run — a driver bench

@@ -16,6 +16,7 @@ SURVEY §2 operator ids are cited per query (S/P/J/A/W/O/U/T families).
 from __future__ import annotations
 
 from collections.abc import Callable
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -42,6 +43,12 @@ from ..operators.growth import growth_accounting, retention_curve
 from ..operators.scd import scd_from_snapshots
 from ..operators.similarity import cosine_topk_bruteforce, cosine_topk_lsh
 from ..sources.readers import load_table
+from . import catalog_ext as ext
+from . import catalog_extra as extra
+from . import catalog_late as late
+from . import catalog_mix as mix
+from . import catalog_rank as rank
+from . import catalog_write as write
 
 GROWTH_DS = "2024-01-15"
 DATELIST_REF = "2024-01-31"
@@ -1212,345 +1219,306 @@ FROM ranked WHERE rank <= 5
 
 
 # ---------------------------------------------------------------------------
-# registry
+# registry: one row per entry, with its query, its DuckDB oracle and its
+# tags (words from TAGS). Everything that names entries reads this table:
+# __spark_entry__, bench.py, the gate, the plan audit and the tests.
 # ---------------------------------------------------------------------------
 
-QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pricing_summary": q_pricing_summary,
-    "top_customers": q_top_customers,
-    "region_revenue": q_region_revenue,
-    "grouping_sets": q_grouping_sets,
-    "rolling_revenue": q_rolling_revenue,
-    "top_supplier_per_nation": q_top_supplier_per_nation,
-    "customer_order_spine": q_customer_order_spine,
-    "part_pair_edges": q_part_pair_edges,
-    "part_type_tiers": q_part_type_tiers,
-    "acctbal_tiers": q_acctbal_tiers,
-    "union_order_tiers": q_union_order_tiers,
-    "filter_by_top1": q_filter_by_top1,
-    "funnel_conversion": q_funnel,
-    "retention_curve": q_retention,
-    "growth_accounting": q_growth_accounting,
-    "scd_streaks": q_scd_streaks,
-    "users_cumulated": q_users_cumulated,
-    "datelist_int": q_datelist_int,
-    "array_metrics": q_array_metrics,
-    "dedup_keep_first": q_dedup_keep_first,
-    "distinct_users": q_distinct_users,
-    "sessionization": q_sessionization,
-    "tumbling_hits": q_tumbling_hits,
-    "json_props": q_json_props,
-    "doc_dedup_exact": q_doc_dedup_exact,
-    "doc_token_stats": q_doc_token_stats,
-    "doc_quality": q_doc_quality,
-    "doc_lang_id": q_doc_lang_id,
-    "minhash_lsh_pairs": q_minhash_pairs,
-    "simhash_pairs": q_simhash_pairs,
-    "ann_cosine_topk": q_ann_cosine_topk,
-    "ann_cosine_lsh": q_ann_cosine_lsh,
+# The three 31-day replays are deliberately not headline: ~90% of their
+# wall time is driver-side composition of 31 daily advances, so they
+# would time Py4J/Catalyst overhead, not the engine.
+TAGS = {
+    "headline": "timed by a plain `python bench.py` run",
+    "pinned": "always printed in bench.py's compact stdout line",
+    "quadratic": "deliberately quadratic oracle, infeasible in DuckDB at sf0.1",
+    "eager": "building the plan runs jobs, so plan audits skip the entry",
 }
 
-ORACLES: dict[str, str] = {
-    "pricing_summary": ORACLE_PRICING,
-    "top_customers": ORACLE_TOP_CUSTOMERS,
-    "region_revenue": ORACLE_REGION_REVENUE,
-    "grouping_sets": ORACLE_GROUPING_SETS,
-    "rolling_revenue": ORACLE_ROLLING,
-    "top_supplier_per_nation": ORACLE_TOP_SUPPLIER,
-    "customer_order_spine": ORACLE_SPINE,
-    "part_pair_edges": ORACLE_PART_PAIRS,
-    "part_type_tiers": ORACLE_PART_TIERS,
-    "acctbal_tiers": ORACLE_ACCTBAL,
-    "union_order_tiers": ORACLE_UNION_TIERS,
-    "filter_by_top1": ORACLE_FILTER_TOP1,
-    "funnel_conversion": ORACLE_FUNNEL,
-    "retention_curve": ORACLE_RETENTION,
-    "growth_accounting": ORACLE_GROWTH,
-    "scd_streaks": ORACLE_SCD,
-    "users_cumulated": ORACLE_USERS_CUMULATED,
-    "datelist_int": ORACLE_DATELIST,
-    "array_metrics": ORACLE_ARRAY_METRICS,
-    "dedup_keep_first": ORACLE_DEDUP_KEEP_FIRST,
-    "distinct_users": ORACLE_DISTINCT_USERS,
-    "sessionization": ORACLE_SESSIONS,
-    "tumbling_hits": ORACLE_TUMBLING,
-    "json_props": ORACLE_JSON,
-    "doc_dedup_exact": ORACLE_DOC_EXACT,
-    "doc_token_stats": ORACLE_DOC_TOKENS,
-    "doc_quality": ORACLE_DOC_QUALITY,
-    "doc_lang_id": ORACLE_DOC_LANG,
-    "minhash_lsh_pairs": ORACLE_MINHASH,
-    "simhash_pairs": ORACLE_SIMHASH,
-    "ann_cosine_topk": ORACLE_ANN,
-    "ann_cosine_lsh": ORACLE_ANN_LSH,
-}
 
-# extension catalog (SCD incremental, ordered history, W12 streaks,
-# semi/anti, merge, n-gram/embedding near-dup, multimodal plumbing)
-from .catalog_ext import EXT_ORACLES, EXT_QUERIES  # noqa: E402
+class Entry(NamedTuple):
+    name: str
+    fn: Callable[[SparkSession, str], DataFrame]
+    oracle: str
+    tags: str = ""
 
-QUERIES.update(EXT_QUERIES)
-ORACLES.update(EXT_ORACLES)
-
-# write-path catalog (bucketed/partitioned/sorted/CSV/insert round-trips)
-from .catalog_write import WRITE_ORACLES, WRITE_QUERIES  # noqa: E402
-
-QUERIES.update(WRITE_QUERIES)
-ORACLES.update(WRITE_ORACLES)
-
-# round-2 additions (as-of join, exact quantiles, repetition stats,
-# broadcast-dict UDF enrichment, bulk rename)
-from .catalog_extra import EXTRA_ORACLES, EXTRA_QUERIES  # noqa: E402
-
-QUERIES.update(EXTRA_QUERIES)
-ORACLES.update(EXTRA_ORACLES)
-
-# round-5 additions (pivot/unpivot reshaping, chunk-level dedup,
-# corpus mixing, quantile-band filtering, int8 embedding quantization)
-from .catalog_mix import MIX_ORACLES, MIX_QUERIES  # noqa: E402
-
-QUERIES.update(MIX_QUERIES)
-ORACLES.update(MIX_ORACLES)
-
-# late round-6 additions (fuzzy entity matching, gap interpolation,
-# and the remaining curation-surface sketches)
-from .catalog_late import LATE_ORACLES, LATE_QUERIES  # noqa: E402
-
-QUERIES.update(LATE_QUERIES)
-ORACLES.update(LATE_ORACLES)
-
-# round-13 additions (VERDICT r12 #5/#6): iterative BPE merge training
-# and BM25 retrieval scoring
-from .catalog_rank import RANK_ORACLES, RANK_QUERIES  # noqa: E402
-
-QUERIES.update(RANK_QUERIES)
-ORACLES.update(RANK_ORACLES)
-
-# ---------------------------------------------------------------------------
-# Gate ordering. The round driver gates exactly the FIRST `GATE_CAP`
-# entries of queries(), so registry order is a correctness-visibility
-# decision. Round-6 rotation (VERDICT r5 "Next round" #1 + #5): the 13
-# round-5 additions that never had a driver row (pivot_lang_counts,
-# unpivot_region_metrics, chunk_dedup_rebuild, corpus_mix_plan,
-# quantile_band_filter, embedding_quantize_error, ann_q8_rerank,
-# streaming_interval_join, bpe_merge_candidates, streaming_upsert_sink,
-# dup_span_extract, dup_span_removal, tfidf_top_terms) are promoted
-# into the gated prefix, plus the graph-surface pair user_vertices /
-# part_pair_edges (VERDICT #5: keep the reference's vertex/edge
-# workload fresh) and the SEVEN new round-6 entries (media_resize,
-# streaming_sliding_hits, rolling_time_revenue, doc_bigram_lm_score,
-# semantic_dedup, compaction_rollup, snapshot_cdc_diff — gated
-# immediately so they never sit in the no-driver-row state the last
-# three verdicts flagged). The 22 slots come exclusively from entries
-# carrying
-# >= 2 cumulative green driver rows (longest_streak r4+r5,
-# union_order_tiers r4+r5, retention_curve r4+r5, exact_percentiles
-# r4+r5, minhash_lsh_pairs r3+r4+r5, simhash_pairs r3+r4+r5,
-# ann_cosine_ivf r3+r4+r5, ann_cosine_lsh r4+r5, embedding_neardup
-# r3+r4+r5, media_features r4+r5, media_frame_sample r4+r5,
-# skew_salted_agg r3+r4+r5, asof_latest_order r3+r4+r5,
-# hash_sample_split r4+r5, stratified_sample r4+r5,
-# doc_decontaminate r4+r5, pack_token_stream r4+r5, doc_chunks r4+r5,
-# table_profile r4+r5, udf_enrich_broadcast r4+r5, metadata_scan
-# r4+r5, insert_select_rollup r4+r5). After this rotation EVERY registry entry has at least one
-# driver CORRECTNESS row (r1 ∪ … ∪ r6).
-# Rotated-out entries keep full in-repo coverage: tools/gate_check.py
-# runs the ENTIRE registry with the same oracles each round.
-# ---------------------------------------------------------------------------
 
 GATE_CAP = 50  # the driver gates exactly this many leading entries
 
-_GATE_FIRST = [
-    # -----------------------------------------------------------------
-    # r16 rotation (VERDICT r15 #2, the standing 3-round freshness
-    # policy): promote (a) ALL 44 entries whose newest driver row is
-    # r13 — exactly the cohort the r15 rotation queued at the head of
-    # _GATE_REST — and (b) the SIX new r16 entries (training-shard
-    # export, learned lang-ID + its confusion eval, the NB-gated
-    # flagship twin, IVFPQ posting-store compaction, batched BPE),
-    # gated immediately so they never sit without a driver row.
-    # 44 + 6 = 50 = GATE_CAP exactly. After this rotation no entry's
-    # newest driver row is older than r14.
-    # the 44 entries whose newest driver row was r13
-    "corpus_curation_pipeline", # flagship composed pipeline; r13 row
-    "streaming_dedup",      # dropDuplicatesWithinWatermark; r13 row
-    "doc_dedup_exact",      # A14; r13 row
-    "doc_lang_id",          # P9; r13 row
-    "doc_decontaminate",    # leakage scrub; r13 row
-    "pack_token_stream",    # sequence packing; r13 row
-    "doc_chunks",           # chunking primary; r13 row
-    "table_profile",        # one-pass profiling; r13 row
-    "udf_enrich_broadcast", # T6 / SURVEY 2.10; r13 row
-    "metadata_scan",        # S8 layouts; r13 row
-    "insert_select_rollup", # S9 S10; r13 row
-    "longest_streak",       # W12 streak half; r13 row
-    "union_order_tiers",    # U1 U2 P6; r13 row
-    "retention_curve",      # A16 + channel LIKE; r13 row
-    "exact_percentiles",    # exact distributed percentiles; r13 row
-    "minhash_lsh_pairs",    # banded LSH primary; r13 row
-    "ann_cosine_ivf",       # IVF cell-blocked ANN; r13 row
-    "ann_cosine_lsh",       # LSH-bucketed ANN; r13 row
-    "embedding_neardup",    # blocked embedding near-dup; r13 row
-    "media_features",       # multimodal feature extraction; r13 row
-    "media_frame_sample",   # frame sampling; r13 row
-    "hash_sample_split",    # deterministic hash split; r13 row
-    "stratified_sample",    # per-stratum exact quotas; r13 row
-    "bpe_train_merges",     # iterative BPE vocab training; r13 row
-    "bpe_encode_corpus",    # merge-table tokenizer application; r13 row
-    "bm25_top_docs",        # BM25 retrieval scoring; r13 row
-    "ann_pq_adc",           # PQ/ADC third ANN scale path; r13 row
-    "simhash_pairs",        # 4x15-bit pigeonhole near-dup; r13 row
-    "skew_salted_agg",      # salted skewed aggregate; r13 row
-    "asof_latest_order",    # as-of join; r13 row
-    "ngram_jaccard_pairs",  # prefix-filtered primary; r13 row
-    "array_metrics",        # J2 J4 J5 A12 A13 A6; r13 row
-    "fuzzy_customer_pairs", # PassJoin edit-distance ER; r13 row
-    "interpolate_daily_revenue", # gap-fill + linear interp; r13 row
-    "hll_user_cardinality", # HyperLogLog registers; r13 row
-    "session_concurrency_daily", # sweep-line concurrency; r13 row
-    "media_ahash_neardup",  # perceptual-hash image dedup; r13 row
-    "media_curation_pipeline", # composed image-dedup pass; r13 row
-    "user_vertices",        # W3 + map-typed vertex props; r13 row
-    "part_pair_edges",      # J9 pair self-join; r13 row
-    "media_real_decode",    # stdlib PNG round-trip; r13 row
-    "skew_salted_join",     # salted join twin; r13 row
-    "semantic_dedup",       # SemDeDup cluster-then-dedup; r13 row
-    "media_resize",         # NN resize + re-encode; r13 row
-    # new this round: gate immediately
-    "training_export_rollup", # mix->pack->shard write->manifest; NEW r16
-    "doc_lang_id_learned",  # multi-class hashed NB lang id; NEW r16
-    "lang_id_confusion",    # held-out confusion matrix; NEW r16
-    "corpus_curation_pipeline_learned", # NB-gated flagship twin; NEW r16
-    "ivfpq_index_compact",  # posting-store compaction; NEW r16
-    "bpe_train_merges_batched", # top-k batched merge rounds; NEW r16
+# The first GATE_CAP rows are the driver-gated prefix; tools/gate_check.py
+# runs every row with the same oracles.
+ENTRIES = [
+    Entry("corpus_curation_pipeline", extra.q_corpus_curation,
+          extra._corpus_curation_oracle(), "headline pinned quadratic"),
+    Entry("streaming_dedup", ext.q_streaming_dedup,
+          ext.ORACLE_STREAMING_DEDUP, "eager"),
+    Entry("doc_dedup_exact", q_doc_dedup_exact, ORACLE_DOC_EXACT, "headline"),
+    Entry("doc_lang_id", q_doc_lang_id, ORACLE_DOC_LANG),
+    Entry("doc_decontaminate", extra.q_decontaminate,
+          extra.ORACLE_DECONTAMINATE, "headline pinned"),
+    Entry("pack_token_stream", extra.q_pack_token_stream,
+          extra.ORACLE_PACK_TOKEN_STREAM, "headline"),
+    Entry("doc_chunks", extra.q_doc_chunks, extra.ORACLE_DOC_CHUNKS, "headline"),
+    Entry("table_profile", extra.q_table_profile, extra._profile_oracle()),
+    Entry("udf_enrich_broadcast", extra.q_udf_enrich_broadcast,
+          extra.ORACLE_UDF_ENRICH_BROADCAST),
+    Entry("metadata_scan", write.q_metadata_scan,
+          write.ORACLE_METADATA_SCAN, "headline pinned eager"),
+    Entry("insert_select_rollup", write.q_insert_select_rollup,
+          write.ORACLE_INSERT_SELECT, "eager"),
+    Entry("longest_streak", ext.q_longest_streak,
+          ext.ORACLE_LONGEST_STREAK, "headline"),
+    Entry("union_order_tiers", q_union_order_tiers, ORACLE_UNION_TIERS),
+    Entry("retention_curve", q_retention, ORACLE_RETENTION, "headline pinned"),
+    Entry("exact_percentiles", extra.q_exact_percentiles,
+          extra.ORACLE_EXACT_PERCENTILES, "headline pinned"),
+    Entry("minhash_lsh_pairs", q_minhash_pairs,
+          ORACLE_MINHASH, "headline pinned quadratic"),
+    Entry("ann_cosine_ivf", ext.q_ann_cosine_ivf,
+          ext.ORACLE_ANN_IVF, "headline pinned"),
+    Entry("ann_cosine_lsh", q_ann_cosine_lsh, ORACLE_ANN_LSH, "headline pinned"),
+    Entry("embedding_neardup", ext.q_embedding_neardup,
+          ext.ORACLE_EMBEDDING_NEARDUP, "headline quadratic"),
+    Entry("media_features", ext.q_media_features,
+          ext.ORACLE_MEDIA_FEATURES, "headline"),
+    Entry("media_frame_sample", ext.q_media_frame_sample, ext.ORACLE_MEDIA_FRAMES),
+    Entry("hash_sample_split", extra.q_hash_sample_split,
+          extra.ORACLE_HASH_SAMPLE_SPLIT, "headline"),
+    Entry("stratified_sample", extra.q_stratified_sample,
+          extra.ORACLE_STRATIFIED_SAMPLE, "headline"),
+    Entry("bpe_train_merges", rank.q_bpe_train_merges,
+          rank.ORACLE_BPE_TRAIN_MERGES, "headline pinned eager"),
+    Entry("bpe_encode_corpus", rank.q_bpe_encode_corpus,
+          rank.ORACLE_BPE_ENCODE_CORPUS, "headline pinned eager"),
+    Entry("bm25_top_docs", rank.q_bm25_top_docs, rank.ORACLE_BM25_TOP_DOCS, "headline"),
+    Entry("ann_pq_adc", rank.q_ann_pq_adc, rank.ORACLE_ANN_PQ_ADC, "headline pinned"),
+    Entry("simhash_pairs", q_simhash_pairs,
+          ORACLE_SIMHASH, "headline pinned quadratic"),
+    Entry("skew_salted_agg", ext.q_skew_salted_agg,
+          ext.ORACLE_SKEW_SALTED_AGG, "headline"),
+    Entry("asof_latest_order", extra.q_asof_latest_order,
+          extra.ORACLE_ASOF_LATEST_ORDER, "headline"),
+    Entry("ngram_jaccard_pairs", ext.q_ngram_jaccard,
+          ext.ORACLE_NGRAM_JACCARD, "headline pinned quadratic"),
+    Entry("array_metrics", q_array_metrics, ORACLE_ARRAY_METRICS, "headline pinned"),
+    Entry("fuzzy_customer_pairs", late.q_fuzzy_customer_pairs,
+          late.ORACLE_FUZZY_CUSTOMER_PAIRS, "headline pinned"),
+    Entry("interpolate_daily_revenue", late.q_interpolate_daily_revenue,
+          late.ORACLE_INTERPOLATE_DAILY_REVENUE, "headline pinned"),
+    Entry("hll_user_cardinality", late.q_hll_user_cardinality,
+          late.ORACLE_HLL_USER_CARDINALITY, "headline"),
+    Entry("session_concurrency_daily", late.q_session_concurrency_daily,
+          late.ORACLE_SESSION_CONCURRENCY_DAILY, "headline pinned"),
+    Entry("media_ahash_neardup", late.q_media_ahash_neardup,
+          late.ORACLE_MEDIA_AHASH_NEARDUP, "headline pinned"),
+    Entry("media_curation_pipeline", late.q_media_curation_pipeline,
+          late.ORACLE_MEDIA_CURATION_PIPELINE, "headline pinned"),
+    Entry("user_vertices", ext.q_user_vertices, ext.ORACLE_USER_VERTICES, "headline"),
+    Entry("part_pair_edges", q_part_pair_edges, ORACLE_PART_PAIRS, "headline pinned"),
+    Entry("media_real_decode", ext.q_media_real_decode,
+          ext.ORACLE_MEDIA_REAL_DECODE, "headline"),
+    Entry("skew_salted_join", ext.q_skew_salted_join, ext.ORACLE_SKEW_SALTED_JOIN),
+    Entry("semantic_dedup", ext.q_semantic_dedup,
+          ext.ORACLE_SEMANTIC_DEDUP, "headline pinned"),
+    Entry("media_resize", ext.q_media_resize, ext.ORACLE_MEDIA_RESIZE, "headline"),
+    Entry("training_export_rollup", write.q_training_export_rollup,
+          write.ORACLE_TRAINING_EXPORT, "headline pinned eager"),
+    Entry("doc_lang_id_learned", rank.q_doc_lang_id_learned,
+          rank.ORACLE_DOC_LANG_ID, "headline pinned"),
+    Entry("lang_id_confusion", rank.q_lang_id_confusion,
+          rank.ORACLE_LANG_ID_CONFUSION, "headline pinned"),
+    Entry("corpus_curation_pipeline_learned", extra.q_corpus_curation_learned,
+          extra._corpus_curation_learned_oracle(), "headline pinned quadratic"),
+    Entry("ivfpq_index_compact", rank.q_ivfpq_index_compact,
+          rank.ORACLE_IVFPQ_INDEX_COMPACT, "headline pinned eager"),
+    Entry("bpe_train_merges_batched", rank.q_bpe_train_merges_batched,
+          rank.ORACLE_BPE_TRAIN_MERGES_BATCHED, "headline pinned eager"),
+    Entry("training_export_tokenized", rank.q_training_export_tokenized,
+          rank.ORACLE_TRAINING_EXPORT_TOKENIZED, "headline pinned eager"),
+    Entry("doc_bigram_lm_score", mix.q_doc_bigram_lm_score,
+          mix.ORACLE_DOC_BIGRAM_LM_SCORE, "headline pinned"),
+    Entry("line_dedup_rebuild", late.q_line_dedup_rebuild,
+          late.ORACLE_LINE_DEDUP_REBUILD, "headline"),
+    Entry("kmv_set_ops", late.q_kmv_set_ops,
+          late.ORACLE_KMV_SET_OPS, "headline pinned"),
+    Entry("doc_winnow_fingerprint", ext.q_doc_winnow, ext._winnow_oracle(), "headline"),
+    Entry("doc_pii_redact", extra.q_doc_pii_redact,
+          extra.ORACLE_DOC_PII_REDACT, "headline"),
+    Entry("neardup_clusters", extra.q_neardup_clusters,
+          extra.ORACLE_NEARDUP_CLUSTERS, "headline pinned quadratic"),
+    Entry("pivot_lang_counts", mix.q_pivot_lang_counts,
+          mix.ORACLE_PIVOT_LANG_COUNTS, "headline"),
+    Entry("streaming_neardup_admission", ext.q_streaming_neardup_admission,
+          ext.ORACLE_STREAMING_NEARDUP_ADMISSION, "quadratic eager"),
+    Entry("pagerank_parts", mix.q_pagerank_parts,
+          mix.ORACLE_PAGERANK_PARTS, "headline pinned eager"),
+    Entry("bloom_prune_stats", mix.q_bloom_prune_stats,
+          mix.ORACLE_BLOOM_PRUNE_STATS, "headline pinned"),
+    Entry("countmin_token_freq", mix.q_countmin_token_freq,
+          mix.ORACLE_COUNTMIN_TOKEN_FREQ, "headline pinned"),
+    Entry("distinct_sketch_users", mix.q_distinct_sketch_users,
+          mix.ORACLE_DISTINCT_SKETCH_USERS, "headline"),
+    Entry("streaming_countmin", mix.q_streaming_countmin,
+          mix.ORACLE_STREAMING_COUNTMIN, "headline pinned eager"),
+    Entry("region_revenue", q_region_revenue, ORACLE_REGION_REVENUE, "headline"),
+    Entry("tumbling_hits", q_tumbling_hits, ORACLE_TUMBLING, "headline"),
+    Entry("host_activity_reduced", ext.q_host_activity_reduced,
+          ext.ORACLE_HOST_ACTIVITY, "headline pinned"),
+    Entry("top_supplier_per_nation", q_top_supplier_per_nation,
+          ORACLE_TOP_SUPPLIER, "headline"),
+    Entry("embedding_neardup_allpairs", ext.q_embedding_neardup_allpairs,
+          ext.ORACLE_EMBEDDING_NEARDUP_ALLPAIRS, "quadratic"),
+    Entry("acctbal_tiers", q_acctbal_tiers, ORACLE_ACCTBAL),
+    Entry("ann_cosine_topk", q_ann_cosine_topk, ORACLE_ANN, "headline pinned"),
+    Entry("bulk_rename_summary", extra.q_bulk_rename_summary,
+          extra.ORACLE_BULK_RENAME_SUMMARY),
+    Entry("csv_roundtrip_rollup", write.q_csv_roundtrip_rollup,
+          write.ORACLE_CSV_ROUNDTRIP, "eager"),
+    Entry("dedup_keep_first", q_dedup_keep_first, ORACLE_DEDUP_KEEP_FIRST),
+    Entry("distinct_users", q_distinct_users, ORACLE_DISTINCT_USERS),
+    Entry("doc_quality", q_doc_quality, ORACLE_DOC_QUALITY, "headline"),
+    Entry("doc_token_stats", q_doc_token_stats, ORACLE_DOC_TOKENS, "headline"),
+    Entry("doc_winnow_neardup_pairs", ext.q_doc_winnow_pairs,
+          ext._winnow_pairs_oracle(), "quadratic"),
+    Entry("filter_by_top1", q_filter_by_top1, ORACLE_FILTER_TOP1),
+    Entry("growth_accounting", q_growth_accounting, ORACLE_GROWTH, "headline"),
+    Entry("json_props", q_json_props, ORACLE_JSON),
+    Entry("part_type_tiers", q_part_type_tiers, ORACLE_PART_TIERS),
+    Entry("sorted_layout_rollup", write.q_sorted_layout_rollup,
+          write.ORACLE_SORTED_LAYOUT, "eager"),
+    Entry("ann_ivfpq", rank.q_ann_ivfpq, rank.ORACLE_ANN_IVFPQ, "headline pinned"),
+    Entry("hybrid_rrf_topk", rank.q_hybrid_rrf_topk,
+          rank.ORACLE_HYBRID_RRF, "headline pinned"),
+    Entry("bpe_train_merges_bytes", rank.q_bpe_train_merges_bytes,
+          rank.ORACLE_BPE_TRAIN_MERGES_BYTES, "headline pinned"),
+    Entry("streaming_bpe_encode", rank.q_streaming_bpe_encode,
+          rank.ORACLE_STREAMING_BPE_ENCODE, "eager"),
+    Entry("vocab_coverage_curve", rank.q_vocab_coverage_curve,
+          rank.ORACLE_VOCAB_COVERAGE, "headline"),
+    Entry("streaming_embedding_admission", rank.q_streaming_embedding_admission,
+          rank.ORACLE_STREAMING_EMBEDDING_ADMISSION, "eager"),
+    Entry("pipeline_replay_31d", late.q_pipeline_replay_31d,
+          late.ORACLE_PIPELINE_REPLAY_31D, "eager"),
+    Entry("rolling_time_revenue", mix.q_rolling_time_revenue,
+          mix.ORACLE_ROLLING_TIME_REVENUE, "headline"),
+    Entry("zscore_anomaly_days", late.q_zscore_anomaly_days,
+          late.ORACLE_ZSCORE_ANOMALY_DAYS, "headline"),
+    Entry("unpivot_region_metrics", mix.q_unpivot_region_metrics,
+          mix.ORACLE_UNPIVOT_REGION_METRICS, "headline"),
+    Entry("chunk_dedup_rebuild", mix.q_chunk_dedup_rebuild,
+          mix.ORACLE_CHUNK_DEDUP_REBUILD, "headline"),
+    Entry("corpus_mix_plan", mix.q_corpus_mix_plan,
+          mix.ORACLE_CORPUS_MIX_PLAN, "headline"),
+    Entry("quantile_band_filter", mix.q_quantile_band_filter,
+          mix.ORACLE_QUANTILE_BAND_FILTER, "headline"),
+    Entry("embedding_quantize_error", mix.q_embedding_quantize_error,
+          mix.ORACLE_EMBEDDING_QUANTIZE_ERROR, "headline"),
+    Entry("ann_q8_rerank", mix.q_ann_q8_rerank,
+          mix.ORACLE_ANN_Q8_RERANK, "headline pinned"),
+    Entry("bpe_merge_candidates", mix.q_bpe_merge_candidates,
+          mix.ORACLE_BPE_MERGE_CANDIDATES, "headline"),
+    Entry("dup_span_extract", mix.q_dup_span_extract,
+          mix.ORACLE_DUP_SPAN_EXTRACT, "headline pinned"),
+    Entry("dup_span_removal", mix.q_dup_span_removal,
+          mix.ORACLE_DUP_SPAN_REMOVAL, "headline pinned"),
+    Entry("datelist_int", q_datelist_int, ORACLE_DATELIST, "headline"),
+    Entry("tfidf_top_terms", mix.q_tfidf_top_terms,
+          mix.ORACLE_TFIDF_TOP_TERMS, "headline"),
+    Entry("histogram_quantiles", mix.q_histogram_quantiles,
+          mix.ORACLE_HISTOGRAM_QUANTILES, "headline"),
+    Entry("hard_negative_mining", mix.q_hard_negative_mining,
+          mix.ORACLE_HARD_NEGATIVE_MINING, "headline"),
+    Entry("zorder_locality_stats", mix.q_zorder_locality_stats,
+          mix.ORACLE_ZORDER_LOCALITY_STATS, "headline"),
+    Entry("incremental_agg_merge", mix.q_incremental_agg_merge,
+          mix.ORACLE_INCREMENTAL_AGG_MERGE, "headline"),
+    Entry("last_touch_attribution", mix.q_last_touch_attribution,
+          mix.ORACLE_LAST_TOUCH_ATTRIBUTION, "headline"),
+    Entry("orc_roundtrip_rollup", write.q_orc_roundtrip_rollup,
+          write.ORACLE_ORC_ROUNDTRIP, "headline eager"),
+    Entry("top_event_paths", mix.q_top_event_paths,
+          mix.ORACLE_TOP_EVENT_PATHS, "headline"),
+    Entry("snapshot_cdc_diff", mix.q_snapshot_cdc_diff,
+          mix.ORACLE_SNAPSHOT_CDC_DIFF, "headline"),
+    Entry("compaction_rollup", write.q_compaction_rollup,
+          write.ORACLE_COMPACTION, "headline pinned eager"),
+    Entry("streaming_sliding_hits", ext.q_streaming_sliding,
+          ext.ORACLE_STREAMING_SLIDING, "eager"),
+    Entry("streaming_interval_join", mix.q_streaming_interval_join,
+          mix.ORACLE_STREAMING_INTERVAL_JOIN, "eager"),
+    Entry("streaming_upsert_sink", mix.q_streaming_upsert_sink,
+          mix.ORACLE_STREAMING_UPSERT_SINK, "eager"),
+    Entry("table_profile_approx", extra.q_table_profile_approx,
+          extra._profile_approx_oracle(), "headline pinned"),
+    Entry("percentiles_approx", extra.q_percentiles_approx,
+          extra.ORACLE_PERCENTILES_APPROX, "headline pinned"),
+    Entry("doc_priority_sample", extra.q_doc_priority_sample,
+          extra.ORACLE_DOC_PRIORITY_SAMPLE, "headline"),
+    Entry("scd_incremental", ext.q_scd_incremental,
+          ext.ORACLE_SCD_INCREMENTAL, "headline pinned"),
+    Entry("scd_replay_31d", late.q_scd_replay_31d, late.ORACLE_SCD_REPLAY_31D, "eager"),
+    Entry("users_cumulated_replay_31d", late.q_users_cumulated_replay_31d,
+          late.ORACLE_USERS_CUMULATED_REPLAY_31D, "eager"),
+    Entry("pricing_summary", q_pricing_summary, ORACLE_PRICING, "headline"),
+    Entry("customer_order_spine", q_customer_order_spine, ORACLE_SPINE, "headline"),
+    Entry("top_customers", q_top_customers, ORACLE_TOP_CUSTOMERS, "headline"),
+    Entry("grouping_sets", q_grouping_sets, ORACLE_GROUPING_SETS, "headline"),
+    Entry("funnel_conversion", q_funnel, ORACLE_FUNNEL, "headline pinned"),
+    Entry("scd_streaks", q_scd_streaks, ORACLE_SCD, "headline pinned"),
+    Entry("users_cumulated", q_users_cumulated, ORACLE_USERS_CUMULATED),
+    Entry("sessionization", q_sessionization, ORACLE_SESSIONS, "headline"),
+    Entry("doc_ttr_repetition", extra.q_doc_ttr_repetition,
+          extra.ORACLE_DOC_TTR_REPETITION),
+    Entry("vocab_top_tokens", extra.q_vocab_top_tokens,
+          extra.ORACLE_VOCAB_TOP_TOKENS, "headline"),
+    Entry("neardup_clusters_star", extra.q_neardup_clusters_star,
+          extra.ORACLE_NEARDUP_CLUSTERS_STAR, "quadratic"),
+    Entry("ngram_jaccard_allpairs", ext.q_ngram_jaccard_allpairs,
+          ext.ORACLE_NGRAM_JACCARD_ALLPAIRS, "quadratic"),
+    Entry("rolling_revenue", q_rolling_revenue, ORACLE_ROLLING, "headline"),
+    Entry("order_history", ext.q_order_history,
+          ext.ORACLE_ORDER_HISTORY, "headline pinned"),
+    Entry("best_stretch", ext.q_best_stretch, ext.ORACLE_BEST_STRETCH, "headline"),
+    Entry("semi_anti_customers", ext.q_semi_anti_customers,
+          ext.ORACLE_SEMI_ANTI, "headline"),
+    Entry("merge_upsert", ext.q_merge_upsert, ext.ORACLE_MERGE_UPSERT, "headline"),
+    Entry("bucketed_join_rollup", write.q_bucketed_join_rollup,
+          write.ORACLE_BUCKETED_JOIN, "eager"),
+    Entry("ann_ivfpq_fulltrain", rank.q_ann_ivfpq_fulltrain,
+          rank.ORACLE_ANN_IVFPQ_FULLTRAIN, "headline pinned"),
+    Entry("doc_quality_classifier", rank.q_doc_quality_classifier,
+          rank.ORACLE_DOC_QUALITY_CLASSIFIER, "headline pinned"),
+    Entry("classifier_pr_eval", rank.q_classifier_pr_eval,
+          rank.ORACLE_CLASSIFIER_PR_EVAL, "headline pinned"),
+    Entry("streaming_ivfpq_index", rank.q_streaming_ivfpq_index,
+          rank.ORACLE_STREAMING_IVFPQ_INDEX, "headline pinned eager"),
+    Entry("unigram_train_vocab", rank.q_unigram_train_vocab,
+          rank.ORACLE_UNIGRAM_TRAIN_VOCAB, "headline pinned"),
+    Entry("unigram_encode_corpus", rank.q_unigram_encode_corpus,
+          rank.ORACLE_UNIGRAM_ENCODE_CORPUS, "headline pinned"),
+    Entry("partitioned_prune_rollup", write.q_partitioned_prune_rollup,
+          write.ORACLE_PARTITIONED_PRUNE, "eager"),
+    Entry("streaming_tumbling_hits", ext.q_streaming_tumbling,
+          ext.ORACLE_STREAMING_TUMBLING, "eager"),
+    Entry("streaming_kafka_mirror", ext.q_streaming_kafka_mirror,
+          ext.ORACLE_STREAMING_KAFKA_MIRROR, "eager"),
+    Entry("streaming_session_windows", ext.q_streaming_sessions,
+          ext.ORACLE_STREAMING_SESSIONS, "eager"),
+    Entry("streaming_foreachbatch_sink", ext.q_streaming_foreachbatch,
+          ext.ORACLE_STREAMING_FOREACHBATCH, "eager"),
+    Entry("streaming_stateful_sessions", ext.q_streaming_stateful,
+          ext.ORACLE_STREAMING_STATEFUL, "eager"),
 ]
 
-_GATE_REST = [
-    # SEVENTH new r16 entry: the 50-slot prefix is exactly filled by
-    # the 44-entry freshness cohort (displacing any of them would
-    # leave an r13 row aging past the 3-round invariant) + the six
-    # new entries above, so this one leads the r17 prefix instead of
-    # gating immediately; until then it is covered by the
-    # full-registry gate_check battery at HEAD like every rotated-out
-    # entry (GATECHECK_r16 logs), just without a driver row yet.
-    "training_export_tokenized",  # BPE ids -> packed windows -> shards; NEW r16
-    # the 50 r14-row entries: FIRST IN LINE for the r17 prefix (they
-    # will be exactly 3 rounds old then — the standing cadence)
-    "doc_bigram_lm_score",  # bigram-LM quality score; r14 row
-    "line_dedup_rebuild",   # C4/RefinedWeb segment removal; r14 row
-    "kmv_set_ops",          # bottom-k sketch set algebra; r14 row
-    "doc_winnow_fingerprint", # set-stats winnow twin; r14 row
-    "doc_pii_redact",       # regex PII counting + masking; r14 row
-    "neardup_clusters",     # CC + keep-one retention; r14 row
-    "pivot_lang_counts",    # groupBy().pivot(); r14 row
-    "streaming_neardup_admission", # stream-static LSH; r14 row
-    "pagerank_parts",       # guard off hot path; r14 row
-    "bloom_prune_stats",    # digest-fence family; r14 row
-    "countmin_token_freq",  # digest-fence family; r14 row
-    "distinct_sketch_users", # digest-fence family; r14 row
-    "streaming_countmin",   # digest-fence family; r14 row
-    "region_revenue",       # J3 J13; r14 row
-    "tumbling_hits",        # batch T3/T4 twin; r14 row
-    "host_activity_reduced", # J2 J12; r14 row
-    "top_supplier_per_nation", # J13 A15 W9; r14 row
-    "embedding_neardup_allpairs", # exact baseline twin; r14 row
-    "acctbal_tiers",        # P6; r14 row
-    "ann_cosine_topk",      # brute-force ANN baseline; r14 row
-    "bulk_rename_summary",  # P2; r14 row
-    "csv_roundtrip_rollup", # S2; r14 row
-    "dedup_keep_first",     # W3 W4; r14 row
-    "distinct_users",       # A4 A5; r14 row
-    "doc_quality",          # text quality score; r14 row
-    "doc_token_stats",      # token counting; r14 row
-    "doc_winnow_neardup_pairs", # winnow primary; r14 row
-    "filter_by_top1",       # P8 O6; r14 row
-    "growth_accounting",    # J1; r14 row
-    "json_props",           # JSON family; r14 row
-    "part_type_tiers",      # P5; r14 row
-    "sorted_layout_rollup", # O4 O5; r14 row
-    "ann_ivfpq",            # IVF + PQ-on-residuals (IVFADC); r14 row
-    "hybrid_rrf_topk",      # BM25 + ANN reciprocal-rank fusion; r14 row
-    "bpe_train_merges_bytes", # byte-level BPE training; r14 row
-    "streaming_bpe_encode", # streaming tokenizer application; r14 row
-    "vocab_coverage_curve", # Zipf coverage curve; r14 row
-    "streaming_embedding_admission", # vector ingest gate; r14 row
-    "pipeline_replay_31d",  # 31-day growth replay; r14 row
-    "rolling_time_revenue", # RANGE frame; r14 row
-    "zscore_anomaly_days",  # integer-exact z-score; r14 row
-    "unpivot_region_metrics", # unpivot wide->long; r14 row
-    "chunk_dedup_rebuild",  # sub-document dedup; r14 row
-    "corpus_mix_plan",      # mixing quotas; r14 row
-    "quantile_band_filter", # percentile trimming; r14 row
-    "embedding_quantize_error", # int8 SQ error; r14 row
-    "ann_q8_rerank",        # SQ8 + rerank; r14 row
-    "bpe_merge_candidates", # BPE pair stats; r14 row
-    "dup_span_extract",     # duplicate-span extraction; r14 row
-    "dup_span_removal",     # cleaned-corpus rebuild; r14 row
-    # rotated out r16: the r15 prefix (each entry holds a fresh r15
-    # driver row; operator ids stay covered by the gate_check
-    # full-registry run at HEAD each round)
-    "datelist_int",         # A10 A11; r15 row
-    "tfidf_top_terms",      # tf-idf keywords; r15 row
-    "histogram_quantiles",  # bin-histogram quantiles; r15 row
-    "hard_negative_mining", # contrastive ANN; r15 row
-    "zorder_locality_stats", # Morton clustering; r15 row
-    "incremental_agg_merge", # partial-agg maintenance; r15 row
-    "last_touch_attribution", # last_value window; r15 row
-    "orc_roundtrip_rollup", # ORC round-trip; r15 row
-    "top_event_paths",      # trigram path mining; r15 row
-    "snapshot_cdc_diff",    # change-data-feed; r15 row
-    "compaction_rollup",    # OPTIMIZE round-trip; r15 row
-    "streaming_sliding_hits", # hopping-window twin; r15 row
-    "streaming_interval_join", # stream-stream interval join; r15 row
-    "streaming_upsert_sink", # streaming merge sink; r15 row
-    "table_profile_approx", # HLL profile w/ 5-sigma envelope; r15 row
-    "percentiles_approx",   # GK-sketch rank-error envelope; r15 row
-    "doc_priority_sample",  # weighted priority sampling; r15 row
-    "scd_incremental",      # double-advance guard; r15 row
-    "scd_replay_31d",       # 31-day SCD incremental replay; r15 row
-    "users_cumulated_replay_31d", # 31-day datelist replay; r15 row
-    "pricing_summary",      # P3 A3 A17; r15 row
-    "customer_order_spine", # J10 J11 J15; r15 row
-    "top_customers",        # J3 J13 A15 O1-O3; r15 row
-    "grouping_sets",        # A9 S3; r15 row
-    "funnel_conversion",    # P7 J8 A16; r15 row
-    "scd_streaks",          # W1 W2 A1; r15 row
-    "users_cumulated",      # P4 A7 J1; r15 row
-    "sessionization",       # W2 P4; r15 row
-    "doc_ttr_repetition",   # TTR/repetition stats; r15 row
-    "vocab_top_tokens",     # corpus vocabulary df table; r15 row
-    "neardup_clusters_star", # large/small-star CC twin; r15 row
-    "ngram_jaccard_allpairs", # exact baseline twin; r15 row
-    "rolling_revenue",      # W5-W8 W11; r15 row
-    "order_history",        # A6 W10; r15 row
-    "best_stretch",         # W9 W12; r15 row
-    "semi_anti_customers",  # J6 J7; r15 row
-    "merge_upsert",         # S11 J1; r15 row
-    "bucketed_join_rollup", # S4 S5 J14; r15 row
-    "ann_ivfpq_fulltrain",  # distributed full-corpus Lloyd; NEW r15; r15 row
-    "doc_quality_classifier", # hashed NB quality scoring; NEW r15; r15 row
-    "classifier_pr_eval",   # held-out PR/threshold sweep; NEW r15; r15 row
-    "streaming_ivfpq_index", # incremental ANN index maint; NEW r15; r15 row
-    "unigram_train_vocab",  # SentencePiece-shape unigram EM; NEW r15; r15 row
-    "unigram_encode_corpus", # unigram tokenizer application; NEW r15; r15 row
-    "partitioned_prune_rollup", # S6 S7; r15 row
-    "streaming_tumbling_hits", # T1 T3 T4; r15 row
-    "streaming_kafka_mirror", # S12 S14; r15 row
-    "streaming_session_windows", # T5; r15 row
-    "streaming_foreachbatch_sink", # T7 T8 S13; r15 row
-    "streaming_stateful_sessions", # stateful op; r15 row
-]
+QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    e.name: e.fn for e in ENTRIES
+}
+ORACLES: dict[str, str] = {e.name: e.oracle for e in ENTRIES}
+assert len(QUERIES) == len(ENTRIES), "duplicate entry names"
+assert all(set(e.tags.split()) <= TAGS.keys() for e in ENTRIES), "unknown tag"
 
-assert len(_GATE_FIRST) == GATE_CAP, (
-    f"gated prefix has {len(_GATE_FIRST)} entries, driver cap is {GATE_CAP}"
-)
 
-GATE_ORDER = _GATE_FIRST + _GATE_REST
-
-assert set(GATE_ORDER) == set(QUERIES), (
-    "GATE_ORDER out of sync with registry: "
-    f"missing={set(QUERIES) - set(GATE_ORDER)} "
-    f"stale={set(GATE_ORDER) - set(QUERIES)}"
-)
-QUERIES = {name: QUERIES[name] for name in GATE_ORDER}
-ORACLES = {name: ORACLES[name] for name in GATE_ORDER if name in ORACLES}
+def tagged(tag: str) -> list[str]:
+    """Names of the entries carrying `tag`, in table order."""
+    if tag not in TAGS:
+        raise ValueError(f"unknown tag {tag!r}; known: {sorted(TAGS)}")
+    return [e.name for e in ENTRIES if tag in e.tags.split()]

@@ -1601,70 +1601,3 @@ SELECT i.doc_id,
        COALESCE(m.n_neardups, 0) = 0 AS admitted
 FROM inc i LEFT JOIN m ON i.doc_id = m.doc_id
 """
-
-
-EXT_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "scd_incremental": q_scd_incremental,
-    "order_history": q_order_history,
-    "host_activity_reduced": q_host_activity_reduced,
-    "longest_streak": q_longest_streak,
-    "best_stretch": q_best_stretch,
-    "semi_anti_customers": q_semi_anti_customers,
-    "merge_upsert": q_merge_upsert,
-    "user_vertices": q_user_vertices,
-    "ngram_jaccard_pairs": q_ngram_jaccard,
-    "ngram_jaccard_allpairs": q_ngram_jaccard_allpairs,
-    "embedding_neardup": q_embedding_neardup,
-    "embedding_neardup_allpairs": q_embedding_neardup_allpairs,
-    "media_features": q_media_features,
-    "media_frame_sample": q_media_frame_sample,
-    "media_real_decode": q_media_real_decode,
-    "media_resize": q_media_resize,
-    "streaming_tumbling_hits": q_streaming_tumbling,
-    "streaming_sliding_hits": q_streaming_sliding,
-    "streaming_session_windows": q_streaming_sessions,
-    "streaming_foreachbatch_sink": q_streaming_foreachbatch,
-    "streaming_stateful_sessions": q_streaming_stateful,
-    "streaming_kafka_mirror": q_streaming_kafka_mirror,
-    "streaming_dedup": q_streaming_dedup,
-    "streaming_neardup_admission": q_streaming_neardup_admission,
-    "skew_salted_agg": q_skew_salted_agg,
-    "skew_salted_join": q_skew_salted_join,
-    "doc_winnow_fingerprint": q_doc_winnow,
-    "doc_winnow_neardup_pairs": q_doc_winnow_pairs,
-    "ann_cosine_ivf": q_ann_cosine_ivf,
-    "semantic_dedup": q_semantic_dedup,
-}
-
-EXT_ORACLES: dict[str, str] = {
-    "scd_incremental": ORACLE_SCD_INCREMENTAL,
-    "order_history": ORACLE_ORDER_HISTORY,
-    "host_activity_reduced": ORACLE_HOST_ACTIVITY,
-    "longest_streak": ORACLE_LONGEST_STREAK,
-    "best_stretch": ORACLE_BEST_STRETCH,
-    "semi_anti_customers": ORACLE_SEMI_ANTI,
-    "merge_upsert": ORACLE_MERGE_UPSERT,
-    "user_vertices": ORACLE_USER_VERTICES,
-    "ngram_jaccard_pairs": ORACLE_NGRAM_JACCARD,
-    "ngram_jaccard_allpairs": ORACLE_NGRAM_JACCARD_ALLPAIRS,
-    "embedding_neardup": ORACLE_EMBEDDING_NEARDUP,
-    "embedding_neardup_allpairs": ORACLE_EMBEDDING_NEARDUP_ALLPAIRS,
-    "media_features": ORACLE_MEDIA_FEATURES,
-    "media_frame_sample": ORACLE_MEDIA_FRAMES,
-    "media_real_decode": ORACLE_MEDIA_REAL_DECODE,
-    "media_resize": ORACLE_MEDIA_RESIZE,
-    "streaming_tumbling_hits": ORACLE_STREAMING_TUMBLING,
-    "streaming_sliding_hits": ORACLE_STREAMING_SLIDING,
-    "streaming_session_windows": ORACLE_STREAMING_SESSIONS,
-    "streaming_foreachbatch_sink": ORACLE_STREAMING_FOREACHBATCH,
-    "streaming_stateful_sessions": ORACLE_STREAMING_STATEFUL,
-    "streaming_kafka_mirror": ORACLE_STREAMING_KAFKA_MIRROR,
-    "streaming_dedup": ORACLE_STREAMING_DEDUP,
-    "streaming_neardup_admission": ORACLE_STREAMING_NEARDUP_ADMISSION,
-    "skew_salted_agg": ORACLE_SKEW_SALTED_AGG,
-    "skew_salted_join": ORACLE_SKEW_SALTED_JOIN,
-    "doc_winnow_fingerprint": _winnow_oracle(),
-    "doc_winnow_neardup_pairs": _winnow_pairs_oracle(),
-    "ann_cosine_ivf": ORACLE_ANN_IVF,
-    "semantic_dedup": ORACLE_SEMANTIC_DEDUP,
-}

@@ -24,8 +24,6 @@ names as operators:
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -1277,50 +1275,3 @@ GROUP BY token
 ORDER BY n_total DESC, token ASC
 LIMIT 50
 """
-
-
-EXTRA_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "asof_latest_order": q_asof_latest_order,
-    "exact_percentiles": q_exact_percentiles,
-    "percentiles_approx": q_percentiles_approx,
-    "doc_ttr_repetition": q_doc_ttr_repetition,
-    "udf_enrich_broadcast": q_udf_enrich_broadcast,
-    "bulk_rename_summary": q_bulk_rename_summary,
-    "hash_sample_split": q_hash_sample_split,
-    "corpus_curation_pipeline": q_corpus_curation,
-    "corpus_curation_pipeline_learned": q_corpus_curation_learned,
-    "stratified_sample": q_stratified_sample,
-    "doc_priority_sample": q_doc_priority_sample,
-    "doc_decontaminate": q_decontaminate,
-    "doc_chunks": q_doc_chunks,
-    "pack_token_stream": q_pack_token_stream,
-    "table_profile": q_table_profile,
-    "table_profile_approx": q_table_profile_approx,
-    "neardup_clusters": q_neardup_clusters,
-    "neardup_clusters_star": q_neardup_clusters_star,
-    "doc_pii_redact": q_doc_pii_redact,
-    "vocab_top_tokens": q_vocab_top_tokens,
-}
-
-EXTRA_ORACLES: dict[str, str] = {
-    "asof_latest_order": ORACLE_ASOF_LATEST_ORDER,
-    "exact_percentiles": ORACLE_EXACT_PERCENTILES,
-    "percentiles_approx": ORACLE_PERCENTILES_APPROX,
-    "doc_ttr_repetition": ORACLE_DOC_TTR_REPETITION,
-    "udf_enrich_broadcast": ORACLE_UDF_ENRICH_BROADCAST,
-    "bulk_rename_summary": ORACLE_BULK_RENAME_SUMMARY,
-    "hash_sample_split": ORACLE_HASH_SAMPLE_SPLIT,
-    "corpus_curation_pipeline": _corpus_curation_oracle(),
-    "corpus_curation_pipeline_learned": _corpus_curation_learned_oracle(),
-    "stratified_sample": ORACLE_STRATIFIED_SAMPLE,
-    "doc_priority_sample": ORACLE_DOC_PRIORITY_SAMPLE,
-    "doc_decontaminate": ORACLE_DECONTAMINATE,
-    "doc_chunks": ORACLE_DOC_CHUNKS,
-    "pack_token_stream": ORACLE_PACK_TOKEN_STREAM,
-    "table_profile": _profile_oracle(),
-    "table_profile_approx": _profile_approx_oracle(),
-    "neardup_clusters": ORACLE_NEARDUP_CLUSTERS,
-    "neardup_clusters_star": ORACLE_NEARDUP_CLUSTERS_STAR,
-    "doc_pii_redact": ORACLE_DOC_PII_REDACT,
-    "vocab_top_tokens": ORACLE_VOCAB_TOP_TOKENS,
-}

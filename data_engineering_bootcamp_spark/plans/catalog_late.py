@@ -7,8 +7,6 @@ columns match its ORACLE_* DuckDB SQL twin exactly.
 
 from __future__ import annotations
 
-from collections.abc import Callable
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -1107,34 +1105,3 @@ SELECT user_id,
        CAST(COUNT(DISTINCT d) AS INT) AS n_days
 FROM daily GROUP BY user_id
 """
-
-
-LATE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "fuzzy_customer_pairs": q_fuzzy_customer_pairs,
-    "interpolate_daily_revenue": q_interpolate_daily_revenue,
-    "hll_user_cardinality": q_hll_user_cardinality,
-    "session_concurrency_daily": q_session_concurrency_daily,
-    "media_ahash_neardup": q_media_ahash_neardup,
-    "media_curation_pipeline": q_media_curation_pipeline,
-    "line_dedup_rebuild": q_line_dedup_rebuild,
-    "kmv_set_ops": q_kmv_set_ops,
-    "zscore_anomaly_days": q_zscore_anomaly_days,
-    "pipeline_replay_31d": q_pipeline_replay_31d,
-    "scd_replay_31d": q_scd_replay_31d,
-    "users_cumulated_replay_31d": q_users_cumulated_replay_31d,
-}
-
-LATE_ORACLES: dict[str, str] = {
-    "fuzzy_customer_pairs": ORACLE_FUZZY_CUSTOMER_PAIRS,
-    "interpolate_daily_revenue": ORACLE_INTERPOLATE_DAILY_REVENUE,
-    "hll_user_cardinality": ORACLE_HLL_USER_CARDINALITY,
-    "session_concurrency_daily": ORACLE_SESSION_CONCURRENCY_DAILY,
-    "media_ahash_neardup": ORACLE_MEDIA_AHASH_NEARDUP,
-    "media_curation_pipeline": ORACLE_MEDIA_CURATION_PIPELINE,
-    "line_dedup_rebuild": ORACLE_LINE_DEDUP_REBUILD,
-    "kmv_set_ops": ORACLE_KMV_SET_OPS,
-    "zscore_anomaly_days": ORACLE_ZSCORE_ANOMALY_DAYS,
-    "pipeline_replay_31d": ORACLE_PIPELINE_REPLAY_31D,
-    "scd_replay_31d": ORACLE_SCD_REPLAY_31D,
-    "users_cumulated_replay_31d": ORACLE_USERS_CUMULATED_REPLAY_31D,
-}

@@ -30,7 +30,6 @@ error sums) are documented on the operators.
 from __future__ import annotations
 
 import tempfile
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -1693,64 +1692,3 @@ FROM probe p
 LEFT JOIN counters c ON p.i = c.row AND p.pos = c.pos
 GROUP BY p.user_id, p.n_exact
 """
-
-
-MIX_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "pivot_lang_counts": q_pivot_lang_counts,
-    "unpivot_region_metrics": q_unpivot_region_metrics,
-    "chunk_dedup_rebuild": q_chunk_dedup_rebuild,
-    "corpus_mix_plan": q_corpus_mix_plan,
-    "quantile_band_filter": q_quantile_band_filter,
-    "embedding_quantize_error": q_embedding_quantize_error,
-    "ann_q8_rerank": q_ann_q8_rerank,
-    "streaming_interval_join": q_streaming_interval_join,
-    "bpe_merge_candidates": q_bpe_merge_candidates,
-    "streaming_upsert_sink": q_streaming_upsert_sink,
-    "dup_span_extract": q_dup_span_extract,
-    "tfidf_top_terms": q_tfidf_top_terms,
-    "dup_span_removal": q_dup_span_removal,
-    "rolling_time_revenue": q_rolling_time_revenue,
-    "doc_bigram_lm_score": q_doc_bigram_lm_score,
-    "snapshot_cdc_diff": q_snapshot_cdc_diff,
-    "pagerank_parts": q_pagerank_parts,
-    "histogram_quantiles": q_histogram_quantiles,
-    "hard_negative_mining": q_hard_negative_mining,
-    "bloom_prune_stats": q_bloom_prune_stats,
-    "distinct_sketch_users": q_distinct_sketch_users,
-    "zorder_locality_stats": q_zorder_locality_stats,
-    "countmin_token_freq": q_countmin_token_freq,
-    "incremental_agg_merge": q_incremental_agg_merge,
-    "last_touch_attribution": q_last_touch_attribution,
-    "top_event_paths": q_top_event_paths,
-    "streaming_countmin": q_streaming_countmin,
-}
-
-MIX_ORACLES: dict[str, str] = {
-    "pivot_lang_counts": ORACLE_PIVOT_LANG_COUNTS,
-    "unpivot_region_metrics": ORACLE_UNPIVOT_REGION_METRICS,
-    "chunk_dedup_rebuild": ORACLE_CHUNK_DEDUP_REBUILD,
-    "corpus_mix_plan": ORACLE_CORPUS_MIX_PLAN,
-    "quantile_band_filter": ORACLE_QUANTILE_BAND_FILTER,
-    "embedding_quantize_error": ORACLE_EMBEDDING_QUANTIZE_ERROR,
-    "ann_q8_rerank": ORACLE_ANN_Q8_RERANK,
-    "streaming_interval_join": ORACLE_STREAMING_INTERVAL_JOIN,
-    "bpe_merge_candidates": ORACLE_BPE_MERGE_CANDIDATES,
-    "streaming_upsert_sink": ORACLE_STREAMING_UPSERT_SINK,
-    "dup_span_extract": ORACLE_DUP_SPAN_EXTRACT,
-    "tfidf_top_terms": ORACLE_TFIDF_TOP_TERMS,
-    "dup_span_removal": ORACLE_DUP_SPAN_REMOVAL,
-    "rolling_time_revenue": ORACLE_ROLLING_TIME_REVENUE,
-    "doc_bigram_lm_score": ORACLE_DOC_BIGRAM_LM_SCORE,
-    "snapshot_cdc_diff": ORACLE_SNAPSHOT_CDC_DIFF,
-    "pagerank_parts": ORACLE_PAGERANK_PARTS,
-    "histogram_quantiles": ORACLE_HISTOGRAM_QUANTILES,
-    "hard_negative_mining": ORACLE_HARD_NEGATIVE_MINING,
-    "bloom_prune_stats": ORACLE_BLOOM_PRUNE_STATS,
-    "distinct_sketch_users": ORACLE_DISTINCT_SKETCH_USERS,
-    "zorder_locality_stats": ORACLE_ZORDER_LOCALITY_STATS,
-    "countmin_token_freq": ORACLE_COUNTMIN_TOKEN_FREQ,
-    "incremental_agg_merge": ORACLE_INCREMENTAL_AGG_MERGE,
-    "last_touch_attribution": ORACLE_LAST_TOUCH_ATTRIBUTION,
-    "top_event_paths": ORACLE_TOP_EVENT_PATHS,
-    "streaming_countmin": ORACLE_STREAMING_COUNTMIN,
-}

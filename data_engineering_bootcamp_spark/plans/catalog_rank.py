@@ -32,7 +32,6 @@ third ANN scale path (PQ/ADC) and the tokenizer-application pass.
 from __future__ import annotations
 
 import tempfile
-from collections.abc import Callable
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -2746,52 +2745,3 @@ ORACLE_HYBRID_RRF = (
     "SELECT doc_id, rank_lex, rank_sem, rrf_nano, rank::INT AS rank\n"
     f"FROM fin WHERE rank <= {RRF_TOP_K}"
 )
-
-
-RANK_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bpe_train_merges": q_bpe_train_merges,
-    "bpe_encode_corpus": q_bpe_encode_corpus,
-    "bm25_top_docs": q_bm25_top_docs,
-    "ann_pq_adc": q_ann_pq_adc,
-    "ann_ivfpq": q_ann_ivfpq,
-    "ann_ivfpq_fulltrain": q_ann_ivfpq_fulltrain,
-    "doc_quality_classifier": q_doc_quality_classifier,
-    "classifier_pr_eval": q_classifier_pr_eval,
-    "doc_lang_id_learned": q_doc_lang_id_learned,
-    "lang_id_confusion": q_lang_id_confusion,
-    "streaming_ivfpq_index": q_streaming_ivfpq_index,
-    "ivfpq_index_compact": q_ivfpq_index_compact,
-    "training_export_tokenized": q_training_export_tokenized,
-    "unigram_train_vocab": q_unigram_train_vocab,
-    "unigram_encode_corpus": q_unigram_encode_corpus,
-    "hybrid_rrf_topk": q_hybrid_rrf_topk,
-    "bpe_train_merges_bytes": q_bpe_train_merges_bytes,
-    "bpe_train_merges_batched": q_bpe_train_merges_batched,
-    "streaming_bpe_encode": q_streaming_bpe_encode,
-    "vocab_coverage_curve": q_vocab_coverage_curve,
-    "streaming_embedding_admission": q_streaming_embedding_admission,
-}
-
-RANK_ORACLES: dict[str, str] = {
-    "bpe_train_merges": ORACLE_BPE_TRAIN_MERGES,
-    "bpe_encode_corpus": ORACLE_BPE_ENCODE_CORPUS,
-    "bm25_top_docs": ORACLE_BM25_TOP_DOCS,
-    "ann_pq_adc": ORACLE_ANN_PQ_ADC,
-    "ann_ivfpq": ORACLE_ANN_IVFPQ,
-    "ann_ivfpq_fulltrain": ORACLE_ANN_IVFPQ_FULLTRAIN,
-    "doc_quality_classifier": ORACLE_DOC_QUALITY_CLASSIFIER,
-    "classifier_pr_eval": ORACLE_CLASSIFIER_PR_EVAL,
-    "doc_lang_id_learned": ORACLE_DOC_LANG_ID,
-    "lang_id_confusion": ORACLE_LANG_ID_CONFUSION,
-    "streaming_ivfpq_index": ORACLE_STREAMING_IVFPQ_INDEX,
-    "ivfpq_index_compact": ORACLE_IVFPQ_INDEX_COMPACT,
-    "training_export_tokenized": ORACLE_TRAINING_EXPORT_TOKENIZED,
-    "unigram_train_vocab": ORACLE_UNIGRAM_TRAIN_VOCAB,
-    "unigram_encode_corpus": ORACLE_UNIGRAM_ENCODE_CORPUS,
-    "hybrid_rrf_topk": ORACLE_HYBRID_RRF,
-    "bpe_train_merges_bytes": ORACLE_BPE_TRAIN_MERGES_BYTES,
-    "bpe_train_merges_batched": ORACLE_BPE_TRAIN_MERGES_BATCHED,
-    "streaming_bpe_encode": ORACLE_STREAMING_BPE_ENCODE,
-    "vocab_coverage_curve": ORACLE_VOCAB_COVERAGE,
-    "streaming_embedding_admission": ORACLE_STREAMING_EMBEDDING_ADMISSION,
-}

@@ -28,7 +28,6 @@ import os
 import shutil
 import tempfile
 import uuid
-from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -620,28 +619,3 @@ SELECT shard::BIGINT AS shard,
        SUM(n_tokens)::BIGINT AS n_tokens
 FROM packs GROUP BY shard
 """
-
-
-WRITE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "bucketed_join_rollup": q_bucketed_join_rollup,
-    "partitioned_prune_rollup": q_partitioned_prune_rollup,
-    "sorted_layout_rollup": q_sorted_layout_rollup,
-    "csv_roundtrip_rollup": q_csv_roundtrip_rollup,
-    "orc_roundtrip_rollup": q_orc_roundtrip_rollup,
-    "insert_select_rollup": q_insert_select_rollup,
-    "metadata_scan": q_metadata_scan,
-    "compaction_rollup": q_compaction_rollup,
-    "training_export_rollup": q_training_export_rollup,
-}
-
-WRITE_ORACLES: dict[str, str] = {
-    "metadata_scan": ORACLE_METADATA_SCAN,
-    "bucketed_join_rollup": ORACLE_BUCKETED_JOIN,
-    "partitioned_prune_rollup": ORACLE_PARTITIONED_PRUNE,
-    "sorted_layout_rollup": ORACLE_SORTED_LAYOUT,
-    "csv_roundtrip_rollup": ORACLE_CSV_ROUNDTRIP,
-    "orc_roundtrip_rollup": ORACLE_ORC_ROUNDTRIP,
-    "insert_select_rollup": ORACLE_INSERT_SELECT,
-    "compaction_rollup": ORACLE_COMPACTION,
-    "training_export_rollup": ORACLE_TRAINING_EXPORT,
-}

@@ -205,8 +205,6 @@ def upsert_batch_writer(
     batch argmax.
     """
     import os
-    import shutil
-    import uuid
 
     def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
         spark = batch_df.sparkSession

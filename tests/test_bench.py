@@ -11,6 +11,7 @@ import sys
 import pytest
 
 import bench
+from data_engineering_bootcamp_spark.plans.catalog import tagged
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -18,7 +19,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 def _record(t: float) -> dict:
     """A full headline record with every query at `t` seconds, carrying
     every optional field the compact line can print."""
-    timings = {name: t for name in bench.HEADLINE}
+    timings = {name: t for name in tagged("headline")}
     total = round(t * len(timings), 3)
     return {
         "metric": "headline_queries_total_wall_sec",
@@ -33,8 +34,8 @@ def _record(t: float) -> dict:
         "host_factor_mc": 5.123,
         "value_host_normalized": round(total / 1.234, 3),
         "queries": timings,
-        "noisy_entries": bench.HEADLINE[:12],
-        "budget_degraded": bench.HEADLINE[:40],
+        "noisy_entries": tagged("headline")[:12],
+        "budget_degraded": tagged("headline")[:40],
         "errors": {"pricing_summary": "Py4JError: rep 3"},
     }
 
@@ -44,8 +45,8 @@ def test_compact_line_carries_pinned_set(t):
     line = bench.compact_line(_record(t), "BENCH_full.json")
     assert len(line.encode()) <= 1980
     doc = json.loads(line)
-    assert set(bench.COMPACT_PRIORITY) <= set(doc["queries"])
-    assert doc["queries_omitted"] + len(doc["queries"]) == len(bench.HEADLINE)
+    assert set(tagged("pinned")) <= set(doc["queries"])
+    assert doc["queries_omitted"] + len(doc["queries"]) == len(tagged("headline"))
     assert doc["n_noisy"] == 12 and doc["n_degraded"] == 40
     assert doc["n_errors_total"] == 1 and "n_errors" not in doc
 
@@ -54,8 +55,8 @@ def test_compact_line_sheds_from_the_end_when_pinned_set_overflows():
     line = bench.compact_line(_record(123.456), "BENCH_full.json")
     assert len(line.encode()) <= 1980
     printed = list(json.loads(line)["queries"])
-    assert 0 < len(printed) < len(bench.COMPACT_PRIORITY)
-    assert printed == bench.COMPACT_PRIORITY[: len(printed)]
+    assert 0 < len(printed) < len(tagged("pinned"))
+    assert printed == tagged("pinned")[: len(printed)]
 
 
 def test_median_of_reps():

@@ -14,66 +14,29 @@ load-bearing invariants permanent:
 
 The check explains, it does not execute — entries whose plan-build
 itself executes jobs (streaming seams, write-path round-trips,
-iterative checkpointed loops, the 31-day replays) are skipped with the
-same justifications as tools/plan_audit.py's SKIP set; their posture
-is covered by dedicated tests (streaming suite, writer exchange-count
-asserts, the scale bench sections).
+iterative checkpointed loops, the 31-day replays) carry the "eager" tag
+in plans/catalog.py's entry table and are skipped, as tools/plan_audit.py
+skips them; their posture is covered by dedicated tests (streaming suite,
+writer exchange-count asserts, the scale bench sections).
 """
 
 from __future__ import annotations
 
+import hashlib
 import io
+import json
 import re
 from contextlib import redirect_stdout
 
 import pytest
 
-from data_engineering_bootcamp_spark.plans.catalog import QUERIES
+from data_engineering_bootcamp_spark.plans.catalog import QUERIES, tagged
 
 SF_DIR = "/root/testdata/sf0.001"
 
-# mirrors tools/plan_audit.py SKIP (kept in sync by the count assert in
-# test_skip_set_is_current): plan-build executes jobs for these
-SKIP = {
-    "streaming_tumbling_hits",
-    "streaming_sliding_hits",
-    "streaming_session_windows",
-    "streaming_foreachbatch_sink",
-    "streaming_stateful_sessions",
-    "streaming_kafka_mirror",
-    "streaming_dedup",
-    "streaming_neardup_admission",
-    "streaming_interval_join",
-    "streaming_upsert_sink",
-    "streaming_countmin",
-    "streaming_bpe_encode",
-    "streaming_embedding_admission",
-    "streaming_ivfpq_index",
-    "bucketed_join_rollup",
-    "partitioned_prune_rollup",
-    "sorted_layout_rollup",
-    "csv_roundtrip_rollup",
-    "orc_roundtrip_rollup",
-    "insert_select_rollup",
-    "metadata_scan",
-    "compaction_rollup",
-    "training_export_rollup",
-    "ivfpq_index_compact",
-    "training_export_tokenized",
-    "pagerank_parts",
-    # iterative BPE training: each step's argmax winner is eagerly
-    # localCheckpointed at plan-build (the merge decision feeds the
-    # next step), so the final plan is a union of checkpointed 1-row
-    # scans; the per-step shape (1 pair-count groupBy + TakeOrdered(1)
-    # + broadcast merge map) is pinned by operators/bpe.py's design
-    # notes and the gate
-    "bpe_train_merges",
-    "bpe_encode_corpus",       # same: train jobs run at plan build
-    "bpe_train_merges_batched",  # same loop, k merges per round
-    "pipeline_replay_31d",
-    "scd_replay_31d",
-    "users_cumulated_replay_31d",
-}
+# entries whose plan build runs no jobs, in table order: the ones explained
+EAGER = set(tagged("eager"))
+EXPLAINED = [n for n in QUERIES if n not in EAGER]
 
 # BNLJ allowance (distinct plan nodes): every
 # entry here joins a BOUNDED side by construction — scalar bound rows
@@ -166,10 +129,8 @@ def _node_count(op: str, plan: str) -> int:
 def plans(spark):
     """Formatted plan per non-skipped entry, built once for the module."""
     out = {}
-    for name, fn in QUERIES.items():
-        if name in SKIP:
-            continue
-        df = fn(spark, SF_DIR)
+    for name in EXPLAINED:
+        df = QUERIES[name](spark, SF_DIR)
         buf = io.StringIO()
         with redirect_stdout(buf):
             df.explain("formatted")
@@ -251,10 +212,59 @@ def test_scans_are_column_pruned(plans):
     assert not wide, f"scan wider than audited cap (got, cap): {wide}"
 
 
-def test_skip_set_is_current():
-    """Every skipped name must still exist (catches silent rot)."""
-    stale = SKIP - set(QUERIES)
-    assert not stale, f"SKIP names no longer in the registry: {stale}"
+# sha256 of each fact the entry table must keep, recorded from the
+# hand-kept name lists in bench.py, tools/ and this module that the table
+# replaced
+TABLE_DIGESTS = {
+    "order": "85e65b674a2164e7d486f6917fa134eb9116c249dbaa4c1375ca981c8096f95b",
+    "fns": "a9ff2a4122b9838278bbf058acf8ab652e96dbfcbf864dcb7fb2f5c4ae19e71b",
+    "oracles": "0155273ed28266a773f35528d7b6a9984edcd3a6e6ee2f558cf12cac60215d0e",
+    "headline": "f343e6cd3677a3b397aa160388faf73258ed241ec2d938a3a7018060b9e066f6",
+    "pinned": "bac75e253ab18a01384b3cb76a306f4750dc5fb8362b9f5c7b2c5efd3b783303",
+    "sf01": "f91184e654b00a97bc935334b0f5a6db98a1c6ea402cd1ce06cfc70b273734dc",
+    "explained": "34a470e86e1b9f324c1dc9058a53777165d295daf27963e514fcdf9893df3343",
+}
+
+
+def test_entry_table_is_pinned():
+    """The entry table yields the same driver contract and the same
+    tagged sets as the lists it replaced: the queries() names in order,
+    the function behind each name, every oracle, and the headline (112),
+    pinned (56), sf0.1-feasible (139) and plan-explained (119) sets.
+    Digests, not copies, so the test does not become an eighth list.
+    metadata_scan's oracle names a per-process temp file; that path is
+    masked before hashing."""
+    import __spark_entry__ as entry
+
+    from data_engineering_bootcamp_spark.plans.catalog_write import (
+        _MANIFEST_CSV,
+    )
+
+    def digest(obj) -> str:
+        return hashlib.sha256(json.dumps(obj).encode()).hexdigest()
+
+    queries = entry.queries()
+    names = list(queries)
+    sf01 = sorted(set(names) - set(tagged("quadratic")))
+    sizes = [len(tagged("headline")), len(tagged("pinned")), len(sf01),
+             len(EXPLAINED)]
+    assert len(names) == 151 and sizes == [112, 56, 139, 119], sizes
+    got = {
+        "order": digest(names),
+        "fns": digest(sorted(
+            (n, f.__module__ + "." + f.__qualname__)
+            for n, f in queries.items()
+        )),
+        "oracles": digest(sorted(
+            (n, sql.replace(_MANIFEST_CSV, "<manifest>"))
+            for n, sql in entry.oracle_sql().items()
+        )),
+        "headline": digest(sorted(tagged("headline"))),
+        "pinned": digest(sorted(tagged("pinned"))),
+        "sf01": digest(sf01),
+        "explained": digest(sorted(EXPLAINED)),
+    }
+    assert got == TABLE_DIGESTS
 
 
 def test_pagerank_iteration_plan_shape(spark):

@@ -366,8 +366,10 @@ def test_minhash_banded_stream_batch_parity(spark, sf_small, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    q.stop()
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     streamed = {
         (r.doc_id, r.band, r.band_hash)
         for r in spark.read.parquet(out).collect()
@@ -425,9 +427,11 @@ def test_admission_stream_static_join_plan_shape(spark, sf_small, tmp_path):
             .trigger(availableNow=True)
             .start()
         )
-        q.awaitTermination()
-        plan = q._jsq.explainInternal(False)
-        q.stop()
+        try:
+            q.awaitTermination(120)
+            plan = q._jsq.explainInternal(False)
+        finally:
+            q.stop()
     finally:
         static_banded.unpersist()
 
@@ -480,8 +484,10 @@ def test_countmin_merge_sink_split_independent(spark, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
-    q.stop()
+    try:
+        q.awaitTermination(120)
+    finally:
+        q.stop()
     got = spark.read.parquet(os.path.join(store, "live"))
     whole = countmin_table(df, "user_id", depth=3, width=64)
     assert got.exceptAll(whole).count() == 0

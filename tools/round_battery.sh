@@ -7,9 +7,10 @@
 # Axes (all via tools/gate_check.py, a vanilla SparkSession):
 #   1. UTC sf0.01 full registry (the driver's own gate semantics)
 #   2. TZ robustness: America/New_York session timezone
-#   3. sf0.1 scale-up for the scalable-oracle entries (the 12
-#      exclusions are entries whose DuckDB ORACLES are deliberately
-#      quadratic/exhaustive baselines -- infeasible at sf0.1 by design)
+#   3. sf0.1 scale-up for the scalable-oracle entries (the entries
+#      tagged "quadratic" in plans/catalog.py's entry table are left
+#      out: their DuckDB oracles are deliberately quadratic/exhaustive
+#      baselines -- infeasible at sf0.1 by design)
 #   4. sf0.001 scale-down (degenerate groups/windows/bands)
 #   5. AQE + whole-stage codegen OFF
 #   6. ANSI mode flipped (Spark 4 defaults it ON, so the axis is OFF)
@@ -30,18 +31,10 @@ set -u
 R="${1:?usage: round_battery.sh rNN}"
 cd "$(dirname "$0")/.."
 
-# oracles that are deliberately quadratic / exhaustive -> excluded at sf0.1
-SF01_EXCLUDE="corpus_curation_pipeline corpus_curation_pipeline_learned \
-doc_winnow_neardup_pairs \
-embedding_neardup embedding_neardup_allpairs minhash_lsh_pairs \
-neardup_clusters neardup_clusters_star ngram_jaccard_allpairs \
-ngram_jaccard_pairs simhash_pairs streaming_neardup_admission"
-SF01_ONLY=$(python - <<EOF
-from data_engineering_bootcamp_spark.plans.catalog import QUERIES
-excl = set("""$SF01_EXCLUDE""".split())
-print(" ".join(n for n in QUERIES if n not in excl))
-EOF
-)
+SF01_ONLY=$(python -c '
+from data_engineering_bootcamp_spark.plans.catalog import QUERIES, tagged
+excl = set(tagged("quadratic"))
+print(" ".join(n for n in QUERIES if n not in excl))')
 
 run() { # run <logfile> <args...>
   local log="$1"; shift

@@ -513,7 +513,6 @@ def bench_streaming(spark) -> dict:
     Reported per query: wall, input rows, emitted rows, and the state
     store's own counters (rows total/updated/removed, memory) from the
     engine's progress telemetry."""
-    import shutil
     import tempfile
 
     from data_engineering_bootcamp_spark.streaming.pipelines import (
@@ -545,35 +544,39 @@ def bench_streaming(spark) -> dict:
             F.col("event_type").alias("host"),
         )
     )
-    src = tempfile.mkdtemp(prefix="scale_stream_src_")
-    big.repartition(20).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-    n_input = spark.read.parquet(src).count()
-    out: dict = {"source_rows": n_input, "source_files": 20,
-                 "max_files_per_trigger": 2}
+    # one scratch dir holds the source and every run's sink and
+    # checkpoint, so a failed write, start or wait leaks nothing
+    with tempfile.TemporaryDirectory(prefix="scale_stream_") as d:
+        src = os.path.join(d, "src")
+        big.repartition(20).write.mode("overwrite").parquet(src)
+        schema = spark.read.parquet(src).schema
+        n_input = spark.read.parquet(src).count()
+        out: dict = {"source_rows": n_input, "source_files": 20,
+                     "max_files_per_trigger": 2}
 
-    def run(label, build_query, sink_mode):
-        o = tempfile.mkdtemp(prefix=f"scale_stream_{label}_out_")
-        ck = tempfile.mkdtemp(prefix=f"scale_stream_{label}_ck_")
-        stream = (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 2)
-            .format("parquet")
-            .load(src)
-        )
-        t0 = time.perf_counter()
-        q = (
-            build_query(stream)
-            .writeStream.format("parquet")
-            .option("path", o)
-            .option("checkpointLocation", ck)
-            .outputMode(sink_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        try:
-            q.awaitTermination()
-            q.stop()
+        def run(label, build_query, sink_mode):
+            o = os.path.join(d, f"{label}_out")
+            ck = os.path.join(d, f"{label}_ck")
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 2)
+                .format("parquet")
+                .load(src)
+            )
+            t0 = time.perf_counter()
+            q = (
+                build_query(stream)
+                .writeStream.format("parquet")
+                .option("path", o)
+                .option("checkpointLocation", ck)
+                .outputMode(sink_mode)
+                .trigger(availableNow=True)
+                .start()
+            )
+            try:
+                q.awaitTermination()
+            finally:
+                q.stop()
             wall = round(time.perf_counter() - t0, 3)
             prog = q.recentProgress
             batches = len(prog)
@@ -606,11 +609,7 @@ def bench_streaming(spark) -> dict:
                 "emitted_rows": emitted,
                 "state": state,
             }
-        finally:
-            shutil.rmtree(o, ignore_errors=True)
-            shutil.rmtree(ck, ignore_errors=True)
 
-    try:
         out["tumbling_watermarked"] = run(
             "tumb",
             lambda s: tumbling_counts(
@@ -625,8 +624,6 @@ def bench_streaming(spark) -> dict:
             ),
             "append",
         )
-    finally:
-        shutil.rmtree(src, ignore_errors=True)
     return out
 
 
