@@ -34,6 +34,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
 
 
 def oracle_sql() -> dict[str, str]:
-    """DuckDB-runnable ANSI SQL oracle per query (omitted for the
-    xxhash64-based approximate operators → rows-only check)."""
+    """DuckDB-runnable SQL oracle for every query: each entry-table row
+    carries one, approximate operators included (their oracles replay
+    the deterministic recipe), so every query is value-checked."""
     return dict(ORACLES)

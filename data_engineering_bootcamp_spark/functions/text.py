@@ -78,6 +78,27 @@ def lang_id_heuristic(text: Column | str) -> Column:
     return expr
 
 
+def lang_id_sql(indent: str) -> tuple[str, str]:
+    """The DuckDB mirror of `lang_id_heuristic` over a `toks` list
+    column: the `h_<lang>` marker-hit select items, and the CASE that
+    names the language whose hits equal `best` ('und' when no marker
+    matches, earlier languages win ties), each arm on a line led by
+    `indent`."""
+    hits = ", ".join(
+        "("
+        + " + ".join(
+            f"(CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END)"
+            for w in words
+        )
+        + f") AS h_{lang}"
+        for lang, words in LANG_MARKERS.items()
+    )
+    arms = "".join(
+        f"{indent}WHEN h_{lang} = best THEN '{lang}'" for lang in LANG_MARKERS
+    )
+    return hits, f"CASE WHEN best = 0 THEN 'und'{arms}{indent}ELSE 'und' END"
+
+
 def quality_score(text: Column | str) -> Column:
     """Deterministic [0,1] quality proxy: blends length band, alphabetic
     ratio, and mean token length band. Heuristic in the C4/Gopher-rule

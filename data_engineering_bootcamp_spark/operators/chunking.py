@@ -21,7 +21,7 @@ corpus anyway.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -112,6 +112,27 @@ def pack_token_stream(
     )
 
 
+def _rebuild_aggs() -> list[Column]:
+    """Per-doc rebuild aggregates over `_keep`-flagged chunk rows: the
+    kept token count, and the md5 of the kept chunk texts joined in
+    chunk_idx order (md5('') when no chunk is kept)."""
+    kept_texts = F.transform(
+        F.array_sort(
+            F.collect_list(
+                F.when(F.col("_keep"), F.struct("chunk_idx", "chunk_text"))
+            )
+        ),
+        lambda s: s.getField("chunk_text"),
+    )
+    return [
+        F.coalesce(
+            F.sum(F.when(F.col("_keep"), F.col("n_tokens")).cast("long")),
+            F.lit(0),
+        ).alias("kept_tokens"),
+        F.md5(F.concat_ws(" ", kept_texts)).alias("rebuilt_md5"),
+    ]
+
+
 def drop_frequent_segments(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -168,26 +189,7 @@ def drop_frequent_segments(
     return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_segs"),
         F.sum((~F.col("_keep")).cast("long")).alias("n_dropped"),
-        F.coalesce(
-            F.sum(F.when(F.col("_keep"), F.col("n_tokens")).cast("long")),
-            F.lit(0),
-        ).alias("kept_tokens"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("_keep"),
-                                F.struct("chunk_idx", "chunk_text"),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("chunk_text"),
-                ),
-            )
-        ).alias("rebuilt_md5"),
+        *_rebuild_aggs(),
     )
 
 
@@ -220,8 +222,6 @@ def dedup_chunks_rebuild(
     map-side partial aggregation; nothing quadratic, nothing
     collected.
     """
-    from pyspark.sql import Window
-
     chunks = chunk_docs(
         docs,
         id_col=id_col,
@@ -236,24 +236,5 @@ def dedup_chunks_rebuild(
     return flagged.groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_chunks"),
         F.sum(F.col("_keep").cast("long")).alias("n_kept"),
-        F.coalesce(
-            F.sum(F.when(F.col("_keep"), F.col("n_tokens")).cast("long")),
-            F.lit(0),
-        ).alias("kept_tokens"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(
-                                F.col("_keep"),
-                                F.struct("chunk_idx", "chunk_text"),
-                            )
-                        )
-                    ),
-                    lambda s: s.getField("chunk_text"),
-                ),
-            )
-        ).alias("rebuilt_md5"),
+        *_rebuild_aggs(),
     )

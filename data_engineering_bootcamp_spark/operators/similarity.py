@@ -141,6 +141,19 @@ def _require_integral_ids(df: DataFrame, id_col: str, where: str) -> None:
         )
 
 
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """The `k` best rows per query of `scored` (query_id, neighbor_id,
+    cosine) by (cosine DESC, neighbor_id ASC), ranked 1..k."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc("cosine"), F.asc("neighbor_id")
+    )
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "cosine", "rank")
+    )
+
+
 def _bruteforce_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -231,14 +244,7 @@ def _bruteforce_topk(
     scored = src.mapInPandas(
         run, schema="query_id bigint, neighbor_id bigint, cosine double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def _jvm_exact_topk(
@@ -306,14 +312,7 @@ def _jvm_exact_topk(
             _dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn")), 6
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def cosine_topk_bruteforce(
@@ -896,14 +895,7 @@ def cosine_topk_ivf(
         F.col("vid").alias("neighbor_id"),
         _pair_cosine_udf()(F.col("qv"), F.col("v")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def semantic_dedup(
@@ -1118,14 +1110,7 @@ def cosine_topk_lsh(
         "neighbor_id",
         _pair_cosine_udf()(F.col("qv"), F.col("v")).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
-    )
+    return _top_k(scored, k)
 
 
 def cosine_topk_q8_rerank(
@@ -1457,20 +1442,36 @@ def cosine_topk_pq(
                 flat.append(row)
             yield _pd.DataFrame({"query_id": pdf["qid"], "dt": flat})
 
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
     qrel = queries.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     ).mapInPandas(dtables, schema="query_id bigint, dt array<double>")
 
-    # ADC scan: narrow codes relation x broadcast queries; adc adds the
-    # m looked-up cells in subspace order (fixed association). The scan
-    # and its row_number window carry ONLY (query_id, vid, adc) — the
-    # raw query vector would dominate the per-pair shuffle row (~512 B
-    # vs ~20 B) and joins back AFTER the n_candidates cut instead.
+    # ADC scan: narrow codes relation x broadcast queries
+    matched = codes.join(
+        F.broadcast(qrel), F.col("query_id") != F.col("vid")
+    )
+    return _adc_topk(
+        matched, src, queries, id_col, vec_col, m, n_codes, n_candidates, k
+    )
+
+
+def _adc_topk(
+    matched: DataFrame,
+    src: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    m: int,
+    n_codes: int,
+    n_candidates: int,
+    k: int,
+) -> DataFrame:
+    """The ADC tail of the PQ paths, over `matched` (code rows (vid,
+    codes) joined to query distance tables (query_id, dt)): adc adds the
+    m looked-up cells in subspace order (fixed association), the
+    `n_candidates` smallest (adc, vid) per query survive, and an exact
+    cosine rerank over the raw vectors keeps the top `k`."""
     adc = None
     for j in range(m):
         cell = F.element_at(
@@ -1479,10 +1480,10 @@ def cosine_topk_pq(
             .cast("int"),
         )
         adc = cell if adc is None else adc + cell
-    cand = (
-        codes.join(F.broadcast(qrel), F.col("query_id") != F.col("vid"))
-        .select("query_id", "vid", adc.alias("adc"))
-    )
+    # the scan and its row_number window carry ONLY (query_id, vid,
+    # adc) — the raw query vector would dominate the per-pair shuffle
+    # row (~512 B vs ~20 B) and joins back AFTER the n_candidates cut
+    cand = matched.select("query_id", "vid", adc.alias("adc"))
     wc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vid"))
     top = (
         cand.withColumn("crank", F.row_number().over(wc))
@@ -1491,6 +1492,10 @@ def cosine_topk_pq(
     )
     # exact rerank: candidates join back to the raw vectors by id and
     # to the (broadcast-size) query vectors by query_id
+    qvec = queries.select(
+        F.col(id_col).alias("query_id"),
+        F.col(vec_col).cast("array<double>").alias("qv"),
+    )
     rer = top.join(src, "vid").join(F.broadcast(qvec), "query_id").select(
         "query_id",
         F.col("vid").alias("neighbor_id"),
@@ -1500,19 +1505,7 @@ def cosine_topk_pq(
             6,
         ).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return _top_k(rer, k)
 
 
 def _ivfpq_encoder(bc_cn, bc_rc, bc_books):
@@ -1729,50 +1722,10 @@ def cosine_topk_ivfpq(
         probe_tables, schema="query_id bigint, bucket int, dt array<double>"
     )
 
-    qvec = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
-    )
-
     # ADC over probed buckets only: EQUI join codes ⋈ probes on bucket
-    adc = None
-    for j in range(m):
-        cell = F.element_at(
-            F.col("dt"),
-            (F.lit(j * n_codes) + F.element_at(F.col("codes"), j + 1) + 1)
-            .cast("int"),
-        )
-        adc = cell if adc is None else adc + cell
-    cand = (
-        codes.join(F.broadcast(probes), "bucket")
-        .where(F.col("query_id") != F.col("vid"))
-        .select("query_id", "vid", adc.alias("adc"))
+    matched = codes.join(F.broadcast(probes), "bucket").where(
+        F.col("query_id") != F.col("vid")
     )
-    wc = Window.partitionBy("query_id").orderBy(F.asc("adc"), F.asc("vid"))
-    top = (
-        cand.withColumn("crank", F.row_number().over(wc))
-        .where(F.col("crank") <= n_candidates)
-        .select("query_id", "vid")
-    )
-    rer = top.join(src, "vid").join(F.broadcast(qvec), "query_id").select(
-        "query_id",
-        F.col("vid").alias("neighbor_id"),
-        F.round(
-            _dot(F.col("qv"), F.col("v"))
-            / (_norm(F.col("qv")) * _norm(F.col("v"))),
-            6,
-        ).alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cosine"), F.asc("neighbor_id")
-    )
-    return (
-        rer.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("rank").cast("int").alias("rank"),
-        )
+    return _adc_topk(
+        matched, src, queries, id_col, vec_col, m, n_codes, n_candidates, k
     )

@@ -29,10 +29,10 @@ from ..functions.datelist import (
     utc_ts_str,
 )
 from ..functions.text import (
-    LANG_MARKERS,
     bpe_ish_token_count,
     doc_fingerprint,
     lang_id_heuristic,
+    lang_id_sql,
     quality_score,
     token_count,
 )
@@ -1017,32 +1017,20 @@ def q_doc_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _lang_oracle() -> str:
-    hits = []
-    for lang, words in LANG_MARKERS.items():
-        expr = " + ".join(
-            f"(CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END)"
-            for w in words
-        )
-        hits.append(f"({expr}) AS h_{lang}")
-    case_order = list(LANG_MARKERS)  # earlier languages win ties
-    cases = "\n         ".join(
-        f"WHEN h_{lang} = best THEN '{lang}'" for lang in case_order
-    )
+    hits, lang = lang_id_sql("\n         ")
     return f"""
 WITH toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '\\s+'), x -> x <> '') AS toks
   FROM documents),
 hits AS (
-  SELECT doc_id, {", ".join(hits)}
+  SELECT doc_id, {hits}
   FROM toks),
 best AS (
   SELECT doc_id, h_en, h_es, h_fr, h_de,
          greatest(h_en, h_es, h_fr, h_de) AS best
   FROM hits)
-SELECT CASE WHEN best = 0 THEN 'und'
-         {cases}
-         ELSE 'und' END AS lang_pred,
+SELECT {lang} AS lang_pred,
        COUNT(*) AS n_docs
 FROM best GROUP BY 1
 """
@@ -1104,31 +1092,10 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.withColumn("hamming", F.col("hamming").cast("long"))
 
 
-ORACLE_SIMHASH = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-                                                      'g')), ' '),
-                     t -> t <> '') AS tk
-  FROM documents),
-grams AS (
-  SELECT doc_id,
-         CASE WHEN len(tk) >= 2 THEN
-           list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])
-         ELSE [array_to_string(tk, ' ')] END AS g
-  FROM toks),
-gh AS (
-  SELECT doc_id, CAST('0x' || substr(md5(unnest(g)), 1, 15) AS BIGINT) AS h
-  FROM grams),
-bits AS (
-  SELECT gh.doc_id, bs.b,
-         SUM(CASE WHEN ((gh.h >> bs.b) & 1) = 1 THEN 1 ELSE -1 END) AS c
-  FROM gh CROSS JOIN (SELECT unnest(range(60)) AS b) bs
-  GROUP BY 1, 2),
+ORACLE_SIMHASH = f"""
+WITH {extra._SIMHASH_BITS},
 fp AS (
-  SELECT doc_id,
-         SUM(CASE WHEN c > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS sh
-  FROM bits GROUP BY 1)
+{extra._SIMHASH_FP}
 SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
        bit_count(xor(a.sh, b.sh))::BIGINT AS hamming
 FROM fp a JOIN fp b ON a.doc_id < b.doc_id
@@ -1144,28 +1111,12 @@ def q_ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_bruteforce(emb, queries, k=5, dim=64)
 
 
-ORACLE_ANN = """
+ORACLE_ANN = f"""
 WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 10),
 c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(
-           list_sum(list_transform(range(1, len(qv) + 1),
-                                   i -> qv[i]::DOUBLE * cv[i]::DOUBLE))
-           / (sqrt(list_sum(list_transform(range(1, len(qv) + 1),
-                                           i -> qv[i]::DOUBLE * qv[i]::DOUBLE)))
-              * sqrt(list_sum(list_transform(range(1, len(cv) + 1),
-                                             i -> cv[i]::DOUBLE * cv[i]::DOUBLE)))),
-           6) AS cosine
+{ext._BRUTE_SCORED}
   FROM q, c WHERE query_id <> neighbor_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank::INT AS rank
-FROM ranked WHERE rank <= 5
-"""
+{ext._top_k_sql(5)}"""
 
 
 def q_ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1181,7 +1132,7 @@ def q_ann_cosine_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_lsh(emb, queries, dim=64, k=5, nbits=4, n_tables=16)
 
 
-ORACLE_ANN_LSH = """
+ORACLE_ANN_LSH = f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 planes AS (
   SELECT pp.p AS p, dd.d AS d,
@@ -1200,22 +1151,8 @@ cand AS (
   SELECT DISTINCT q.vec_id AS query_id, c.vec_id AS neighbor_id
   FROM sig q JOIN sig c ON q.t = c.t AND q.b = c.b
   WHERE q.vec_id < 10 AND q.vec_id <> c.vec_id),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(list_dot_product(a.e, b.e) /
-               (sqrt(list_dot_product(a.e, a.e)) *
-                sqrt(list_dot_product(b.e, b.e))), 6) AS cosine
-  FROM cand
-  JOIN v a ON a.vec_id = query_id
-  JOIN v b ON b.vec_id = neighbor_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank::INT AS rank
-FROM ranked WHERE rank <= 5
-"""
+{ext._RERANK},
+{ext._top_k_sql(5)}"""
 
 
 # ---------------------------------------------------------------------------

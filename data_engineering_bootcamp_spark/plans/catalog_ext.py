@@ -29,6 +29,7 @@ from ..operators.multimodal import (
     stdlib_decode_kernel,
 )
 from ..operators.scd import scd_from_snapshots, scd_incremental
+from .catalog_extra import _GRAMS_TK, _TOKS_TK
 from .catalog_write import _events_file_stream, _snapshot
 from ..operators.similarity import (
     cosine_topk_ivf,
@@ -520,20 +521,9 @@ def q_ngram_jaccard_allpairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dedup_ngram_jaccard(docs, block_col=None, ngram=3, threshold=0.5)
 
 
-ORACLE_NGRAM_JACCARD = r"""
-WITH toks AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-                                                      'g')), ' '),
-                     t -> t <> '') AS tk
-  FROM documents),
-grams AS (
-  SELECT doc_id,
-         CASE WHEN len(tk) >= 3 THEN
-           list_distinct(list_transform(range(1, len(tk) - 1),
-                                        i -> array_to_string(tk[i:i+2], ' ')))
-         ELSE [array_to_string(tk, ' ')] END AS g
-  FROM toks),
+ORACLE_NGRAM_JACCARD = f"""
+WITH {_TOKS_TK},
+{_GRAMS_TK},
 pairs AS (
   SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b,
          ROUND(len(list_intersect(a.g, b.g))::DOUBLE /
@@ -831,25 +821,52 @@ FROM r
 """
 
 
-def q_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IVF-bucketed approximate cosine top-k with sampled-k-means
-    centroids.
+# ---------------------------------------------------------------------------
+# ANN oracle fragments: the exact cosine scoring and top-k tail the ANN
+# oracles end with, and the sampled-k-means IVF quantizer that
+# ann_cosine_ivf and semantic_dedup share
+# ---------------------------------------------------------------------------
 
-    Every stage is deterministic and SQL-expressible — md5-hash-ordered
-    sample init, one Lloyd iteration with means ROUNDed to 6dp, argmax
-    assignment with lowest-id tie-break — so the DuckDB oracle replays
-    the whole index build + probe + re-rank and the approximate query
-    is exactly falsifiable (recall floor is separately pinned in
-    tests/test_operators.py)."""
-    emb = _t(spark, sf_dir, "embeddings")
-    queries = emb.where(F.col("vec_id") < 10)
-    return cosine_topk_ivf(
-        emb, queries, k=5, n_centroids=32, n_probe=8, lloyd_iters=1
-    )
+# exact cosine of every (query_id, neighbor_id) of `q` x `c` (qv, cv
+# are the raw embeddings); the caller closes the CTE with its FROM
+_BRUTE_SCORED = """scored AS (
+  SELECT query_id, neighbor_id,
+         ROUND(
+           list_sum(list_transform(range(1, len(qv) + 1),
+                                   i -> qv[i]::DOUBLE * cv[i]::DOUBLE))
+           / (sqrt(list_sum(list_transform(range(1, len(qv) + 1),
+                                           i -> qv[i]::DOUBLE * qv[i]::DOUBLE)))
+              * sqrt(list_sum(list_transform(range(1, len(cv) + 1),
+                                             i -> cv[i]::DOUBLE * cv[i]::DOUBLE)))),
+           6) AS cosine"""
+
+# exact cosine of each `cand` (query_id, neighbor_id) pair over `v`
+_RERANK = """scored AS (
+  SELECT query_id, neighbor_id,
+         ROUND(list_dot_product(a.e, b.e) /
+               (sqrt(list_dot_product(a.e, a.e)) *
+                sqrt(list_dot_product(b.e, b.e))), 6) AS cosine
+  FROM cand
+  JOIN v a ON a.vec_id = query_id
+  JOIN v b ON b.vec_id = neighbor_id)"""
 
 
-ORACLE_ANN_IVF = """
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
+def _top_k_sql(k: int) -> str:
+    """The `k` best `scored` rows per query (cosine DESC, then
+    neighbor_id), ranked 1..k."""
+    return f"""ranked AS (
+  SELECT query_id, neighbor_id, cosine,
+         ROW_NUMBER() OVER (PARTITION BY query_id
+                            ORDER BY cosine DESC, neighbor_id) AS rank
+  FROM scored)
+SELECT query_id, neighbor_id, cosine, rank::INT AS rank
+FROM ranked WHERE rank <= {k}
+"""
+
+
+# the IVF quantizer over `v`: 32 md5-ordered seeds, one Lloyd round
+# with 6dp means (`cent`), then each vector's nearest centroid (`a2`)
+_IVF_ASSIGN = """WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 seeds AS (
   SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
            - 1 AS cid,
@@ -883,7 +900,28 @@ a2 AS (
                       (sqrt(list_dot_product(v.e, v.e)) *
                        sqrt(list_dot_product(c.e, c.e))) DESC,
                       c.cid) AS rn
-    FROM v, cent c) WHERE rn = 1),
+    FROM v, cent c) WHERE rn = 1)"""
+
+
+def q_ann_cosine_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IVF-bucketed approximate cosine top-k with sampled-k-means
+    centroids.
+
+    Every stage is deterministic and SQL-expressible — md5-hash-ordered
+    sample init, one Lloyd iteration with means ROUNDed to 6dp, argmax
+    assignment with lowest-id tie-break — so the DuckDB oracle replays
+    the whole index build + probe + re-rank and the approximate query
+    is exactly falsifiable (recall floor is separately pinned in
+    tests/test_operators.py)."""
+    emb = _t(spark, sf_dir, "embeddings")
+    queries = emb.where(F.col("vec_id") < 10)
+    return cosine_topk_ivf(
+        emb, queries, k=5, n_centroids=32, n_probe=8, lloyd_iters=1
+    )
+
+
+ORACLE_ANN_IVF = f"""
+{_IVF_ASSIGN},
 probes AS (
   SELECT vec_id AS query_id, cid FROM (
     SELECT v.vec_id, c.cid,
@@ -898,22 +936,8 @@ cand AS (
   SELECT p.query_id, a2.vec_id AS neighbor_id
   FROM probes p JOIN a2 ON a2.cid = p.cid
   WHERE a2.vec_id <> p.query_id),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(list_dot_product(a.e, b.e) /
-               (sqrt(list_dot_product(a.e, a.e)) *
-                sqrt(list_dot_product(b.e, b.e))), 6) AS cosine
-  FROM cand
-  JOIN v a ON a.vec_id = query_id
-  JOIN v b ON b.vec_id = neighbor_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank::INT AS rank
-FROM ranked WHERE rank <= 5
-"""
+{_RERANK},
+{_top_k_sql(5)}"""
 
 
 def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,42 +956,8 @@ def q_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_SEMANTIC_DEDUP = """
-WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
-seeds AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-           - 1 AS cid,
-         e
-  FROM v ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id LIMIT 32),
-a1 AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, s.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_dot_product(v.e, s.e) /
-                      (sqrt(list_dot_product(v.e, v.e)) *
-                       sqrt(list_dot_product(s.e, s.e))) DESC,
-                      s.cid) AS rn
-    FROM v, seeds s) WHERE rn = 1),
-m AS (
-  SELECT a1.cid, dd.d, ROUND(AVG(v.e[dd.d]), 6) AS mv
-  FROM a1 JOIN v USING (vec_id)
-  CROSS JOIN (SELECT unnest(range(1, 65)) AS d) dd
-  GROUP BY 1, 2),
-mlist AS (SELECT cid, list(mv ORDER BY d) AS e FROM m GROUP BY cid),
-cent AS (
-  SELECT s.cid, COALESCE(ml.e, s.e) AS e
-  FROM seeds s LEFT JOIN mlist ml ON s.cid = ml.cid),
-a2 AS (
-  SELECT vec_id, cid FROM (
-    SELECT v.vec_id, c.cid,
-           ROW_NUMBER() OVER (
-             PARTITION BY v.vec_id
-             ORDER BY list_dot_product(v.e, c.e) /
-                      (sqrt(list_dot_product(v.e, v.e)) *
-                       sqrt(list_dot_product(c.e, c.e))) DESC,
-                      c.cid) AS rn
-    FROM v, cent c) WHERE rn = 1),
+ORACLE_SEMANTIC_DEDUP = f"""
+{_IVF_ASSIGN},
 close AS (
   SELECT hi.vec_id, COUNT(*) AS n_close_lower
   FROM a2 hi JOIN a2 lo ON lo.cid = hi.cid AND lo.vec_id < hi.vec_id
@@ -1081,6 +1071,30 @@ def _memory_sink_hits(
             spark.catalog.dropTempView(name)
 
 
+def _closed_sessions(
+    spark: SparkSession, sf_dir: str, sess: DataFrame, d: str
+) -> DataFrame:
+    """Drain the session stream `sess` to parquet under `d` in append
+    mode and read back the sessions that ended over an hour before the
+    last user event: the ones the final watermark has surely closed."""
+    drain(
+        sess.writeStream.format("parquet")
+        .option("path", f"{d}/out")
+        .outputMode("append"),
+        f"{d}/ckpt",
+    )
+    max_ts = (
+        load_table(spark, sf_dir, "events")
+        .where(F.col("user_id").isNotNull())
+        .agg(F.max("ts").alias("m"))
+        .first()
+        .m
+    )
+    return spark.read.parquet(f"{d}/out").where(
+        F.col("session_end") < F.lit(max_ts) - F.expr("INTERVAL 1 HOUR")
+    )
+
+
 def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T5 through the gate: session windows (30-minute inactivity gap,
     keyed by user_id) computed by the REAL streaming engine —
@@ -1105,31 +1119,11 @@ def q_streaming_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             gap="30 minutes",
             watermark="1 second",
         )
-        drain(
-            sess.writeStream.format("parquet")
-            .option("path", f"{d}/out")
-            .outputMode("append"),
-            f"{d}/ckpt",
-        )
-        max_ts = (
-            load_table(spark, sf_dir, "events")
-            .where(F.col("user_id").isNotNull())
-            .agg(F.max("ts").alias("m"))
-            .first()
-            .m
-        )
-        got = (
-            spark.read.parquet(f"{d}/out")
-            .where(
-                F.col("session_end")
-                < F.lit(max_ts) - F.expr("INTERVAL 1 HOUR")
-            )
-            .select(
-                utc_ts_str("session_start").alias("session_start"),
-                utc_ts_str("session_end").alias("session_end"),
-                "user_id",
-                "num_events",
-            )
+        got = _closed_sessions(spark, sf_dir, sess, d).select(
+            utc_ts_str("session_start").alias("session_start"),
+            utc_ts_str("session_end").alias("session_end"),
+            "user_id",
+            "num_events",
         )
         return _snapshot(got)
 
@@ -1345,32 +1339,12 @@ def q_streaming_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         sess = sessionize_stateful(
             keyed, gap_seconds=1800, watermark="1 second"
         )
-        drain(
-            sess.writeStream.format("parquet")
-            .option("path", f"{d}/out")
-            .outputMode("append"),
-            f"{d}/ckpt",
-        )
-        max_ts = (
-            load_table(spark, sf_dir, "events")
-            .where(F.col("user_id").isNotNull())
-            .agg(F.max("ts").alias("m"))
-            .first()
-            .m
-        )
-        got = (
-            spark.read.parquet(f"{d}/out")
-            .where(
-                F.col("session_end")
-                < F.lit(max_ts) - F.expr("INTERVAL 1 HOUR")
-            )
-            .select(
-                F.col("ip").alias("user_id"),
-                F.col("host").alias("event_type"),
-                utc_ts_str("session_start").alias("session_start"),
-                utc_ts_str("session_end").alias("session_end"),
-                "num_events",
-            )
+        got = _closed_sessions(spark, sf_dir, sess, d).select(
+            F.col("ip").alias("user_id"),
+            F.col("host").alias("event_type"),
+            utc_ts_str("session_start").alias("session_start"),
+            utc_ts_str("session_end").alias("session_end"),
+            "num_events",
         )
         return _snapshot(got)
 

@@ -25,7 +25,7 @@ names as operators:
 from __future__ import annotations
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..operators.dedup import _tokens
@@ -396,63 +396,107 @@ FROM lab GROUP BY 1, 2
 
 
 # ---------------------------------------------------------------------------
+# Near-dup oracle fragments: the CTEs the text near-dup oracles share
+# (ngram_jaccard, decontaminate, simhash, neardup_clusters[_star] and
+# the two curation pipelines), each written once
+# ---------------------------------------------------------------------------
+
+# the `_tokens` normalization: lower, collapse whitespace, split, drop
+# empties
+_TOKS_TK = r"""toks AS (
+  SELECT doc_id,
+         list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ',
+                                                      'g')), ' '),
+                     t -> t <> '') AS tk
+  FROM documents)"""
+
+
+def _trigrams(toks: str) -> str:
+    """The distinct word-trigram list `g` of the token list `toks`
+    (the whole text is one gram below 3 tokens)."""
+    return f"""CASE WHEN len({toks}) >= 3 THEN
+           list_distinct(list_transform(range(1, len({toks}) - 1),
+                                        i -> array_to_string({toks}[i:i+2], ' ')))
+         ELSE [array_to_string({toks}, ' ')] END AS g"""
+
+
+_GRAMS_TK = f"""grams AS (
+  SELECT doc_id,
+         {_trigrams("tk")}
+  FROM toks)"""
+
+# the body of `pairs`: trigram-Jaccard >= 0.5 pairs over `grams`
+_JACCARD_PAIRS = """  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
+  FROM grams a JOIN grams b ON a.doc_id < b.doc_id
+  WHERE ROUND(len(list_intersect(a.g, b.g))::DOUBLE /
+              (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))), 6)
+        >= 0.5)"""
+
+# transitive closure over an undirected `edges` (a, b) relation
+_REACH = """reach(a, b) AS (
+  SELECT a, b FROM edges
+  UNION
+  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a)"""
+
+_CLOSURE = f"""edges AS MATERIALIZED (
+  SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
+  UNION
+  SELECT doc_id_b, doc_id_a FROM pairs),
+{_REACH}"""
+
+# each doc's component label: the minimum id it reaches
+_COMP = """comp AS (
+  SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
+  FROM reach GROUP BY a)"""
+
+_NEARDUP_KEEP = f"""{_COMP}
+SELECT d.doc_id,
+       COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
+       d.doc_id = COALESCE(c.cluster_id, d.doc_id) AS keep
+FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
+"""
+
+# SimHash: md5-derived 60-bit hashes of word bigrams, majority-voted
+# per bit; `fp` is the body of the fingerprint CTE over `bits`
+_SIMHASH_BITS = rf"""{_TOKS_TK},
+grams AS (
+  SELECT doc_id,
+         CASE WHEN len(tk) >= 2 THEN
+           list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])
+         ELSE [array_to_string(tk, ' ')] END AS g
+  FROM toks),
+gh AS (
+  SELECT doc_id, CAST('0x' || substr(md5(unnest(g)), 1, 15) AS BIGINT) AS h
+  FROM grams),
+bits AS (
+  SELECT gh.doc_id, bs.b,
+         SUM(CASE WHEN ((gh.h >> bs.b) & 1) = 1 THEN 1 ELSE -1 END) AS c
+  FROM gh CROSS JOIN (SELECT unnest(range(60)) AS b) bs
+  GROUP BY 1, 2)"""
+_SIMHASH_FP = """  SELECT doc_id,
+         SUM(CASE WHEN c > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS sh
+  FROM bits GROUP BY 1)"""
+
+
+# ---------------------------------------------------------------------------
 # Flagship: end-to-end corpus curation pipeline
 # ---------------------------------------------------------------------------
 
-def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The whole training-data path as ONE composed Spark plan:
-
-      quality score → language ID → filter (en, quality ≥ 0.9)
-      → exact dedup (keep lowest doc_id per md5 fingerprint)
-      → near-dup CLUSTER retention (prefix-filtered exact trigram
-        Jaccard ≥ 0.5 pairs → connected components → keep exactly the
-        minimum doc_id per component)
-      → deterministic 25% holdout split (md5 hash of doc_id)
-      → per-split corpus stats.
-
-    Every stage is an already-oracle-proven component (doc_quality,
-    doc_lang_id, doc_dedup_exact, ngram_jaccard_pairs,
-    neardup_clusters, hash_sample_split); this entry proves they
-    COMPOSE — the DuckDB oracle recomputes the full pipeline in SQL
-    (components via a recursive-CTE transitive closure), so any drift
-    in stage order, filter semantics, or retention rule breaks the
-    hash match.
-
-    Scale shape: the filters and scores are scan-speed Catalyst
-    expressions; dedup is one groupBy; near-dup is the lossless
-    length-bucket equi-join; component resolution is the audited
-    min-label loop over the PAIR list (never the corpus); the split is
-    a map-side predicate. No collects, no BNLJ, no row-at-a-time
-    Python.
-
-    Retention rule (pairs → clusters → keep, the flow real pipelines
-    use): a doc is removed iff it is NOT the minimum id of its
-    connected near-dup component — transitive chains collapse to one
-    survivor instead of the pair-level rule's order-dependent culls.
-    """
-    from ..functions.text import (
-        doc_fingerprint,
-        lang_id_heuristic,
-        quality_score,
-        token_count,
-    )
+def _curate(filt: DataFrame, score: Column) -> DataFrame:
+    """The curate tail of both flagship pipelines, over the filtered
+    docs (doc_id, text, source and the inputs of `score`): exact dedup
+    (keep the lowest doc_id per md5 fingerprint) → near-dup cluster
+    retention (prefix-filtered trigram Jaccard ≥ 0.5 pairs → connected
+    components → keep the minimum doc_id per component) → deterministic
+    25% holdout split (md5 hash of doc_id) → per-split stats, with
+    `score` as the last aggregate."""
+    from ..functions.text import doc_fingerprint, token_count
     from ..operators.clustering import connected_components
     from ..operators.dedup import dedup_keep_first, dedup_ngram_jaccard
     from ..operators.sampling import _threshold_hex, sample_bucket
 
-    docs = _t(spark, sf_dir, "documents")
-    scored = docs.select(
-        "doc_id",
-        "text",
-        "source",
-        quality_score(F.col("text")).alias("quality"),
-        lang_id_heuristic(F.col("text")).alias("lang_pred"),
-    )
-    filt = scored.where(
-        (F.col("quality") >= 0.9) & (F.col("lang_pred") == "en")
-    )
-    # persist = projection barrier: the quality/lang expression trees
-    # are large (Catalyst inlines token splits per marker reference) and
+    # persist = projection barrier: the upstream expression trees are
+    # large (Catalyst inlines token splits per marker reference) and
     # `kept` feeds three consumers (both pair-join sides via the ngram
     # operator's own cache, plus the anti-join left side) — without the
     # barrier the whole tree re-evaluates per consumer.
@@ -487,25 +531,100 @@ def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_docs"),
             F.countDistinct("source").alias("n_sources"),
             F.sum("tc").cast("long").alias("total_tokens"),
-            F.round(F.avg("quality"), 6).alias("avg_quality"),
+            score,
         )
-        .select("split", "n_docs", "n_sources", "total_tokens", "avg_quality")
     )
+
+
+def _curate_oracle_dedup(score: str) -> str:
+    """`kept` and `grams` of the curation oracles, over a `filt` CTE
+    carrying doc_id, text, source, toks, tc and `score`."""
+    return rf"""kept AS (
+  SELECT * FROM filt
+  WHERE doc_id IN (
+    SELECT MIN(doc_id)
+    FROM filt
+    GROUP BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))))),
+grams AS (
+  SELECT doc_id, toks, tc, {score}, source,
+         {_trigrams("toks")}
+  FROM kept)"""
+
+
+def _curate_oracle_stats(score_agg: str) -> str:
+    """The rest of a curation oracle after `pairs AS MATERIALIZED (`:
+    the pair body, closure, retention, split and per-split stats with
+    `score_agg` last."""
+    return f"""{_JACCARD_PAIRS},
+{_CLOSURE},
+removed AS (
+  SELECT a AS doc_id FROM reach GROUP BY a
+  HAVING LEAST(a, MIN(b)) <> a),
+final AS (
+  SELECT g.*,
+         CASE WHEN substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 8) < '40000000'
+              THEN 'holdout' ELSE 'train' END AS split
+  FROM grams g WHERE g.doc_id NOT IN (SELECT doc_id FROM removed))
+SELECT split,
+       COUNT(*) AS n_docs,
+       COUNT(DISTINCT source) AS n_sources,
+       SUM(tc)::BIGINT AS total_tokens,
+       {score_agg}
+FROM final GROUP BY 1
+"""
+
+
+def q_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The whole training-data path as ONE composed Spark plan:
+
+      quality score → language ID → filter (en, quality ≥ 0.9)
+      → exact dedup (keep lowest doc_id per md5 fingerprint)
+      → near-dup CLUSTER retention (prefix-filtered exact trigram
+        Jaccard ≥ 0.5 pairs → connected components → keep exactly the
+        minimum doc_id per component)
+      → deterministic 25% holdout split (md5 hash of doc_id)
+      → per-split corpus stats.
+
+    Every stage is an already-oracle-proven component (doc_quality,
+    doc_lang_id, doc_dedup_exact, ngram_jaccard_pairs,
+    neardup_clusters, hash_sample_split); this entry proves they
+    COMPOSE — the DuckDB oracle recomputes the full pipeline in SQL
+    (components via a recursive-CTE transitive closure), so any drift
+    in stage order, filter semantics, or retention rule breaks the
+    hash match.
+
+    Scale shape: the filters and scores are scan-speed Catalyst
+    expressions; dedup is one groupBy; near-dup is the lossless
+    length-bucket equi-join; component resolution is the audited
+    min-label loop over the PAIR list (never the corpus); the split is
+    a map-side predicate. No collects, no BNLJ, no row-at-a-time
+    Python.
+
+    Retention rule (pairs → clusters → keep, the flow real pipelines
+    use): a doc is removed iff it is NOT the minimum id of its
+    connected near-dup component — transitive chains collapse to one
+    survivor instead of the pair-level rule's order-dependent culls.
+    """
+    from ..functions.text import lang_id_heuristic, quality_score
+
+    docs = _t(spark, sf_dir, "documents")
+    scored = docs.select(
+        "doc_id",
+        "text",
+        "source",
+        quality_score(F.col("text")).alias("quality"),
+        lang_id_heuristic(F.col("text")).alias("lang_pred"),
+    )
+    filt = scored.where(
+        (F.col("quality") >= 0.9) & (F.col("lang_pred") == "en")
+    )
+    return _curate(filt, F.round(F.avg("quality"), 6).alias("avg_quality"))
 
 
 def _corpus_curation_oracle() -> str:
-    from ..functions.text import LANG_MARKERS
+    from ..functions.text import lang_id_sql
 
-    hits = []
-    for lang, words in LANG_MARKERS.items():
-        expr = " + ".join(
-            f"(CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END)"
-            for w in words
-        )
-        hits.append(f"({expr}) AS h_{lang}")
-    cases = "\n           ".join(
-        f"WHEN h_{lang} = best THEN '{lang}'" for lang in LANG_MARKERS
-    )
+    hits, lang = lang_id_sql("\n           ")
     return rf"""
 WITH RECURSIVE toks AS (
   SELECT doc_id, text, source,
@@ -522,7 +641,7 @@ scored AS (
                (CASE WHEN len(toks) > 0 AND n / len(toks) >= 3
                       AND n / len(toks) <= 12 THEN 1.0 ELSE 0.5 END) * 0.25,
                6) AS quality,
-         {", ".join(hits)}
+         {hits}
   FROM toks),
 lang AS (
   SELECT *, greatest(h_en, h_es, h_fr, h_de) AS best FROM scored),
@@ -530,54 +649,13 @@ filt AS (
   SELECT doc_id, text, source, toks, tc, quality
   FROM lang
   WHERE quality >= 0.9
-    AND (CASE WHEN best = 0 THEN 'und'
-           {cases}
-           ELSE 'und' END) = 'en'),
-kept AS (
-  SELECT * FROM filt
-  WHERE doc_id IN (
-    SELECT MIN(doc_id)
-    FROM filt
-    GROUP BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))))),
-grams AS (
-  SELECT doc_id, toks, tc, quality, source,
-         CASE WHEN len(toks) >= 3 THEN
-           list_distinct(list_transform(range(1, len(toks) - 1),
-                                        i -> array_to_string(toks[i:i+2], ' ')))
-         ELSE [array_to_string(toks, ' ')] END AS g
-  FROM kept),
+    AND ({lang}) = 'en'),
+{_curate_oracle_dedup("quality")},
 pairs AS MATERIALIZED (
   -- MATERIALIZED: referenced by both edge directions AND the
   -- recursion below; inlined, DuckDB re-runs the O(n^2)
   -- list_intersect join per recursive iteration (~3x wall)
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-  FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-  WHERE ROUND(len(list_intersect(a.g, b.g))::DOUBLE /
-              (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))), 6)
-        >= 0.5),
-edges AS MATERIALIZED (
-  SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
-  UNION
-  SELECT doc_id_b, doc_id_a FROM pairs),
-reach(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-removed AS (
-  SELECT a AS doc_id FROM reach GROUP BY a
-  HAVING LEAST(a, MIN(b)) <> a),
-final AS (
-  SELECT g.*,
-         CASE WHEN substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 8) < '40000000'
-              THEN 'holdout' ELSE 'train' END AS split
-  FROM grams g WHERE g.doc_id NOT IN (SELECT doc_id FROM removed))
-SELECT split,
-       COUNT(*) AS n_docs,
-       COUNT(DISTINCT source) AS n_sources,
-       SUM(tc)::BIGINT AS total_tokens,
-       ROUND(AVG(quality), 6) AS avg_quality
-FROM final GROUP BY 1
-"""
+{_curate_oracle_stats("ROUND(AVG(quality), 6) AS avg_quality")}"""
 
 
 def q_corpus_curation_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -606,14 +684,7 @@ def q_corpus_curation_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
     classifier CTEs through the full-pipeline SQL, so any drift in
     EITHER the model arithmetic OR the composed stage order breaks
     the hash."""
-    from ..functions.text import (
-        doc_fingerprint,
-        lang_id_heuristic,
-        token_count,
-    )
-    from ..operators.clustering import connected_components
-    from ..operators.dedup import dedup_keep_first, dedup_ngram_jaccard
-    from ..operators.sampling import _threshold_hex, sample_bucket
+    from ..functions.text import lang_id_heuristic
     from .catalog_rank import q_doc_quality_classifier
 
     docs = _t(spark, sf_dir, "documents")
@@ -633,59 +704,17 @@ def q_corpus_curation_learned(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("lang_pred") == "en")
         .drop("lang_pred")
     )
-    kept = (
-        dedup_keep_first(
-            filt.withColumn("fp", doc_fingerprint(F.col("text"))),
-            keys=["fp"],
-            order_by=[F.col("doc_id")],
-        )
-        .drop("fp")
-        .persist()
-    )
-    pairs = dedup_ngram_jaccard(
-        kept, block_col=None, ngram=3, threshold=0.5, prefix_filtered=True
-    )
-    comp = connected_components(pairs)
-    removed = comp.where(F.col("doc_id") != F.col("cluster_id")).select(
-        "doc_id"
-    )
-    final = kept.join(removed, "doc_id", "left_anti")
-    split = F.when(
-        sample_bucket(F.col("doc_id")) < F.lit(_threshold_hex(0.25)),
-        "holdout",
-    ).otherwise("train")
-    return (
-        final.withColumn("split", split)
-        .withColumn("tc", token_count(F.col("text")))
-        .groupBy("split")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.countDistinct("source").alias("n_sources"),
-            F.sum("tc").cast("long").alias("total_tokens"),
-            F.expr("sum(mean_ratio_ppm) div count(1)").alias(
-                "avg_score_ppm"
-            ),
-        )
-        .select(
-            "split", "n_docs", "n_sources", "total_tokens", "avg_score_ppm"
-        )
+    return _curate(
+        filt,
+        F.expr("sum(mean_ratio_ppm) div count(1)").alias("avg_score_ppm"),
     )
 
 
 def _corpus_curation_learned_oracle() -> str:
-    from ..functions.text import LANG_MARKERS
+    from ..functions.text import lang_id_sql
     from .catalog_rank import ORACLE_DOC_QUALITY_CLASSIFIER
 
-    hits = []
-    for lang, words in LANG_MARKERS.items():
-        expr = " + ".join(
-            f"(CASE WHEN list_contains(toks, '{w}') THEN 1 ELSE 0 END)"
-            for w in words
-        )
-        hits.append(f"({expr}) AS h_{lang}")
-    cases = "\n           ".join(
-        f"WHEN h_{lang} = best THEN '{lang}'" for lang in LANG_MARKERS
-    )
+    hits, lang = lang_id_sql("\n           ")
     return rf"""
 WITH RECURSIVE cls AS MATERIALIZED (
   SELECT doc_id, mean_ratio_ppm
@@ -699,58 +728,18 @@ base AS (
 scored AS (
   SELECT doc_id, text, source, mean_ratio_ppm, toks,
          len(toks)::DOUBLE AS tc,
-         {", ".join(hits)}
+         {hits}
   FROM base),
 lang AS (
   SELECT *, greatest(h_en, h_es, h_fr, h_de) AS best FROM scored),
 filt AS (
   SELECT doc_id, text, source, mean_ratio_ppm, toks, tc
   FROM lang
-  WHERE (CASE WHEN best = 0 THEN 'und'
-           {cases}
-           ELSE 'und' END) = 'en'),
-kept AS (
-  SELECT * FROM filt
-  WHERE doc_id IN (
-    SELECT MIN(doc_id)
-    FROM filt
-    GROUP BY md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))))),
-grams AS (
-  SELECT doc_id, toks, tc, mean_ratio_ppm, source,
-         CASE WHEN len(toks) >= 3 THEN
-           list_distinct(list_transform(range(1, len(toks) - 1),
-                                        i -> array_to_string(toks[i:i+2], ' ')))
-         ELSE [array_to_string(toks, ' ')] END AS g
-  FROM kept),
+  WHERE ({lang}) = 'en'),
+{_curate_oracle_dedup("mean_ratio_ppm")},
 pairs AS MATERIALIZED (
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-  FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-  WHERE ROUND(len(list_intersect(a.g, b.g))::DOUBLE /
-              (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))), 6)
-        >= 0.5),
-edges AS MATERIALIZED (
-  SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
-  UNION
-  SELECT doc_id_b, doc_id_a FROM pairs),
-reach(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-removed AS (
-  SELECT a AS doc_id FROM reach GROUP BY a
-  HAVING LEAST(a, MIN(b)) <> a),
-final AS (
-  SELECT g.*,
-         CASE WHEN substr(md5(CAST(g.doc_id AS VARCHAR)), 1, 8) < '40000000'
-              THEN 'holdout' ELSE 'train' END AS split
-  FROM grams g WHERE g.doc_id NOT IN (SELECT doc_id FROM removed))
-SELECT split,
-       COUNT(*) AS n_docs,
-       COUNT(DISTINCT source) AS n_sources,
-       SUM(tc)::BIGINT AS total_tokens,
-       (SUM(mean_ratio_ppm) // COUNT(*))::BIGINT AS avg_score_ppm
-FROM final GROUP BY 1
-"""
+{_curate_oracle_stats(
+    "(SUM(mean_ratio_ppm) // COUNT(*))::BIGINT AS avg_score_ppm")}"""
 
 
 # ---------------------------------------------------------------------------
@@ -848,19 +837,13 @@ def q_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_DECONTAMINATE = r"""
+ORACLE_DECONTAMINATE = rf"""
 WITH toks AS (
   SELECT doc_id,
          list_filter(string_split_regex(lower(text), '\s+'), x -> x <> '')
            AS tk
   FROM documents),
-grams AS (
-  SELECT doc_id,
-         CASE WHEN len(tk) >= 3 THEN
-           list_distinct(list_transform(range(1, len(tk) - 1),
-                                        i -> array_to_string(tk[i:i+2], ' ')))
-         ELSE [array_to_string(tk, ' ')] END AS g
-  FROM toks),
+{_GRAMS_TK},
 pool AS (
   SELECT DISTINCT unnest(g) AS gram FROM grams WHERE doc_id % 20 = 0),
 corpus AS (
@@ -1064,44 +1047,15 @@ def q_neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neardup_retention(docs, pairs)
 
 
-ORACLE_NEARDUP_CLUSTERS = r"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-                                                      'g')), ' '),
-                     t -> t <> '') AS tk
-  FROM documents),
-grams AS (
-  SELECT doc_id,
-         CASE WHEN len(tk) >= 3 THEN
-           list_distinct(list_transform(range(1, len(tk) - 1),
-                                        i -> array_to_string(tk[i:i+2], ' ')))
-         ELSE [array_to_string(tk, ' ')] END AS g
-  FROM toks),
+ORACLE_NEARDUP_CLUSTERS = f"""
+WITH RECURSIVE {_TOKS_TK},
+{_GRAMS_TK},
 pairs AS MATERIALIZED (
   -- MATERIALIZED: see corpus-curation oracle — keeps the O(n^2)
   -- pair join out of the recursive iteration replan
-  SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
-  FROM grams a JOIN grams b ON a.doc_id < b.doc_id
-  WHERE ROUND(len(list_intersect(a.g, b.g))::DOUBLE /
-              (len(a.g) + len(b.g) - len(list_intersect(a.g, b.g))), 6)
-        >= 0.5),
-edges AS MATERIALIZED (
-  SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
-  UNION
-  SELECT doc_id_b, doc_id_a FROM pairs),
-reach(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-comp AS (
-  SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-  FROM reach GROUP BY a)
-SELECT d.doc_id,
-       COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-       d.doc_id = COALESCE(c.cluster_id, d.doc_id) AS keep
-FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-"""
+{_JACCARD_PAIRS},
+{_CLOSURE},
+{_NEARDUP_KEEP}"""
 
 
 def q_neardup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1121,51 +1075,16 @@ def q_neardup_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     return neardup_retention(docs, pairs, algorithm="star")
 
 
-ORACLE_NEARDUP_CLUSTERS_STAR = r"""
-WITH RECURSIVE toks AS (
-  SELECT doc_id,
-         list_filter(string_split(trim(regexp_replace(lower(text), '\s+', ' ',
-                                                      'g')), ' '),
-                     t -> t <> '') AS tk
-  FROM documents),
-grams AS (
-  SELECT doc_id,
-         CASE WHEN len(tk) >= 2 THEN
-           list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1])
-         ELSE [array_to_string(tk, ' ')] END AS g
-  FROM toks),
-gh AS (
-  SELECT doc_id, CAST('0x' || substr(md5(unnest(g)), 1, 15) AS BIGINT) AS h
-  FROM grams),
-bits AS (
-  SELECT gh.doc_id, bs.b,
-         SUM(CASE WHEN ((gh.h >> bs.b) & 1) = 1 THEN 1 ELSE -1 END) AS c
-  FROM gh CROSS JOIN (SELECT unnest(range(60)) AS b) bs
-  GROUP BY 1, 2),
+ORACLE_NEARDUP_CLUSTERS_STAR = f"""
+WITH RECURSIVE {_SIMHASH_BITS},
 fp AS MATERIALIZED (
-  SELECT doc_id,
-         SUM(CASE WHEN c > 0 THEN (1::BIGINT << b) ELSE 0 END)::BIGINT AS sh
-  FROM bits GROUP BY 1),
+{_SIMHASH_FP},
 pairs AS MATERIALIZED (
   SELECT a.doc_id AS doc_id_a, b.doc_id AS doc_id_b
   FROM fp a JOIN fp b ON a.doc_id < b.doc_id
   WHERE bit_count(xor(a.sh, b.sh)) <= 3),
-edges AS MATERIALIZED (
-  SELECT doc_id_a AS a, doc_id_b AS b FROM pairs
-  UNION
-  SELECT doc_id_b, doc_id_a FROM pairs),
-reach(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-comp AS (
-  SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-  FROM reach GROUP BY a)
-SELECT d.doc_id,
-       COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
-       d.doc_id = COALESCE(c.cluster_id, d.doc_id) AS keep
-FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id
-"""
+{_CLOSURE},
+{_NEARDUP_KEEP}"""
 
 
 # ---------------------------------------------------------------------------

@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 
 from ..functions.datelist import utc_date, utc_date_of_ts
 from ..sources.readers import load_table
+from .catalog_extra import _COMP, _REACH
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -430,27 +431,33 @@ def q_media_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_MEDIA_AHASH_NEARDUP = """
+# the bodies of `bits` (doc_id, i, bit): each doc's 64 aHash bits, and
+# of `words` (doc_id, hi, lo): the bits packed into two 32-bit words
+_AHASH_BITS = """  SELECT d.doc_id, r.r * 8 + c.c AS i,
+         CASE WHEN ((CAST('0x' || substr(md5((d.doc_id % 97) || '_' ||
+                                             r.r || '_' || c.c), 1, 1)
+                          AS INT) < 8)
+                    <> (r.r = d.doc_id % 8 AND c.c = d.doc_id % 8))
+              THEN 1 ELSE 0 END AS bit
+  FROM documents d, range(8) r(r), range(8) c(c)),"""
+_AHASH_WORDS = """  SELECT doc_id,
+         SUM(CASE WHEN i >= 32 THEN bit::BIGINT << (i - 32)
+                  ELSE 0 END)::BIGINT AS hi,
+         SUM(CASE WHEN i < 32 THEN bit::BIGINT << i
+                  ELSE 0 END)::BIGINT AS lo
+  FROM bits GROUP BY doc_id)"""
+
+
+ORACLE_MEDIA_AHASH_NEARDUP = f"""
 WITH bits AS (
   -- sampled cell (r, c) reads image pixel (2r, c), whose whiteness is
   -- md5("<doc_id%97>_<r>_<c>") first hex digit < 8; the defect pixel
   -- (2*(doc_id%8), doc_id%8) lands exactly on sampled cell
   -- (doc_id%8, doc_id%8). Mean-threshold == whiteness while the white
   -- count stays inside [1, 63] (this fixture: [20, 43]).
-  SELECT d.doc_id, r.r * 8 + c.c AS i,
-         CASE WHEN ((CAST('0x' || substr(md5((d.doc_id % 97) || '_' ||
-                                             r.r || '_' || c.c), 1, 1)
-                          AS INT) < 8)
-                    <> (r.r = d.doc_id % 8 AND c.c = d.doc_id % 8))
-              THEN 1 ELSE 0 END AS bit
-  FROM documents d, range(8) r(r), range(8) c(c)),
+{_AHASH_BITS}
 words AS (
-  SELECT doc_id,
-         SUM(CASE WHEN i >= 32 THEN bit::BIGINT << (i - 32)
-                  ELSE 0 END)::BIGINT AS hi,
-         SUM(CASE WHEN i < 32 THEN bit::BIGINT << i
-                  ELSE 0 END)::BIGINT AS lo
-  FROM bits GROUP BY doc_id)
+{_AHASH_WORDS}
 SELECT a.doc_id AS id_a, b.doc_id AS id_b,
        (bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)))::INT
          AS hamming
@@ -459,23 +466,12 @@ WHERE bit_count(xor(a.hi, b.hi)) + bit_count(xor(a.lo, b.lo)) <= 3
 """
 
 
-ORACLE_MEDIA_CURATION_PIPELINE = """
+ORACLE_MEDIA_CURATION_PIPELINE = f"""
 WITH RECURSIVE bits AS (
   -- same md5-scrambled cell recipe as ORACLE_MEDIA_AHASH_NEARDUP
-  SELECT d.doc_id, r.r * 8 + c.c AS i,
-         CASE WHEN ((CAST('0x' || substr(md5((d.doc_id % 97) || '_' ||
-                                             r.r || '_' || c.c), 1, 1)
-                          AS INT) < 8)
-                    <> (r.r = d.doc_id % 8 AND c.c = d.doc_id % 8))
-              THEN 1 ELSE 0 END AS bit
-  FROM documents d, range(8) r(r), range(8) c(c)),
+{_AHASH_BITS}
 words AS MATERIALIZED (
-  SELECT doc_id,
-         SUM(CASE WHEN i >= 32 THEN bit::BIGINT << (i - 32)
-                  ELSE 0 END)::BIGINT AS hi,
-         SUM(CASE WHEN i < 32 THEN bit::BIGINT << i
-                  ELSE 0 END)::BIGINT AS lo
-  FROM bits GROUP BY doc_id),
+{_AHASH_WORDS},
 pairs AS MATERIALIZED (
   SELECT a.doc_id AS pa, b.doc_id AS pb
   FROM words a JOIN words b ON a.doc_id < b.doc_id
@@ -484,13 +480,8 @@ edges AS MATERIALIZED (
   SELECT pa AS a, pb AS b FROM pairs
   UNION
   SELECT pb, pa FROM pairs),
-reach(a, b) AS (
-  SELECT a, b FROM edges
-  UNION
-  SELECT r.a, e.b FROM reach r JOIN edges e ON r.b = e.a),
-comp AS (
-  SELECT a AS doc_id, LEAST(a, MIN(b)) AS cluster_id
-  FROM reach GROUP BY a)
+{_REACH},
+{_COMP}
 SELECT d.doc_id AS media_id,
        COALESCE(c.cluster_id, d.doc_id) AS cluster_id,
        d.doc_id = COALESCE(c.cluster_id, d.doc_id) AS keep

@@ -34,10 +34,11 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..functions.datelist import utc_date, utc_date_of_ts, utc_ts_str
+from ..functions.datelist import utc_date, utc_ts_str
 from ..operators.dedup import _tokens
 from ..sources.readers import load_table
 from ..streaming.sinks import drain
+from .catalog_ext import _BRUTE_SCORED, _top_k_sql
 from .catalog_write import _events_file_stream, _snapshot, _staged_stream
 
 _LANGS = ["de", "en", "es", "fr", "zh"]
@@ -393,7 +394,7 @@ def q_ann_q8_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     return cosine_topk_q8_rerank(emb, queries, k=5, n_candidates=20, dim=64)
 
 
-ORACLE_ANN_Q8_RERANK = """
+ORACLE_ANN_Q8_RERANK = f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
 sc AS (
   SELECT vec_id, e,
@@ -427,14 +428,7 @@ scored AS (
   FROM cand
   JOIN v a ON a.vec_id = cand.qid
   JOIN v b ON b.vec_id = cand.nid),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank::INT AS rank
-FROM ranked WHERE rank <= 5
-"""
+{_top_k_sql(5)}"""
 
 
 # ---------------------------------------------------------------------------
@@ -1193,32 +1187,16 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     return hard_negatives(emb, anchors, k=3)
 
 
-ORACLE_HARD_NEGATIVE_MINING = """
+ORACLE_HARD_NEGATIVE_MINING = f"""
 WITH q AS (
   SELECT vec_id AS query_id, label AS qlbl, embedding AS qv
   FROM embeddings WHERE vec_id < 10),
 c AS (
   SELECT vec_id AS neighbor_id, label AS clbl, embedding AS cv
   FROM embeddings),
-scored AS (
-  SELECT query_id, neighbor_id,
-         ROUND(
-           list_sum(list_transform(range(1, len(qv) + 1),
-                                   i -> qv[i]::DOUBLE * cv[i]::DOUBLE))
-           / (sqrt(list_sum(list_transform(range(1, len(qv) + 1),
-                                           i -> qv[i]::DOUBLE * qv[i]::DOUBLE)))
-              * sqrt(list_sum(list_transform(range(1, len(cv) + 1),
-                                             i -> cv[i]::DOUBLE * cv[i]::DOUBLE)))),
-           6) AS cosine
+{_BRUTE_SCORED}
   FROM q, c WHERE query_id <> neighbor_id AND qlbl <> clbl),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank::INT AS rank
-FROM ranked WHERE rank <= 3
-"""
+{_top_k_sql(3)}"""
 
 
 def q_bloom_prune_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

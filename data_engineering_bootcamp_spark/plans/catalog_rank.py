@@ -45,6 +45,7 @@ from ..operators.bpe import (
 from ..operators.dedup import _tokens as _text_tokens
 from ..sources.readers import load_table
 from ..streaming.sinks import drain
+from .catalog_ext import _top_k_sql
 from .catalog_write import _snapshot, _staged_stream
 
 
@@ -58,6 +59,19 @@ def _tokens(docs: DataFrame, with_doc: bool = False) -> DataFrame:
     lower, collapse whitespace, split, drop empties."""
     tok = F.explode(_text_tokens(F.col("text"))).alias("term")
     return docs.select("doc_id", tok) if with_doc else docs.select(tok)
+
+
+def _word_freq(docs: DataFrame) -> DataFrame:
+    """The tokenizer trainers' word table (token, freq): the standard
+    tokenization, restricted to ``^[a-z]+$`` words of length >= 2."""
+    return (
+        _tokens(docs)
+        .groupBy(F.col("term").alias("token"))
+        .agg(F.count(F.lit(1)).alias("freq"))
+        .where(
+            (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
+        )
+    )
 
 
 _TOKS_SQL = r"""
@@ -91,14 +105,7 @@ def q_bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators/bpe.bpe_train_merges``; the oracle below unrolls the
     same 8 rounds as chained CTEs."""
     docs = _t(spark, sf_dir, "documents")
-    wf = (
-        _tokens(docs)
-        .groupBy(F.col("term").alias("token"))
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .where(
-            (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
-        )
-    )
+    wf = _word_freq(docs)
     # checkpoint_every=0: a BOUNDED 8-step loop composes the narrow
     # merge maps lazily (each winner job re-runs <= 8 trivial
     # |vocab|-row string maps from the checkpointed base instead of
@@ -195,14 +202,7 @@ def q_bpe_train_merges_batched(spark: SparkSession, sf_dir: str) -> DataFrame:
     COVERAGE.md; the k=1 degeneration is pinned equal to
     `bpe_train_merges` in tests/test_rank.py."""
     docs = _t(spark, sf_dir, "documents")
-    wf = (
-        _tokens(docs)
-        .groupBy(F.col("term").alias("token"))
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .where(
-            (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
-        )
-    )
+    wf = _word_freq(docs)
     return bpe_train_merges_batched(
         wf, rounds=BPE_B_ROUNDS, k=BPE_B_K, checkpoint_every=0
     ).orderBy("step")
@@ -329,19 +329,9 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     separately pinned in tests/test_kafka_fidelity.py."""
     docs = _t(spark, sf_dir, "documents")
 
-    def vocab_of(d: DataFrame) -> DataFrame:
-        return (
-            _tokens(d)
-            .groupBy(F.col("term").alias("token"))
-            .agg(F.count(F.lit(1)).alias("freq"))
-            .where(
-                (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
-            )
-        )
-
     # train once, batch-side; checkpoint so each micro-batch's encode
     # chain broadcasts the settled 8-row table instead of re-deriving it
-    wf_all = vocab_of(docs).localCheckpoint(eager=True)
+    wf_all = _word_freq(docs).localCheckpoint(eager=True)
     rules = bpe_train_merges(
         wf_all, iterations=BPE_STEPS, checkpoint_every=0
     ).localCheckpoint(eager=True)
@@ -354,7 +344,7 @@ def q_streaming_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
         def encode_batch(batch_df: DataFrame, _batch_id: int) -> None:
-            enc = bpe_apply_merges(vocab_of(batch_df), rules, BPE_STEPS)
+            enc = bpe_apply_merges(_word_freq(batch_df), rules, BPE_STEPS)
             enc.select("token", "freq", "encoded", "n_syms").write.mode(
                 "append"
             ).parquet(f"{d}/out")
@@ -387,12 +377,7 @@ def q_bpe_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pandas-UDF scale seam for production rule counts)."""
     docs = _t(spark, sf_dir, "documents")
     wf = (
-        _tokens(docs)
-        .groupBy(F.col("term").alias("token"))
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .where(
-            (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
-        )
+        _word_freq(docs)
         # one corpus pass feeds BOTH consumers: without this, training
         # materializes its own spaced copy AND the encode chain's final
         # execution re-runs the scan+aggregate a second time
@@ -786,7 +771,9 @@ def _bm25_term_sql(t: str) -> str:
     )
 
 
-ORACLE_BM25_TOP_DOCS = (
+# per-doc length and term counts (`pd`), corpus token total and
+# document frequencies (`g`), and the document count (`n`)
+_BM25_STATS = (
     "WITH toks AS (" + _TOKS_SQL + "),\n"
     "pd AS (\n"
     "  SELECT doc_id, COUNT(*)::BIGINT AS dl,\n"
@@ -802,7 +789,11 @@ ORACLE_BM25_TOP_DOCS = (
         for t in BM25_TERMS
     )
     + "\n  FROM pd),\n"
-    "n AS (SELECT COUNT(*)::BIGINT AS n_docs FROM documents)\n"
+    "n AS (SELECT COUNT(*)::BIGINT AS n_docs FROM documents)"
+)
+
+ORACLE_BM25_TOP_DOCS = (
+    _BM25_STATS + "\n"
     "SELECT doc_id, dl, "
     + ", ".join(f"tf_{t}" for t in BM25_TERMS)
     + ",\n       ("
@@ -861,15 +852,71 @@ def q_ann_pq_adc(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _d2(a: str, b: str) -> str:
+    """Squared L2 between two lists, in the exact zip-lambda form (NOT
+    list_distance^2: squaring the sqrt differs in the last ulp from the
+    direct sum of squares the Spark side computes)."""
+    return (f"list_sum(list_transform(list_zip({a}, {b}), "
+            f"x -> (x[1] - x[2]) ^ 2))")
+
+
+def _cosine(a: str, b: str) -> str:
+    """Cosine of two lists, on one line."""
+    return (f"list_dot_product({a}, {b}) / "
+            f"(sqrt(list_dot_product({a}, {a})) * "
+            f"sqrt(list_dot_product({b}, {b})))")
+
+
+# the coarse centroids `cent` (cid, e) after one Lloyd round (`seeds`
+# updated by the 6dp per-dim means `cm`) and their 6dp-rounded
+# normalized residual basis `crc` (cid, rc)
+_COARSE_CENT = """cml AS (SELECT cid, list(mv ORDER BY d) AS e FROM cm GROUP BY cid),
+cent AS MATERIALIZED (
+  SELECT s.cid, COALESCE(ml.e, s.e) AS e
+  FROM seeds s LEFT JOIN cml ml ON s.cid = ml.cid),
+crc AS MATERIALIZED (
+  SELECT cid,
+         list_transform(
+           e, x -> ROUND(x / sqrt(list_dot_product(e, e)), 6)) AS rc
+  FROM cent)"""
+
+
+def _pq_train(m: int, n_codes: int) -> str:
+    """The residual PQ codebooks `pcb` (j, pcid, c) over `res` (vec_id,
+    r): `n_codes` md5-ordered seeds, one Lloyd round per subspace with
+    6dp means, for `m` subspaces of 64 // m dims."""
+    dsub = 64 // m
+    sub_s0 = f"res.r[s0.j*{dsub}+1 : s0.j*{dsub}+{dsub}]"
+    return f"""pseeds AS (
+  SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
+           - 1 AS pcid, r
+  FROM res ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
+  LIMIT {n_codes}),
+js AS (SELECT unnest(range(0, {m})) AS j),
+s0 AS MATERIALIZED (
+  SELECT js.j, p.pcid, p.r[js.j*{dsub}+1 : js.j*{dsub}+{dsub}] AS c
+  FROM pseeds p, js),
+p1 AS (
+  SELECT vec_id, j, pcid FROM (
+    SELECT res.vec_id, s0.j, s0.pcid,
+           ROW_NUMBER() OVER (
+             PARTITION BY res.vec_id, s0.j
+             ORDER BY {_d2(sub_s0, "s0.c")} ASC, s0.pcid ASC) AS rn
+    FROM res, s0) WHERE rn = 1),
+pm AS (
+  SELECT p1.j, p1.pcid, dd.d,
+         ROUND(AVG(res.r[p1.j*{dsub} + dd.d]), 6) AS mv
+  FROM p1 JOIN res USING (vec_id)
+  CROSS JOIN (SELECT unnest(range(1, {dsub + 1})) AS d) dd
+  GROUP BY 1, 2, 3),
+pml AS (SELECT j, pcid, list(mv ORDER BY d) AS c FROM pm GROUP BY j, pcid),
+pcb AS MATERIALIZED (
+  SELECT s0.j, s0.pcid, COALESCE(pml.c, s0.c) AS c
+  FROM s0 LEFT JOIN pml ON s0.j = pml.j AND s0.pcid = pml.pcid)"""
+
+
 def _pq_oracle() -> str:
     dsub = 64 // PQ_M
-    # squared L2 between two lists, exact zip-lambda form (NOT
-    # list_distance^2: squaring the sqrt differs in the last ulp from
-    # the direct sum of squares the Spark side computes)
-    def d2(a: str, b: str) -> str:
-        return (f"list_sum(list_transform(list_zip({a}, {b}), "
-                f"x -> (x[1] - x[2]) ^ 2))")
-
     adc_terms = " + ".join(
         f"dts[{j * PQ_CODES} + cs[{j + 1}] + 1]" for j in range(PQ_M)
     )
@@ -894,7 +941,7 @@ a1 AS (
     SELECT vn.vec_id, s0.j, s0.cid,
            ROW_NUMBER() OVER (
              PARTITION BY vn.vec_id, s0.j
-             ORDER BY {d2("vn." + sub_s0, "s0.c")} ASC, s0.cid ASC) AS rn
+             ORDER BY {_d2("vn." + sub_s0, "s0.c")} ASC, s0.cid ASC) AS rn
     FROM vn, s0) WHERE rn = 1),
 mm AS (
   SELECT a1.j, a1.cid, dd.d, ROUND(AVG(vn.u[a1.j*{dsub} + dd.d]), 6) AS mv
@@ -910,14 +957,14 @@ codes AS (
     SELECT vn.vec_id, cb.j, cb.cid,
            ROW_NUMBER() OVER (
              PARTITION BY vn.vec_id, cb.j
-             ORDER BY {d2("vn." + sub, "cb.c")} ASC, cb.cid ASC) AS rn
+             ORDER BY {_d2("vn." + sub, "cb.c")} ASC, cb.cid ASC) AS rn
     FROM vn, cb) WHERE rn = 1),
 cl AS MATERIALIZED (
   SELECT vec_id, list(cid ORDER BY j) AS cs FROM codes GROUP BY vec_id),
 q AS (SELECT vec_id AS query_id, u FROM vn WHERE vec_id < 10),
 dt AS (
   SELECT q.query_id, cb.j, cb.cid,
-         ROUND({d2("q." + sub, "cb.c")}, 6) AS dd2
+         ROUND({_d2("q." + sub, "cb.c")}, 6) AS dd2
   FROM q, cb),
 dtl AS MATERIALIZED (
   SELECT query_id, list(dd2 ORDER BY j, cid) AS dts FROM dt GROUP BY query_id),
@@ -938,14 +985,7 @@ scored AS (
   FROM cand c
   JOIN v a ON a.vec_id = c.query_id
   JOIN v b ON b.vec_id = c.vec_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank::INT AS rank
-FROM ranked WHERE rank <= {PQ_K}
-"""
+{_top_k_sql(PQ_K)}"""
 
 
 ORACLE_ANN_PQ_ADC = _pq_oracle()
@@ -1004,22 +1044,9 @@ def _ivfpq_oracle(
     k: int = IVFPQ_K,
 ) -> str:
     dsub = 64 // m
-
-    # squared L2 between two lists, exact zip-lambda form (same rule
-    # as the PQ oracle: NOT list_distance^2)
-    def d2(a: str, b: str) -> str:
-        return (f"list_sum(list_transform(list_zip({a}, {b}), "
-                f"x -> (x[1] - x[2]) ^ 2))")
-
-    def cosine(a: str, b: str) -> str:
-        return (f"list_dot_product({a}, {b}) / "
-                f"(sqrt(list_dot_product({a}, {a})) * "
-                f"sqrt(list_dot_product({b}, {b})))")
-
     adc_terms = " + ".join(
         f"dts[{j * n_codes} + cs[{j + 1}] + 1]" for j in range(m)
     )
-    sub_s0 = f"res.r[s0.j*{dsub}+1 : s0.j*{dsub}+{dsub}]"
     sub_cb = f"res.r[pcb.j*{dsub}+1 : pcb.j*{dsub}+{dsub}]"
     sub_q = f"q.rq[pcb.j*{dsub}+1 : pcb.j*{dsub}+{dsub}]"
     return f"""
@@ -1037,65 +1064,32 @@ a1 AS (
     SELECT v.vec_id, s.cid,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id
-             ORDER BY {cosine("v.e", "s.e")} DESC, s.cid) AS rn
+             ORDER BY {_cosine("v.e", "s.e")} DESC, s.cid) AS rn
     FROM v, seeds s) WHERE rn = 1),
 cm AS (
   SELECT a1.cid, dd.d, ROUND(AVG(v.e[dd.d]), 6) AS mv
   FROM a1 JOIN v USING (vec_id)
   CROSS JOIN (SELECT unnest(range(1, 65)) AS d) dd
   GROUP BY 1, 2),
-cml AS (SELECT cid, list(mv ORDER BY d) AS e FROM cm GROUP BY cid),
-cent AS MATERIALIZED (
-  SELECT s.cid, COALESCE(ml.e, s.e) AS e
-  FROM seeds s LEFT JOIN cml ml ON s.cid = ml.cid),
-crc AS MATERIALIZED (
-  SELECT cid,
-         list_transform(
-           e, x -> ROUND(x / sqrt(list_dot_product(e, e)), 6)) AS rc
-  FROM cent),
+{_COARSE_CENT},
 a2 AS (
   SELECT vec_id, cid FROM (
     SELECT v.vec_id, c.cid,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id
-             ORDER BY {cosine("v.e", "c.e")} DESC, c.cid) AS rn
+             ORDER BY {_cosine("v.e", "c.e")} DESC, c.cid) AS rn
     FROM v, cent c) WHERE rn = 1),
 res AS MATERIALIZED (
   SELECT vn.vec_id, a2.cid AS bucket,
          list_transform(list_zip(vn.u, crc.rc), x -> x[1] - x[2]) AS r
   FROM vn JOIN a2 USING (vec_id) JOIN crc ON crc.cid = a2.cid),
-pseeds AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-           - 1 AS pcid, r
-  FROM res ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-  LIMIT {n_codes}),
-js AS (SELECT unnest(range(0, {m})) AS j),
-s0 AS MATERIALIZED (
-  SELECT js.j, p.pcid, p.r[js.j*{dsub}+1 : js.j*{dsub}+{dsub}] AS c
-  FROM pseeds p, js),
-p1 AS (
-  SELECT vec_id, j, pcid FROM (
-    SELECT res.vec_id, s0.j, s0.pcid,
-           ROW_NUMBER() OVER (
-             PARTITION BY res.vec_id, s0.j
-             ORDER BY {d2(sub_s0, "s0.c")} ASC, s0.pcid ASC) AS rn
-    FROM res, s0) WHERE rn = 1),
-pm AS (
-  SELECT p1.j, p1.pcid, dd.d,
-         ROUND(AVG(res.r[p1.j*{dsub} + dd.d]), 6) AS mv
-  FROM p1 JOIN res USING (vec_id)
-  CROSS JOIN (SELECT unnest(range(1, {dsub + 1})) AS d) dd
-  GROUP BY 1, 2, 3),
-pml AS (SELECT j, pcid, list(mv ORDER BY d) AS c FROM pm GROUP BY j, pcid),
-pcb AS MATERIALIZED (
-  SELECT s0.j, s0.pcid, COALESCE(pml.c, s0.c) AS c
-  FROM s0 LEFT JOIN pml ON s0.j = pml.j AND s0.pcid = pml.pcid),
+{_pq_train(m, n_codes)},
 codes AS (
   SELECT vec_id, j, pcid FROM (
     SELECT res.vec_id, pcb.j, pcb.pcid,
            ROW_NUMBER() OVER (
              PARTITION BY res.vec_id, pcb.j
-             ORDER BY {d2(sub_cb, "pcb.c")} ASC, pcb.pcid ASC) AS rn
+             ORDER BY {_d2(sub_cb, "pcb.c")} ASC, pcb.pcid ASC) AS rn
     FROM res, pcb) WHERE rn = 1),
 cl AS MATERIALIZED (
   SELECT codes.vec_id, ANY_VALUE(res.bucket) AS bucket,
@@ -1107,7 +1101,7 @@ probes AS (
     SELECT v.vec_id, c.cid,
            ROW_NUMBER() OVER (
              PARTITION BY v.vec_id
-             ORDER BY {cosine("v.e", "c.e")} DESC, c.cid) AS rn
+             ORDER BY {_cosine("v.e", "c.e")} DESC, c.cid) AS rn
     FROM v, cent c WHERE v.vec_id < 10) WHERE rn <= {n_probe}),
 qres AS MATERIALIZED (
   SELECT p.query_id, p.bucket,
@@ -1116,7 +1110,7 @@ qres AS MATERIALIZED (
   JOIN crc ON crc.cid = p.bucket),
 dt AS (
   SELECT q.query_id, q.bucket, pcb.j, pcb.pcid,
-         ROUND({d2(sub_q, "pcb.c")}, 6) AS dd2
+         ROUND({_d2(sub_q, "pcb.c")}, 6) AS dd2
   FROM qres q, pcb),
 dtl AS MATERIALIZED (
   SELECT query_id, bucket, list(dd2 ORDER BY j, pcid) AS dts
@@ -1133,18 +1127,11 @@ cand AS (
     FROM adc) WHERE rn <= {n_cands}),
 scored AS (
   SELECT c.query_id, c.vec_id AS neighbor_id,
-         ROUND({cosine("a.e", "b.e")}, 6) AS cosine
+         ROUND({_cosine("a.e", "b.e")}, 6) AS cosine
   FROM cand c
   JOIN v a ON a.vec_id = c.query_id
   JOIN v b ON b.vec_id = c.vec_id),
-ranked AS (
-  SELECT query_id, neighbor_id, cosine,
-         ROW_NUMBER() OVER (PARTITION BY query_id
-                            ORDER BY cosine DESC, neighbor_id) AS rank
-  FROM scored)
-SELECT query_id, neighbor_id, cosine, rank::INT AS rank
-FROM ranked WHERE rank <= {k}
-"""
+{_top_k_sql(k)}"""
 
 
 ORACLE_ANN_IVFPQ = _ivfpq_oracle()
@@ -1579,15 +1566,7 @@ def q_training_export_tokenized(spark: SparkSession, sf_dir: str) -> DataFrame:
     with tempfile.TemporaryDirectory(
         prefix="trainexp_tok_", ignore_cleanup_errors=True
     ) as store:
-        wf = (
-            _tokens(docs)
-            .groupBy(F.col("term").alias("token"))
-            .agg(F.count(F.lit(1)).alias("freq"))
-            .where(
-                (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
-            )
-            .localCheckpoint(eager=True)
-        )
+        wf = _word_freq(docs).localCheckpoint(eager=True)
         rules = bpe_train_merges(wf, iterations=BPE_STEPS, checkpoint_every=0)
         enc = bpe_apply_merges_arrow(wf, rules).select("token", "encoded")
         vocab = (
@@ -2157,21 +2136,10 @@ def _six_oracle() -> str:
     same recipe as `_ivfpq_oracle` with the train/encode relations
     split (cor trains, inc encodes) and the codes pivoted to columns."""
     dsub = 64 // SIX_M
-
-    def d2(a: str, b: str) -> str:
-        return (f"list_sum(list_transform(list_zip({a}, {b}), "
-                f"x -> (x[1] - x[2]) ^ 2))")
-
-    def cosine(a: str, b: str) -> str:
-        return (f"list_dot_product({a}, {b}) / "
-                f"(sqrt(list_dot_product({a}, {a})) * "
-                f"sqrt(list_dot_product({b}, {b})))")
-
     code_cols = ",\n       ".join(
         f"MAX(CASE WHEN j = {j} THEN pcid END)::INT AS c{j}"
         for j in range(SIX_M)
     )
-    sub_s0 = f"res.r[s0.j*{dsub}+1 : s0.j*{dsub}+{dsub}]"
     sub_cb = f"qres.rq[pcb.j*{dsub}+1 : pcb.j*{dsub}+{dsub}]"
     return f"""
 WITH v AS (SELECT vec_id, embedding::DOUBLE[] AS e FROM embeddings),
@@ -2190,65 +2158,32 @@ a1 AS (
     SELECT c.vec_id, s.cid,
            ROW_NUMBER() OVER (
              PARTITION BY c.vec_id
-             ORDER BY {cosine("c.e", "s.e")} DESC, s.cid) AS rn
+             ORDER BY {_cosine("c.e", "s.e")} DESC, s.cid) AS rn
     FROM cor c, seeds s) WHERE rn = 1),
 cm AS (
   SELECT a1.cid, dd.d, ROUND(AVG(c.e[dd.d]), 6) AS mv
   FROM a1 JOIN cor c USING (vec_id)
   CROSS JOIN (SELECT unnest(range(1, 65)) AS d) dd
   GROUP BY 1, 2),
-cml AS (SELECT cid, list(mv ORDER BY d) AS e FROM cm GROUP BY cid),
-cent AS MATERIALIZED (
-  SELECT s.cid, COALESCE(ml.e, s.e) AS e
-  FROM seeds s LEFT JOIN cml ml ON s.cid = ml.cid),
-crc AS MATERIALIZED (
-  SELECT cid,
-         list_transform(
-           e, x -> ROUND(x / sqrt(list_dot_product(e, e)), 6)) AS rc
-  FROM cent),
+{_COARSE_CENT},
 a2 AS (
   SELECT vec_id, cid FROM (
     SELECT c.vec_id, ct.cid,
            ROW_NUMBER() OVER (
              PARTITION BY c.vec_id
-             ORDER BY {cosine("c.e", "ct.e")} DESC, ct.cid) AS rn
+             ORDER BY {_cosine("c.e", "ct.e")} DESC, ct.cid) AS rn
     FROM cor c, cent ct) WHERE rn = 1),
 res AS MATERIALIZED (
   SELECT corn.vec_id,
          list_transform(list_zip(corn.u, crc.rc), x -> x[1] - x[2]) AS r
   FROM corn JOIN a2 USING (vec_id) JOIN crc ON crc.cid = a2.cid),
-pseeds AS (
-  SELECT ROW_NUMBER() OVER (ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id)
-           - 1 AS pcid, r
-  FROM res ORDER BY md5(CAST(vec_id AS VARCHAR)), vec_id
-  LIMIT {SIX_CODES}),
-js AS (SELECT unnest(range(0, {SIX_M})) AS j),
-s0 AS MATERIALIZED (
-  SELECT js.j, p.pcid, p.r[js.j*{dsub}+1 : js.j*{dsub}+{dsub}] AS c
-  FROM pseeds p, js),
-p1 AS (
-  SELECT vec_id, j, pcid FROM (
-    SELECT res.vec_id, s0.j, s0.pcid,
-           ROW_NUMBER() OVER (
-             PARTITION BY res.vec_id, s0.j
-             ORDER BY {d2(sub_s0, "s0.c")} ASC, s0.pcid ASC) AS rn
-    FROM res, s0) WHERE rn = 1),
-pm AS (
-  SELECT p1.j, p1.pcid, dd.d,
-         ROUND(AVG(res.r[p1.j*{dsub} + dd.d]), 6) AS mv
-  FROM p1 JOIN res USING (vec_id)
-  CROSS JOIN (SELECT unnest(range(1, {dsub + 1})) AS d) dd
-  GROUP BY 1, 2, 3),
-pml AS (SELECT j, pcid, list(mv ORDER BY d) AS c FROM pm GROUP BY j, pcid),
-pcb AS MATERIALIZED (
-  SELECT s0.j, s0.pcid, COALESCE(pml.c, s0.c) AS c
-  FROM s0 LEFT JOIN pml ON s0.j = pml.j AND s0.pcid = pml.pcid),
+{_pq_train(SIX_M, SIX_CODES)},
 incb AS (
   SELECT vec_id, cid AS bucket FROM (
     SELECT i.vec_id, ct.cid,
            ROW_NUMBER() OVER (
              PARTITION BY i.vec_id
-             ORDER BY {cosine("i.e", "ct.e")} DESC, ct.cid) AS rn
+             ORDER BY {_cosine("i.e", "ct.e")} DESC, ct.cid) AS rn
     FROM inc i, cent ct) WHERE rn = 1),
 qres AS MATERIALIZED (
   SELECT i.vec_id, b.bucket,
@@ -2263,7 +2198,7 @@ qcodes AS (
     SELECT qres.vec_id, pcb.j, pcb.pcid,
            ROW_NUMBER() OVER (
              PARTITION BY qres.vec_id, pcb.j
-             ORDER BY {d2(sub_cb, "pcb.c")} ASC, pcb.pcid ASC) AS rn
+             ORDER BY {_d2(sub_cb, "pcb.c")} ASC, pcb.pcid ASC) AS rn
     FROM qres, pcb) WHERE rn = 1)
 SELECT q.vec_id, ANY_VALUE(b.bucket)::INT AS bucket,
        {code_cols}
@@ -2485,14 +2420,7 @@ def q_unigram_train_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.unigram import unigram_train
 
     docs = _t(spark, sf_dir, "documents")
-    wf = (
-        _tokens(docs)
-        .groupBy(F.col("term").alias("token"))
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .where(
-            (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
-        )
-    )
+    wf = _word_freq(docs)
     return unigram_train(
         wf, seed_k=UNI_SEED_K, vocab_k=UNI_VOCAB_K,
         max_piece_len=UNI_MAXP, lmax=UNI_LMAX,
@@ -2554,14 +2482,7 @@ def q_unigram_encode_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.unigram import unigram_encode
 
     docs = _t(spark, sf_dir, "documents")
-    wf = (
-        _tokens(docs)
-        .groupBy(F.col("term").alias("token"))
-        .agg(F.count(F.lit(1)).alias("freq"))
-        .where(
-            (F.length("token") >= 2) & F.col("token").rlike("^[a-z]+$")
-        )
-    )
+    wf = _word_freq(docs)
     return unigram_encode(
         wf, seed_k=UNI_SEED_K, vocab_k=UNI_VOCAB_K,
         max_piece_len=UNI_MAXP, lmax=UNI_LMAX,
@@ -2684,22 +2605,7 @@ def q_hybrid_rrf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 ORACLE_HYBRID_RRF = (
-    "WITH toks AS (" + _TOKS_SQL + "),\n"
-    "pd AS (\n"
-    "  SELECT doc_id, COUNT(*)::BIGINT AS dl,\n"
-    + ",\n".join(
-        f"    SUM(CASE WHEN term = '{t}' THEN 1 ELSE 0 END)::BIGINT AS tf_{t}"
-        for t in BM25_TERMS
-    )
-    + "\n  FROM toks GROUP BY doc_id),\n"
-    "g AS (\n"
-    "  SELECT SUM(dl)::BIGINT AS t_tokens,\n"
-    + ",\n".join(
-        f"    SUM(CASE WHEN tf_{t} > 0 THEN 1 ELSE 0 END)::BIGINT AS df_{t}"
-        for t in BM25_TERMS
-    )
-    + "\n  FROM pd),\n"
-    "n AS (SELECT COUNT(*)::BIGINT AS n_docs FROM documents),\n"
+    _BM25_STATS + ",\n"
     "bm AS (\n"
     "  SELECT doc_id, ("
     + "\n        + ".join(_bm25_term_sql(t) for t in BM25_TERMS)

@@ -69,10 +69,14 @@ python tools/make_shuffled_sf.py /root/testdata/sf0.01 "$SHUF_DIR"
 run "GATECHECK_shuffled_${R}.log" "$SHUF_DIR" --no-perf-gate
 
 echo "=== PYTEST_${R}.log: full suite"
-# the Tier-1 env (ROADMAP): without it graft_cpus() defaults to 32 and
-# the suite runs local[32] whatever the box has
+# the exact Tier-1 command (ROADMAP): its env (without it graft_cpus()
+# defaults to 32 and the suite runs local[32] whatever the box has),
+# its timeout, and its flags (a module that fails to collect does not
+# stop the rest of the suite)
 SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(env -u OMP_NUM_THREADS nproc)}" \
     SPARK_LOCAL_DIRS=/tmp/spark-local \
-    python -m pytest tests/ -q >"PYTEST_${R}.log" 2>&1
+    timeout -k 10 2670 python -m pytest tests/ -q \
+    --continue-on-collection-errors -p no:cacheprovider \
+    >"PYTEST_${R}.log" 2>&1
 echo "exit=$?" >>"PYTEST_${R}.log"
 tail -3 "PYTEST_${R}.log"
