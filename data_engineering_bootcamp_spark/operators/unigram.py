@@ -98,9 +98,6 @@ def viterbi_segment(
     bc = spark.sparkContext.broadcast((dict(costs), int(max_piece_len)))
 
     def run(batches):
-        # self-contained closure (executors may lack this package)
-        import pandas as _pd
-
         cost, maxp = bc.value
         for pdf in batches:
             if pdf.empty:

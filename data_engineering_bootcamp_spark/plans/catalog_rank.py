@@ -2065,8 +2065,8 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     encoded against the frozen coarse/PQ codebooks with ONE broadcast
     + ONE Arrow mapInPandas pass (`operators.similarity.ivfpq_encode`,
     the same kernel `cosine_topk_ivfpq` scans with), and the (vid,
-    bucket, codes) posting rows merge into a persisted store via the
-    `_publish_version` atomic-swap publisher — a reader always
+    bucket, codes) posting rows append to a persisted store through
+    `merge_into_store`'s atomic version swap — a reader always
     resolves a complete index version, never a half-written one.
 
     Training is `_ivfpq_train` at full scope (the DISTRIBUTED `_lloyd`,
@@ -2079,10 +2079,8 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     row per arrived vector with its bucket and the 8 PQ codes as
     columns (the posting-list payload, ~8 bytes per vector vs 512
     bytes of raw floats)."""
-    import os
-
     from ..operators.similarity import _ann_src, _ivfpq_train, ivfpq_encode
-    from ..streaming.sinks import _publish_version
+    from ..streaming.sinks import merge_into_store
 
     emb = _t(spark, sf_dir, "embeddings")
     base_src = _ann_src(
@@ -2101,17 +2099,8 @@ def q_streaming_ivfpq_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream = _staged_stream(spark, incoming, f"{d}/src")
 
             def index_batch(batch_df: DataFrame, _batch_id: int) -> None:
-                fresh = ivfpq_encode(batch_df, Cn, rc, books)
-                live = os.path.join(store, "live")
-                prev_target = (
-                    os.path.realpath(live) if os.path.exists(live) else None
-                )
-                merged = (
-                    spark.read.parquet(live).unionByName(fresh)
-                    if prev_target
-                    else fresh
-                )
-                _publish_version(store, _batch_id, merged, prev_target)
+                postings = ivfpq_encode(batch_df, Cn, rc, books)
+                merge_into_store(store, _batch_id, postings)
 
             drain(stream.writeStream.foreachBatch(index_batch), f"{d}/ckpt")
 
@@ -2306,13 +2295,9 @@ def q_ivfpq_index_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
         live = latest.where(F.col("op") == "u").drop("op")
         n_live = live.count()
         n_files = max(1, math.ceil(n_live / IXC_ROWS_PER_FILE))
-        # target_files=None: the file count here is the QUERY RESULT
-        # (the oracle predicts ceil(n_live / rows_per_file)) — the
-        # repartition above is the layout, not a default to override
-        _publish_version(
-            store, IXC_VERSIONS, live.repartition(n_files), None,
-            target_files=None,
-        )
+        # the file count here is the QUERY RESULT (the oracle predicts
+        # ceil(n_live / rows_per_file)), so the repartition is the layout
+        _publish_version(store, IXC_VERSIONS, live.repartition(n_files), None)
 
         # manifest grounding: the published snapshot really has the
         # predicted layout (the metadata_scan S8 listing pattern)

@@ -18,6 +18,9 @@ JDBC sink relies on).
 
 from __future__ import annotations
 
+import os
+import shutil
+import uuid
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame
@@ -122,8 +125,7 @@ def _publish_version(
     store_dir: str,
     batch_id: int,
     merged: DataFrame,
-    prev_target,
-    target_files: int | None = 1,
+    prev_target: str | None,
 ) -> None:
     """Atomic store publication shared by the foreachBatch sinks:
     write a fresh versioned directory, flip the `live` symlink in ONE
@@ -133,27 +135,19 @@ def _publish_version(
     between flip and commit never overwrites the directory `live`
     still resolves to.
 
-    ``target_files`` coalesces the version write (r17, guide §6 —
-    small-files hurt twice, and here they COMPOUND: every trigger
-    re-reads the live store, so N shuffle-partition files per version
-    x T triggers means O(N·T) file opens across the run, dominated by
-    per-file open/footer cost for these KB-scale stores). Default 1:
-    every current store is bounded (count-min: depth x width rows
-    forever; upsert: one row per key; index postings: ~10 B/row), so
-    one file per version is the right layout until a version
-    approaches the 128 MB - 1 GB file band — callers whose stores
-    grow past that pass a larger value or None (leave partitioning
-    alone). Coalesce, not repartition: it folds into the write stage
-    without an extra Exchange."""
-    import os
-    import shutil
-    import uuid
-
+    `merged` is written with the partitioning it has: the caller owns
+    the version's file layout. No `_SUCCESS` marker is written —
+    readers resolve `live`, which only ever points at a finished
+    version, and manifests count `*.parquet` files only."""
     live = os.path.join(store_dir, "live")
     staged = os.path.join(store_dir, f"v_{batch_id}_{uuid.uuid4().hex[:8]}")
-    if target_files:
-        merged = merged.coalesce(target_files)
-    merged.write.mode("overwrite").parquet(staged)
+    (
+        merged.write.option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        )
+        .mode("overwrite")
+        .parquet(staged)
+    )
     # atomic publish: repoint the live symlink in ONE rename. A stale
     # tmp link from a crashed earlier attempt of this batch must not
     # poison the retry (foreachBatch re-runs failed batches with the
@@ -179,15 +173,46 @@ def _publish_version(
             shutil.rmtree(p, ignore_errors=True)
 
 
+def merge_into_store(
+    store_dir: str,
+    batch_id: int,
+    rows: DataFrame,
+    merge: Callable[[DataFrame], DataFrame] | None = None,
+) -> None:
+    """The read-merge-swap step every store sink runs per trigger:
+    resolve `live`, union its rows with `rows`, apply `merge` (None
+    appends), and publish the result as one file through
+    `_publish_version`.
+
+    The live store is read with `rows.schema`, so no trigger pays a
+    schema-inference job. That is sound because every version is
+    written from `merge(...)` of rows shaped like these: `merge` must
+    return the column names and types of its input.
+
+    One file per version: each store stays KB-MB scale at catalog
+    sizes (count-min: depth x width cells forever; upsert: one row
+    per key; IVFPQ postings: ~10 B per vector), and every trigger
+    re-reads the whole store, so N files per version would cost N
+    file opens per trigger. Coalesce, not repartition: it folds into
+    the write stage without an extra Exchange."""
+    live = os.path.join(store_dir, "live")
+    prev_target = os.path.realpath(live) if os.path.exists(live) else None
+    if prev_target:
+        stored = rows.sparkSession.read.schema(rows.schema).parquet(live)
+        rows = stored.unionByName(rows)
+    merged = merge(rows) if merge else rows
+    _publish_version(store_dir, batch_id, merged.coalesce(1), prev_target)
+
+
 def upsert_batch_writer(
     store_dir: str,
     key_cols: list[str],
     order_cols: list[str],
 ) -> Callable[[DataFrame, int], None]:
     """Streaming UPSERT sink: the streaming analog of the batch
-    ON-CONFLICT merge (S11) — each micro-batch is reduced to its
-    newest row per key, merged with the keyed store keeping the row
-    with the greatest ``order_cols`` tuple, and atomically swapped in.
+    ON-CONFLICT merge (S11) — each micro-batch's rows are merged with
+    the keyed store keeping, per key, the row with the greatest
+    ``order_cols`` tuple, and the result is atomically swapped in.
 
     The local store is a parquet directory behind a `live` SYMLINK:
     each batch writes a fresh versioned directory and flips the
@@ -202,41 +227,29 @@ def upsert_batch_writer(
     (order_cols) row per key and max() is associative/commutative,
     the final store is independent of how the stream was micro-batched
     — which is what makes the entry exactly oracle-checkable as a
-    batch argmax.
+    batch argmax. The same law lets the raw batch rows and the store
+    meet in ONE aggregation: Spark's map-side partial aggregate still
+    reduces the batch before the exchange.
     """
-    import os
 
-    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def merge(rows: DataFrame) -> DataFrame:
         payload = order_cols + [
             c
-            for c in batch_df.columns
+            for c in rows.columns
             if c not in order_cols and c not in key_cols
         ]
-        ordered = F.struct(*[F.col(c) for c in payload])
-        fresh = (
-            batch_df.groupBy(*key_cols)
-            .agg(F.max(ordered).alias("_row"))
+        return (
+            rows.groupBy(*key_cols)
+            .agg(F.max(F.struct(*payload)).alias("_row"))
             .select(*key_cols, "_row.*")
         )
-        live = os.path.join(store_dir, "live")
-        prev_target = (
-            os.path.realpath(live) if os.path.exists(live) else None
-        )
-        if prev_target:
-            existing = spark.read.parquet(live)
-            merged = (
-                existing.unionByName(fresh)
-                .groupBy(*key_cols)
-                .agg(F.max(ordered).alias("_row"))
-                .select(*key_cols, "_row.*")
-            )
-        else:
-            merged = fresh
-        _publish_version(store_dir, _batch_id, merged, prev_target)
+
+    def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
+        merge_into_store(store_dir, _batch_id, batch_df, merge)
 
     write_batch.store_dir = store_dir
     write_batch.key_cols = tuple(key_cols)
+    write_batch.merge = merge
     return write_batch
 
 
@@ -253,30 +266,18 @@ def countmin_merge_batch_writer(
     exact at 20M rows in BENCH_scale_r06.json's merge_laws section).
     That batch-split independence is what makes the streaming entry
     exactly oracle-checkable as a whole-input sketch replay. Store
-    layout and crash/retry semantics are `_publish_version`'s (shared
+    layout and crash/retry semantics are `merge_into_store`'s (shared
     with the upsert sink); the store stays bounded at depth x width
     rows forever, whatever the stream's volume."""
-    import os
-
     from ..operators.sketch import countmin_table
 
+    def merge(cells: DataFrame) -> DataFrame:
+        return cells.groupBy("row", "pos").agg(F.sum("cnt").alias("cnt"))
+
     def write_batch(batch_df: DataFrame, _batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        fresh = countmin_table(batch_df, key_col, depth=depth, width=width)
-        live = os.path.join(store_dir, "live")
-        prev_target = (
-            os.path.realpath(live) if os.path.exists(live) else None
-        )
-        if prev_target:
-            merged = (
-                spark.read.parquet(live)
-                .unionByName(fresh)
-                .groupBy("row", "pos")
-                .agg(F.sum("cnt").alias("cnt"))
-            )
-        else:
-            merged = fresh
-        _publish_version(store_dir, _batch_id, merged, prev_target)
+        cells = countmin_table(batch_df, key_col, depth=depth, width=width)
+        merge_into_store(store_dir, _batch_id, cells, merge)
 
     write_batch.store_dir = store_dir
+    write_batch.merge = merge
     return write_batch

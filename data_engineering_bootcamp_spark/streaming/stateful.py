@@ -18,7 +18,6 @@ any keyed aggregation.
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
@@ -27,7 +26,6 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
-    TimestampType,
 )
 
 # The Python-boundary schema carries RAW MICROS, not timestamps:

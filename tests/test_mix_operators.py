@@ -177,6 +177,7 @@ def test_upsert_batch_writer_is_batch_split_independent(spark, tmp_path):
     # merging in two micro-batches must equal one-shot: max over the
     # order tuple is associative, so batching cannot change the store
     import os
+    from datetime import datetime, timedelta
 
     from data_engineering_bootcamp_spark.streaming.sinks import (
         upsert_batch_writer,
@@ -188,18 +189,53 @@ def test_upsert_batch_writer_is_batch_split_independent(spark, tmp_path):
     ]
     df = spark.createDataFrame(rows, ["k", "seq", "val"])
 
-    def run(batches):
-        d = tmp_path / f"store_{len(batches)}"
-        os.makedirs(d, exist_ok=True)
-        w = upsert_batch_writer(str(d), ["k"], ["seq"])
+    def run(df, order, batches, restart=False):
+        # restart=True builds a NEW writer over the existing store for
+        # every batch, as a restarted query does
+        d = tmp_path / f"store_{len(os.listdir(tmp_path))}"
+        os.makedirs(d)
+        w = None
         for i, b in enumerate(batches):
+            if w is None or restart:
+                w = upsert_batch_writer(str(d), ["k"], order)
             w(b, i)
+        # the store is read back with the batch rows' own schema, so
+        # merge must keep their column names and types (simpleString
+        # ignores nullability)
+        assert w.merge(df).schema.simpleString() == df.schema.simpleString()
         out = spark.read.parquet(str(d / "live"))
-        return {tuple(r) for r in out.select("k", "seq", "val").collect()}
+        return {tuple(r) for r in out.select(*df.columns).collect()}
 
-    one_shot = run([df])
-    split = run([df.where(F.col("seq") <= 10), df.where(F.col("seq") > 10)])
+    one_shot = run(df, ["seq"], [df])
+    split = run(
+        df,
+        ["seq"],
+        [df.where(F.col("seq") <= 10), df.where(F.col("seq") > 10)],
+    )
     assert one_shot == split == {(1, 30, "c"), (2, 6, "y")}
+
+    # restart over an existing store, with a timestamp order column and
+    # null payload values (one winning, one losing)
+    t0 = datetime(2024, 3, 10, 1, 30)
+    rows = [
+        (1, t0, 10, "a"), (1, t0 + timedelta(hours=2), 20, None),
+        (1, t0 + timedelta(hours=1), 30, "c"),
+        (2, t0, 5, None), (2, t0, 6, "y"),
+    ]
+    tdf = spark.createDataFrame(
+        rows, "k long, ts timestamp, seq long, val string"
+    )
+    one_shot = run(tdf, ["ts", "seq"], [tdf])
+    restarted = run(
+        tdf,
+        ["ts", "seq"],
+        [tdf.where("seq IN (10, 6)"), tdf.where("seq NOT IN (10, 6)")],
+        restart=True,
+    )
+    assert one_shot == restarted
+    assert {(k, seq, val) for k, _, seq, val in restarted} == {
+        (1, 20, None), (2, 6, "y")
+    }
 
 
 def test_dup_spans_islands_and_within_doc_exclusion(spark):

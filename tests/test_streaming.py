@@ -502,16 +502,41 @@ def test_countmin_merge_sink_split_independent(spark, tmp_path):
     pq = [n for n in os.listdir(live_dir) if n.endswith(".parquet")]
     assert len(pq) == 1, f"expected 1 file per published version, got {pq}"
 
+    # restart: a NEW writer over the existing store, with batch rows
+    # that carry a timestamp column and null payload values; the store
+    # is read back with the cells' own schema, so merge must keep it
+    tdf = df.select(
+        "event_id",
+        "user_id",
+        F.timestamp_seconds("event_id").alias("ts"),
+        F.when(F.col("event_id") % 5 != 0, F.lit("p")).alias("val"),
+    )
+    rstore = str(tmp_path / "restart")
+    os.makedirs(rstore)
+    for i, part in enumerate(
+        (tdf.where("event_id < 1000"), tdf.where("event_id >= 1000"))
+    ):
+        w = countmin_merge_batch_writer(rstore, "user_id", depth=3, width=64)
+        w(part, i)
+    got = spark.read.parquet(os.path.join(rstore, "live"))
+    assert got.exceptAll(whole).count() == 0
+    assert whole.exceptAll(got).count() == 0
+    cells = countmin_table(tdf, "user_id", depth=3, width=64)
+    # simpleString: column names and types, nullability ignored
+    assert w.merge(cells).schema.simpleString() == cells.schema.simpleString()
 
-def test_publish_version_target_files(spark, tmp_path):
-    """`_publish_version(target_files=...)`: 1 (default) coalesces the
-    bounded store version to a single file; None leaves the caller's
-    partitioning alone (ivfpq_index_compact's file count IS its query
-    result); content is identical either way."""
+
+def test_store_version_file_layout(spark, tmp_path):
+    """`_publish_version` writes the partitioning it is given
+    (ivfpq_index_compact's file count IS its query result);
+    `merge_into_store`, the streaming sinks' step, coalesces each
+    bounded store version to a single file; content is identical
+    either way, and no version carries a `_SUCCESS` marker."""
     import os
 
     from data_engineering_bootcamp_spark.streaming.sinks import (
         _publish_version,
+        merge_into_store,
     )
 
     df = spark.range(100).select(
@@ -520,19 +545,78 @@ def test_publish_version_target_files(spark, tmp_path):
 
     def live_files(store: str) -> list[str]:
         d = os.path.realpath(os.path.join(store, "live"))
+        assert "_SUCCESS" not in os.listdir(d)
         return [n for n in os.listdir(d) if n.endswith(".parquet")]
 
     s1 = str(tmp_path / "s1")
     os.makedirs(s1)
-    _publish_version(s1, 0, df, None)
+    merge_into_store(s1, 0, df)
     assert len(live_files(s1)) == 1
     sn = str(tmp_path / "sn")
     os.makedirs(sn)
-    _publish_version(sn, 0, df, None, target_files=None)
+    _publish_version(sn, 0, df, None)
     assert len(live_files(sn)) == 8
     a = spark.read.parquet(os.path.join(s1, "live"))
     b = spark.read.parquet(os.path.join(sn, "live"))
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
+def test_upsert_sink_runs_one_job_per_trigger(spark, tmp_path):
+    """Behind `dedup_stream` (the benchmarked ingest path) the upsert
+    sink's per-trigger cost is ONE Spark job: the live store is read
+    with the batch's own schema (no inference job) and the batch meets
+    the store in one aggregation. Stateful micro-batches run without
+    AQE, so each exchange stays inside that job. The published version
+    has no `_SUCCESS` marker."""
+    from data_engineering_bootcamp_spark.streaming.pipelines import (
+        dedup_stream,
+    )
+    from data_engineering_bootcamp_spark.streaming.sinks import (
+        drain,
+        upsert_batch_writer,
+    )
+
+    df = spark.createDataFrame(
+        [(i, i % 7, i * 10, f"p{i}") for i in range(60)],
+        "event_id long, user_id long, seq long, val string",
+    ).withColumn("ts", F.timestamp_seconds("seq"))
+    src = str(tmp_path / "src")
+    store = str(tmp_path / "store")
+    os.makedirs(store)
+    df.repartition(3).write.parquet(src)
+    writer = upsert_batch_writer(store, ["user_id"], ["seq", "event_id"])
+    sc = spark.sparkContext
+    groups: list[str] = []
+
+    def sink(batch_df, batch_id: int) -> None:
+        group = f"upsert_posture_{batch_id}"
+        groups.append(group)
+        sc.setJobGroup(group, "upsert sink posture")
+        writer(batch_df, batch_id)
+
+    stream = (
+        spark.readStream.schema(df.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+    drain(
+        dedup_stream(stream, ["event_id"]).writeStream.foreachBatch(sink),
+        str(tmp_path / "ckpt"),
+    )
+    assert len(groups) == 3, groups
+    jobs = {
+        g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups
+    }
+    assert all(jobs[g] == 1 for g in groups[1:]), jobs
+    live_dir = os.path.realpath(os.path.join(store, "live"))
+    assert "_SUCCESS" not in os.listdir(live_dir)
+    got = {
+        tuple(r)
+        for r in spark.read.parquet(live_dir)
+        .select("user_id", "event_id")
+        .collect()
+    }
+    assert got == {(u, 56 + u if u < 4 else 49 + u) for u in range(7)}
 
 
 def test_streaming_bpe_encode_batch_split_independence(spark, tmp_path):
